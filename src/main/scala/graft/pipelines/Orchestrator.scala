@@ -27,8 +27,8 @@ import graft.sources.{ContentTypeCatalog, IdListSource, WpCatalog}
   * `maxDriverManifest` bounds driver-side failure handling: at most that
   * many failed fetches go through the reference-contract collect +
   * single-file wp_failed.json; past it the dead-letter manifest is merged
-  * distributed ([[KeyedJsonSink.mergeSharded]]) with remove-on-success as
-  * an anti-join — no driver materialization at lake scale.
+  * distributed ([[KeyedJsonSink.mergeSharded]]) with remove-on-success
+  * inside the merge — no driver materialization at lake scale.
   */
 final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
                          fetcher: HttpFetchSink.Fetcher,
@@ -149,11 +149,10 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
                 "uid", failedFile, removeKeys = healed)
             } else {
               // lake path: NOTHING materializes on the driver. The failure
-              // manifest lives as sharded keyed JSON; remove-on-success is
-              // an anti-join against the succeeded ids inside the same
-              // distributed merge. The error log carries the aggregate
-              // count — a per-row log line at this scale IS a driver
-              // materialization in disguise.
+              // manifest lives as sharded keyed JSON; remove-on-success
+              // drops the succeeded ids inside the same distributed merge.
+              // The error log carries the aggregate count — a per-row log
+              // line at this scale IS a driver materialization in disguise.
               val succeededIds = results.filter(col("ok"))
                 .select(col("id").cast("string").as("uid"))
               KeyedJsonSink.mergeSharded(

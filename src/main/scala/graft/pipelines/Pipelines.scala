@@ -123,6 +123,8 @@ object Pipelines {
     val opts = cat.table(spark, "options")
       .filter(disc(spark, col("option_name"))
         .isin("permalink_structure", "siteurl"))
+      // by name: WordPress's wp_options starts with option_id
+      .select(col("option_name"), col("option_value"))
       .collect().map { r =>
         val k = if (ciMode(spark)) r.getString(0).toLowerCase else r.getString(0)
         k -> Option(r.getString(1)).getOrElse("")

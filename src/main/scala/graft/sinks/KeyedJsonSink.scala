@@ -7,6 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** S7/S8 — keyed-JSON entry sink: a single JSON object keyed by uid, not
   * an array (reference: authordata[login]={...} then JSON.stringify(x,
@@ -22,8 +23,12 @@ import org.apache.spark.sql.functions._
   *    coercion), and the file is replaced with an atomic temp-file move
   *    so a crash mid-write cannot corrupt existing state.
   *  - [[writeSharded]]: the scale path — entries stay distributed, hashed
-  *    into N shard files of JSON-lines (uid TAB json), mergeable by
-  *    re-sharding on uid. Compaction = groupBy shard with last-wins.
+  *    on uid into shard files of JSON-lines (uid TAB json), mergeable by
+  *    re-sharding on uid. Compaction = groupBy shard with last-wins. The
+  *    shard count follows the state's size ([[shardCount]]: one shard per
+  *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, 1 to
+  *    [[MaxShards]]), because every committed file has a fixed cost that
+  *    a small state should not pay 64 times.
   */
 object KeyedJsonSink {
 
@@ -215,10 +220,36 @@ object KeyedJsonSink {
 
   /** Scale path: distributed JSON-lines shards keyed by uid hash. Merging
     * a delta = union previous shards + delta, last-wins on uid, rewrite
-    * (one shuffle, no driver materialization) — see [[mergeSharded]]. */
+    * (one shuffle, no driver materialization) — see [[mergeSharded]].
+    * `shards` = 0 (the default) sizes the shard count from `entries`
+    * ([[shardCount]]); a positive `shards` is used as given. */
   def writeSharded(entries: DataFrame, uidCol: String, dir: String,
-                   shards: Int = 64): Unit =
-    writeShardFiles(keyed(entries, uidCol), dir, shards)
+                   shards: Int = 0): Unit = {
+    val n = if (shards > 0) shards else shardCount(entries, 0L)
+    writeShardFiles(keyed(entries, uidCol).repartition(n, col("uid")), dir, n)
+  }
+
+  /** Ceiling of the derived shard count, and the count for a delta whose
+    * size Spark cannot estimate. */
+  val MaxShards = 64
+
+  /** Shard count for a state of `existingBytes` on disk plus `delta`:
+    * ceil(bytes / `spark.sql.adaptive.advisoryPartitionSizeInBytes`),
+    * clamped to 1..[[MaxShards]]. The delta's bytes are its optimized
+    * plan's size estimate — the real in-memory size for a cached and
+    * materialized frame, the file size for a file scan. An unknown
+    * estimate (Spark's default-size sentinel) keeps [[MaxShards]]. */
+  private[graft] def shardCount(delta: DataFrame, existingBytes: Long): Int = {
+    val conf = delta.sparkSession.sessionState.conf
+    val deltaBytes = delta.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (deltaBytes >= conf.defaultSizeInBytes) MaxShards
+    else {
+      val target = BigInt(math.max(1L,
+        conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
+      val n = (deltaBytes + existingBytes + target - 1) / target
+      n.max(1).min(MaxShards).toInt
+    }
+  }
 
   /** Sidecar file recording the writer's shard count, so readers
     * ([[graft.sources.KeyedJsonSource]]) can prune shards without
@@ -228,15 +259,19 @@ object KeyedJsonSink {
     * Spark's file listing (and to [[readSharded]]). */
   private[graft] val ShardSidecar = "_graft_shards"
 
-  private def writeShardFiles(keyedDf: DataFrame, dir: String,
+  /** Write (uid, json) rows that are ALREADY hash-partitioned on uid into
+    * `shards` partitions: Spark names each file after its task's
+    * partition, so part-NNNNN holds exactly the uids with
+    * pmod(murmur3(uid), shards) = NNNNN — the layout
+    * [[graft.sources.KeyedJsonSource]] prunes by. */
+  private def writeShardFiles(partitioned: DataFrame, dir: String,
                               shards: Int): Unit = {
-    keyedDf
-      .repartition(shards, col("uid"))
+    partitioned
       .select(concat_ws("\t", col("uid"), col("json")).as("value"))
       .write.mode(SaveMode.Overwrite).text(dir)
     val hPath = new org.apache.hadoop.fs.Path(dir, ShardSidecar)
     val fs = hPath.getFileSystem(
-      keyedDf.sparkSession.sessionState.newHadoopConf())
+      partitioned.sparkSession.sessionState.newHadoopConf())
     val out = fs.create(hPath, true)
     try out.write(shards.toString.getBytes(StandardCharsets.UTF_8))
     finally out.close()
@@ -257,16 +292,22 @@ object KeyedJsonSink {
     * (delta beats existing; within the delta, ties resolve to the
     * lexicographically-greatest rendered json — deterministic, where
     * [[writeSingle]] keeps an arbitrary collected row), drop
-    * `removeKeys` (the remove-on-success contract, as an anti-join
-    * instead of a driver-side Set), and rewrite compacted shards.
-    * One shuffle over existing ∪ delta; nothing materializes on the
-    * driver. The swap is write-to-temp + backup-rename — not atomic
+    * `removeKeys` (the remove-on-success contract, applied in the same
+    * aggregate instead of a driver-side Set), and rewrite every shard.
+    * `shards` = 0 (the default) sizes the count from the existing part
+    * files, the absorbed legacy file and the delta ([[shardCount]]), so a
+    * state written with more shards re-merges into the derived count; a
+    * positive `shards` is used as given.
+    * One shuffle: existing ∪ delta ∪ removed ids are hash-partitioned on
+    * uid to the shard count, and the last-wins aggregate and the file
+    * write reuse that partitioning. Nothing materializes on the driver.
+    * The swap is write-to-temp + backup-rename — not atomic
     * like [[atomicWrite]]'s file move (no Hadoop FS offers an atomic
     * directory swap), so concurrent readers must tolerate a brief
     * absence; every crash window leaves a recoverable copy (`.old` or
     * `.tmp-*`), never zero. */
   def mergeSharded(delta: DataFrame, uidCol: String, dir: String,
-                   shards: Int = 64,
+                   shards: Int = 0,
                    removeKeys: Option[DataFrame] = None,
                    legacyFile: Option[String] = None): Unit = {
     val spark = delta.sparkSession
@@ -279,6 +320,11 @@ object KeyedJsonSink {
     // later .old cleanup would destroy the only backup.
     if (!fs.exists(hPath) && fs.exists(oldPath) && !fs.rename(oldPath, hPath))
       throw new java.io.IOException(s"recovering $oldPath -> $dir failed")
+    val existingParts =
+      if (fs.exists(hPath))
+        fs.listStatus(hPath).filter(_.getPath.getName.startsWith("part-"))
+      else Array.empty[org.apache.hadoop.fs.FileStatus]
+    // src orders the last-wins aggregate: existing 0 < delta 1 < removed 2
     val fresh = keyed(delta, uidCol).withColumn("src", lit(1))
     // a [[writeSingle]]-format file from earlier small-scale runs is
     // absorbed once (its size is bounded by the small-mode contract that
@@ -295,25 +341,32 @@ object KeyedJsonSink {
         import spark.implicits._
         Some(legacy.toDF("uid", "json").withColumn("src", lit(0)))
       }
+    val removed = removeKeys.map { rm =>
+      rm.select(col(rm.columns.head).cast("string").as("uid"),
+        lit(null).cast("string").as("json"), lit(2).as("src"))
+    }
+    val n =
+      if (shards > 0) shards
+      else shardCount(delta, existingParts.map(_.getLen).sum +
+        legacyPath.fold(0L)(Files.size(_)))
     val unioned = (legacyDf.toSeq ++
-      (if (fs.exists(hPath))
-        Seq(readSharded(spark, dir).withColumn("src", lit(0))) else Nil))
+      (if (existingParts.nonEmpty)
+        Seq(readSharded(spark, dir).withColumn("src", lit(0))) else Nil) ++
+      removed.toSeq)
       .foldLeft(fresh)(_ unionByName _)
-    val merged = unioned
+    val kept = unioned
+      .repartition(n, col("uid"))
       .groupBy(col("uid"))
       .agg(max(struct(col("src"), col("json"))).as("w"))
+      .filter(col("w.src") < 2)
       .select(col("uid"), col("w.json").as("json"))
-    val kept = removeKeys.fold(merged) { rm =>
-      merged.join(rm.select(col(rm.columns.head).cast("string").as("uid")),
-        Seq("uid"), "left_anti")
-    }
     // backup-rename swap: the previous state is parked at .old until the
     // new state is in place, so no crash window loses BOTH copies (a
     // crash can leave .old or a .tmp-* behind — recoverable, never
     // empty). Hadoop FS has no atomic directory swap to do better.
     val tmp = new org.apache.hadoop.fs.Path(
       dir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    writeShardFiles(kept, tmp.toString, shards)
+    writeShardFiles(kept, tmp.toString, n)
     fs.delete(oldPath, true)
     val hadPrev = fs.exists(hPath)
     if (hadPrev && !fs.rename(hPath, oldPath))

@@ -129,6 +129,25 @@ class KeyedJsonSourceSpec extends AnyFunSuite {
       s"scan should read only uid: $scanLine")
   }
 
+  test("a small state sized to one shard still serves point lookups") {
+    import spark.implicits._
+    val small = java.nio.file.Files.createTempDirectory("kjsmall").resolve("s").toString
+    KeyedJsonSink.writeSharded((0 until 1000)
+      .map(i => (i.toString, s"name-$i")).toDF("uid", "name"), "uid", small)
+    val parts = new java.io.File(small).listFiles().map(_.getName)
+      .filter(_.startsWith("part-"))
+    assert(parts.length == 1)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(
+      small, KeyedJsonSink.ShardSidecar)) == "1")
+    val v2 = spark.read.format(fmt).option("path", small).load()
+    val one = v2.filter($"uid" === "42")
+    assert(one.rdd.getNumPartitions == 1)
+    assert(one.collect().map(r => r.getString(0) -> r.getString(1)).toSeq ==
+      Seq("42" -> """{"name":"name-42"}"""))
+    assert(v2.filter($"uid".isin("7", "999", "nope")).collect()
+      .map(_.getString(0)).toSet == Set("7", "999"))
+  }
+
   test("malformed lines (no tab, empty uid) are skipped, not fatal") {
     import java.nio.file.{Files, Paths}
     val dir = "/tmp/kjsource_corrupt"

@@ -166,6 +166,143 @@ class SinkHardeningSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(shardDir + ".old")))
   }
 
+  private def partFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+
+  private def sidecar(dir: String): String =
+    Files.readString(Paths.get(dir, KeyedJsonSink.ShardSidecar))
+
+  /** Every line of part-NNNNN must hold a uid with
+    * pmod(murmur3(uid), n) = NNNNN — the layout shard pruning trusts. */
+  private def assertHashLayout(dir: String, n: Int): Unit =
+    partFiles(dir).foreach { f =>
+      val idx = f.getName.drop(5).takeWhile(_.isDigit).toInt
+      assert(idx < n, s"${f.getName} beyond $n shards")
+      Files.readAllLines(f.toPath).forEach { l =>
+        val uid = l.takeWhile(_ != '\t')
+        assert(graft.sources.KeyedJsonSource.shardOf(uid, n) == idx,
+          s"uid $uid in ${f.getName}")
+      }
+    }
+
+  private def shardedKeys(dir: String): Map[String, String] =
+    KeyedJsonSink.readSharded(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+
+  test("mergeSharded sizes a small state to one shard file") {
+    val shardDir = Files.createTempDirectory("shardsmall").resolve("s").toString
+    val base = (1 to 50).map(i => (s"k$i", s"v$i")).toDF("uid", "x")
+    KeyedJsonSink.mergeSharded(base, "uid", shardDir)
+    assert(partFiles(shardDir).length == 1)
+    assert(sidecar(shardDir) == "1")
+    KeyedJsonSink.mergeSharded(Seq(("k7", "V7"), ("n1", "w")).toDF("uid", "x"),
+      "uid", shardDir)
+    assert(partFiles(shardDir).length == 1 && sidecar(shardDir) == "1")
+    val got = shardedKeys(shardDir)
+    assert(got.size == 51 && got("k7") == """{"x":"V7"}""")
+  }
+
+  test("mergeSharded raises the shard count under a small advisory size") {
+    val shardDir = Files.createTempDirectory("shardgrow").resolve("s").toString
+    val base = (1 to 300).map(i => (s"k$i", s"value-$i" * 4)).toDF("uid", "x")
+    KeyedJsonSink.mergeSharded(base, "uid", shardDir)
+    assert(sidecar(shardDir) == "1")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4k")
+    try {
+      KeyedJsonSink.mergeSharded(
+        (290 to 320).map(i => (s"k$i", s"new-$i")).toDF("uid", "x"),
+        "uid", shardDir)
+    } finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    val n = sidecar(shardDir).toInt
+    assert(n > 1 && n < KeyedJsonSink.MaxShards, s"derived $n shards")
+    assert(partFiles(shardDir).length > 1)
+    assertHashLayout(shardDir, n)
+    val got = shardedKeys(shardDir)
+    assert(got.keySet == (1 to 320).map(i => s"k$i").toSet)
+    assert(got("k300") == """{"x":"new-300"}""" &&
+      got("k1") == s"""{"x":"${"value-1" * 4}"}""")
+  }
+
+  test("a 64-shard state re-merges into the derived count with no stale part") {
+    val shardDir = Files.createTempDirectory("shard64").resolve("s").toString
+    val base = (1 to 500).map(i => (s"k$i", s"v$i")).toDF("uid", "x")
+    KeyedJsonSink.writeSharded(base, "uid", shardDir, shards = 64)
+    assert(sidecar(shardDir) == "64" && partFiles(shardDir).length > 32)
+    KeyedJsonSink.mergeSharded(Seq(("k1", "V1"), ("k501", "v501"))
+      .toDF("uid", "x"), "uid", shardDir)
+    assert(sidecar(shardDir) == "1")
+    assert(partFiles(shardDir).map(_.getName.take(10)) == Seq("part-00000"))
+    val got = shardedKeys(shardDir)
+    assert(got.size == 501 && got("k1") == """{"x":"V1"}""")
+    assert(spark.read.text(shardDir).count() == 501)
+  }
+
+  test("a delta of unknown size keeps 64 shards") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val rows = spark.sparkContext.parallelize((1 to 20).map(i => Row(s"k$i", "v")))
+    val delta = spark.createDataFrame(rows, StructType(Seq(
+      StructField("uid", StringType), StructField("x", StringType))))
+    assert(KeyedJsonSink.shardCount(delta, 0L) == KeyedJsonSink.MaxShards)
+    val shardDir = Files.createTempDirectory("shardunknown").resolve("s").toString
+    KeyedJsonSink.mergeSharded(delta, "uid", shardDir)
+    assert(sidecar(shardDir) == "64")
+    assertHashLayout(shardDir, 64)
+    assert(shardedKeys(shardDir).size == 20)
+  }
+
+  test("an explicit shard count is honoured by writeSharded and mergeSharded") {
+    val shardDir = Files.createTempDirectory("shardexplicit").resolve("s").toString
+    KeyedJsonSink.writeSharded(
+      (1 to 100).map(i => (s"k$i", "v")).toDF("uid", "x"), "uid", shardDir,
+      shards = 5)
+    assert(sidecar(shardDir) == "5")
+    assertHashLayout(shardDir, 5)
+    KeyedJsonSink.mergeSharded(Seq(("k101", "v")).toDF("uid", "x"), "uid",
+      shardDir, shards = 7)
+    assert(sidecar(shardDir) == "7")
+    assertHashLayout(shardDir, 7)
+    assert(shardedKeys(shardDir).size == 101)
+  }
+
+  test("mergeSharded shuffles once, removeKeys included") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
+      case qs: QueryStageExec => qs +: nodes(qs.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (nodes(qe.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec]))
+          writes.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val shardDir = Files.createTempDirectory("shardonce").resolve("s").toString
+    KeyedJsonSink.writeSharded(
+      (1 to 100).map(i => (s"k$i", "v")).toDF("uid", "x"), "uid", shardDir)
+    spark.listenerManager.register(listener)
+    try {
+      KeyedJsonSink.mergeSharded(Seq(("k1", "V"), ("n1", "w")).toDF("uid", "x"),
+        "uid", shardDir, removeKeys = Some(Seq("k2", "n1").toDF("uid")))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, s"expected one write, saw ${writes.size}")
+    val plan = writes.peek()
+    val exchanges = nodes(plan).collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.length == 1, plan.toString)
+    val got = shardedKeys(shardDir)
+    assert(got.keySet == (1 to 100).filter(_ != 2).map(i => s"k$i").toSet)
+    assert(got("k1") == """{"x":"V"}""")
+  }
+
   test("HttpFetcher honors the 60s-contract against a live local server") {
     // zero-egress sandbox: a loopback HttpServer stands in for the
     // remote host; the production fetcher's contract (2xx body, non-2xx

@@ -266,6 +266,31 @@ class WpPipelineSpec extends AnyFunSuite {
     assert(byUid("20").getAs[String]("url") == "/?p=20")
   }
 
+  test("posts reads wp_options by column name (WordPress order: option_id first)") {
+    val dir = Files.createTempDirectory("wpoptid").toString
+    for (t <- Seq("wp_users", "wp_usermeta", "wp_terms", "wp_term_taxonomy",
+        "wp_term_relationships", "wp_postmeta", "wp_posts"))
+      spark.read.parquet(s"$fixtureDir/$t.parquet")
+        .write.parquet(s"$dir/$t.parquet")
+    Seq((1L, "siteurl", "https://blog.example.com", "yes"),
+        (2L, "blogname", "Example", "yes"),
+        (3L, "permalink_structure", "/%year%/%monthnum%/%day%/%postname%/", "yes"))
+      .toDF("option_id", "option_name", "option_value", "autoload")
+      .write.parquet(s"$dir/wp_options.parquet")
+    // ParquetCatalog projects WpSchemas' column order; read wp_options as
+    // stored, the way JdbcCatalog returns a table's own column order
+    val parquet = new ParquetCatalog(dir)
+    val storedOrder = new graft.sources.WpCatalog {
+      def table(s: org.apache.spark.sql.SparkSession, name: String) =
+        if (name == "options") s.read.parquet(s"$dir/wp_options.parquet")
+        else parquet.table(s, name)
+    }
+    val byUid = Pipelines.posts(spark, storedOrder)
+      .collect().map(r => r.getAs[String]("uid") -> r).toMap
+    assert(byUid.keySet == Set("16", "18", "20"))
+    assert(byUid("16").getAs[String]("url") == "/2018/12/17/hello-world/")
+  }
+
   test("lake-scale failure manifest: sharded wp_failed, anti-join heal, no collect") {
     val outDir = Files.createTempDirectory("wplake").toString
     FlakyImg6.failing = true
