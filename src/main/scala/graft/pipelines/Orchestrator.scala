@@ -2,7 +2,9 @@ package graft.pipelines
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{HttpFetchSink, JsonLogger, KeyedJsonSink}
@@ -29,6 +31,11 @@ import graft.sources.{ContentTypeCatalog, IdListSource, WpCatalog}
   * single-file wp_failed.json; past it the dead-letter manifest is merged
   * distributed ([[KeyedJsonSink.mergeSharded]]) with remove-on-success
   * inside the merge — no driver materialization at lake scale.
+  *
+  * Each module's pipeline runs once, in [[KeyedJsonSink.materialize]]: the
+  * count that picks the sink path, the shard sizing and every file read
+  * that one local checkpoint, whose blocks are released (like the fetch
+  * results') before the module returns.
   */
 final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
                          fetcher: HttpFetchSink.Fetcher,
@@ -76,137 +83,112 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
+  /** Write one module's entries, log its `Exported` line (merged count,
+    * `fields`, observed bytes, path taken, shard count), return the merged
+    * count. The single pretty-printed file (reference contract) is a driver
+    * materialization bounded by maxDriverManifest; past it, or once sharded
+    * state exists, entries merge as sharded keyed JSON, and the sharded
+    * `manifest` follows the MERGED entry state, so uids absorbed from an
+    * earlier small-mode file are never lost. */
+  private def export(module: String, entries: DataFrame, single: String,
+                     shardedDir: String, manifest: Option[String], logger: JsonLogger,
+                     fields: ListMap[String, Any] = ListMap.empty): Long = {
+    val m = KeyedJsonSink.materialize(entries, "uid")
+    val (n, path, shards) = try {
+      if (m.count <= maxDriverManifest && !shardedExists(shardedDir))
+        (KeyedJsonSink.writeSingle(m, single, manifest), "single", 0)
+      else {
+        val merged = KeyedJsonSink.mergeSharded(m, shardedDir, 0, None, Some(single))
+        manifest.foreach { file =>
+          KeyedJsonSink.mergeSharded(KeyedJsonSink.readSharded(spark, shardedDir)
+            .select(col("uid"), lit("en-us").as("locale")),
+            "uid", file.stripSuffix(".json") + "-sharded")
+          Files.deleteIfExists(Paths.get(file))
+        }
+        (merged.rows, "sharded", merged.shards)
+      }
+    } finally m.release()
+    logger.log(s"Exported $module", ListMap("entries" -> n) ++ fields ++
+      ListMap("bytes" -> m.bytes, "path" -> path, "shards" -> shards))
+    n
+  }
+
   /** Run one module end-to-end: entries → keyed-JSON sink + master
     * manifest (+ asset fetch & dead-letter for assets). Returns entry
     * count. */
   def runModule(module: String, idFile: Option[String] = None): Long = {
     val logger = new JsonLogger(s"$outDir/logs", module)
-    val df = restrict(conform(entries(module), module), module, idFile).cache()
+    val df = restrict(conform(entries(module), module), module, idFile)
+    if (module == "assets") exportAssets(df, logger)
+    else export(module, df, s"$outDir/entries/$module/en-us.json",
+      s"$outDir/entries/$module/sharded",
+      Some(s"$outDir/master/entries/$module.json"), logger)
+  }
+
+  private def exportAssets(df: DataFrame, logger: JsonLogger): Long = {
+    // localCheckpoint (eager) materializes the fetch results ONCE and
+    // truncates lineage: the downstream actions (ok-join, succeeded set,
+    // failure log, dead-letter merge) can never re-execute the
+    // side-effecting fetcher — a cache() could, if partitions were
+    // evicted, re-hitting every failed URL per action and desyncing the
+    // success/failure views. The failure count is observed on that job.
+    val fetched = Observation()
+    val results = HttpFetchSink.fetch(df, "uid", "url", s"$outDir/assets", fetcher)
+      .observe(fetched, count_if(!col("ok")).as("failed")).localCheckpoint(true)
     try {
-      module match {
-        case "assets" =>
-          // localCheckpoint (eager) materializes the fetch results ONCE
-          // and truncates lineage: the downstream actions (ok-join,
-          // succeeded set, failure log, dead-letter merge) can never
-          // re-execute the side-effecting fetcher — a cache() could, if
-          // partitions were evicted, re-hitting every failed URL per
-          // action and desyncing the success/failure views.
-          val results = HttpFetchSink.fetch(df, "uid", "url",
-            s"$outDir/assets", fetcher).localCheckpoint(true)
-          try {
-            val okAssets = df.join(
-              results.filter(col("ok")).select(col("id").cast("string").as("uid")),
-              "uid", "left_semi")
-            val okCount = results.filter(col("ok")).count()
-            val failed = results.filter(!col("ok")).count()
-            // the ok-asset entries file is a driver materialization too:
-            // same scale split as every other entries sink.
-            val assetsShardedDir = s"$outDir/assets/sharded"
-            val n =
-              if (okCount <= maxDriverManifest && !shardedExists(assetsShardedDir))
-                KeyedJsonSink.writeSingle(okAssets, "uid",
-                  s"$outDir/assets/assets.json")
-              else {
-                KeyedJsonSink.mergeSharded(okAssets, "uid", assetsShardedDir,
-                  legacyFile = Some(s"$outDir/assets/assets.json"))
-                KeyedJsonSink.readSharded(spark, assetsShardedDir).count()
-              }
-            val shardedDir = s"$outDir/master/wp_failed"
-            val shardedState = shardedExists(shardedDir)
-            // remove-on-success (reference assets.js:135-137): an id that
-            // fetched OK this run — fresh or idempotent-skip — must drop
-            // out of any stale wp_failed state before the new failures
-            // merge in. Once the manifest has gone sharded it stays
-            // sharded (healed ids must anti-join out of the shard state
-            // even on a run with few fresh failures).
-            if (failed <= maxDriverManifest && !shardedState) {
-              // reference-contract path: the single pretty-printed
-              // wp_failed.json and a per-asset error log line. Only ids
-              // ALREADY IN the prior manifest need the remove-on-success
-              // set — collecting every succeeded id would materialize
-              // the whole (possibly huge) corpus on the driver to heal a
-              // manifest bounded at maxDriverManifest keys.
-              val failedFile = s"$outDir/master/wp_failed.json"
-              val priorFailed: Set[String] =
-                if (Files.exists(Paths.get(failedFile)))
-                  KeyedJsonSink.topLevelEntries(new String(
-                    Files.readAllBytes(Paths.get(failedFile)), "UTF-8"))
-                    .map(_._1).toSet
-                else Set.empty
-              val healed: Set[String] =
-                if (priorFailed.isEmpty) Set.empty
-                else results.filter(col("ok") &&
-                    col("id").cast("string").isin(priorFailed.toSeq: _*))
-                  .select(col("id").cast("string"))
-                  .collect().map(_.getString(0)).toSet
-              val failures = HttpFetchSink.deadLetter(results)
-                .select(col("id"), col("url"), col("error")).collect()
-              failures.foreach(r => logger.error("Failed to download asset",
-                Map("id" -> r.getLong(0), "url" -> r.getString(1),
-                  "error" -> r.getString(2))))
-              KeyedJsonSink.writeSingle(
-                HttpFetchSink.deadLetter(results).withColumn("uid", col("id")),
-                "uid", failedFile, removeKeys = healed)
-            } else {
-              // lake path: NOTHING materializes on the driver. The failure
-              // manifest lives as sharded keyed JSON; remove-on-success
-              // drops the succeeded ids inside the same distributed merge.
-              // The error log carries the aggregate count — a per-row log
-              // line at this scale IS a driver materialization in disguise.
-              val succeededIds = results.filter(col("ok"))
-                .select(col("id").cast("string").as("uid"))
-              KeyedJsonSink.mergeSharded(
-                HttpFetchSink.deadLetter(results).withColumn("uid", col("id")),
-                "uid", shardedDir,
-                removeKeys = Some(succeededIds),
-                legacyFile = Some(s"$outDir/master/wp_failed.json"))
-              if (failed > 0)
-                logger.error("Failed to download assets",
-                  Map("failed" -> failed, "manifest" -> shardedDir))
-            }
-            logger.log(s"Exported assets", Map("entries" -> n,
-              "failed" -> failed))
-            n
-          } finally { results.unpersist(); () }
-        case m =>
-          // same scale split as the failure manifest: the single
-          // pretty-printed import file (reference contract) is a driver
-          // materialization, bounded by maxDriverManifest; past it (or
-          // once sharded state exists) entries and the locale manifest
-          // merge distributed as sharded keyed JSON.
-          val entryCount = df.count()
-          val shardedDir = s"$outDir/entries/$m/sharded"
-          val n =
-            if (entryCount <= maxDriverManifest && !shardedExists(shardedDir)) {
-              val merged = KeyedJsonSink.writeSingle(df, "uid",
-                s"$outDir/entries/$m/en-us.json")
-              KeyedJsonSink.writeMasterManifest(df, "uid",
-                s"$outDir/master/entries/$m.json")
-              merged
-            } else {
-              KeyedJsonSink.mergeSharded(df, "uid", shardedDir,
-                legacyFile = Some(s"$outDir/entries/$m/en-us.json"))
-              // the sharded master manifest derives from the MERGED
-              // entry state, so uids written by earlier small-mode runs
-              // (absorbed via legacyFile) are never lost across the
-              // mode transition; the superseded single master file is
-              // removed. (Single-mode master stays a current-run
-              // snapshot — reference parity; sharded master tracks the
-              // merged entry set, which is what a lake-scale consumer
-              // needs.)
-              val mergedEntries = KeyedJsonSink.readSharded(spark, shardedDir)
-              KeyedJsonSink.mergeSharded(
-                mergedEntries.select(col("uid"), lit("en-us").as("locale")),
-                "uid", s"$outDir/master/entries/$m-sharded")
-              Files.deleteIfExists(Paths.get(s"$outDir/master/entries/$m.json"))
-              // parity with writeSingle's return contract: the MERGED
-              // entry count (one shard line per key after compaction)
-              KeyedJsonSink.readSharded(spark, shardedDir).count()
-            }
-          logger.log(s"Exported $m", Map("entries" -> n))
-          n
+      val failed = fetched.get("failed").asInstanceOf[Long]
+      val okIds = results.filter(col("ok")).select(col("id").cast("string").as("uid"))
+      val shardedDir = s"$outDir/master/wp_failed"
+      // remove-on-success (reference assets.js:135-137): an id that
+      // fetched OK this run — fresh or idempotent-skip — must drop out of
+      // any stale wp_failed state before the new failures merge in. Once
+      // the manifest has gone sharded it stays sharded (healed ids must
+      // anti-join out of the shard state even on a run with few fresh
+      // failures).
+      if (failed <= maxDriverManifest && !shardedExists(shardedDir)) {
+        // reference-contract path: the single pretty-printed
+        // wp_failed.json and a per-asset error log line. Only ids ALREADY
+        // IN the prior manifest need the remove-on-success set —
+        // collecting every succeeded id would materialize the whole
+        // (possibly huge) corpus on the driver to heal a manifest bounded
+        // at maxDriverManifest keys.
+        val failedFile = s"$outDir/master/wp_failed.json"
+        val priorFailed: Set[String] =
+          if (Files.exists(Paths.get(failedFile)))
+            KeyedJsonSink.topLevelEntries(new String(
+              Files.readAllBytes(Paths.get(failedFile)), "UTF-8")).map(_._1).toSet
+          else Set.empty
+        val healed: Set[String] =
+          if (priorFailed.isEmpty) Set.empty
+          else results.filter(col("ok") &&
+              col("id").cast("string").isin(priorFailed.toSeq: _*))
+            .select(col("id").cast("string")).collect().map(_.getString(0)).toSet
+        HttpFetchSink.deadLetter(results).collect().foreach(r =>
+          logger.error("Failed to download asset", Map("id" -> r.getLong(0),
+            "url" -> r.getString(1), "error" -> r.getString(2))))
+        KeyedJsonSink.writeSingle(
+          HttpFetchSink.deadLetter(results).withColumn("uid", col("id")),
+          "uid", failedFile, removeKeys = healed)
+      } else {
+        // lake path: NOTHING materializes on the driver. The failure
+        // manifest lives as sharded keyed JSON; remove-on-success drops
+        // the succeeded ids inside the same distributed merge. The error
+        // log carries the aggregate count — a per-row log line at this
+        // scale IS a driver materialization in disguise.
+        KeyedJsonSink.mergeSharded(
+          HttpFetchSink.deadLetter(results).withColumn("uid", col("id")),
+          "uid", shardedDir, removeKeys = Some(okIds),
+          legacyFile = Some(s"$outDir/master/wp_failed.json"))
+        if (failed > 0)
+          logger.error("Failed to download assets",
+            Map("failed" -> failed, "manifest" -> shardedDir))
       }
-    } finally { df.unpersist(); () }
+      // the ok-asset entries file is a driver materialization too: same
+      // scale split as every other entries sink.
+      export("assets", df.join(okIds, "uid", "left_semi"),
+        s"$outDir/assets/assets.json", s"$outDir/assets/sharded", None, logger,
+        ListMap("failed" -> failed))
+    } finally KeyedJsonSink.release(results)
   }
 
   /** Entry point 1: all modules in reference order (app.js:9,39). */

@@ -95,19 +95,6 @@ object Pipelines {
         col("slug").as("uid"))
   }
 
-  /** Featured-image map (reference: assets.js:49-65, persisted as
-    * _featured.json and joined by posts): post ID → thumbnail meta. */
-  def featuredImages(spark: SparkSession, cat: WpCatalog): DataFrame = {
-    val posts = cat.table(spark, "posts")
-      .filter(disc(spark, col("post_type")) === "post" &&
-        disc(spark, col("post_status")) === "publish")
-    val thumb = cat.table(spark, "postmeta")
-      .filter(disc(spark, col("meta_key")) === "_thumbnail_id")
-    posts.join(thumb, posts("ID") === thumb("post_id"))
-      .select(col("ID").as("post_id"),
-        col("meta_value").cast("long").as("thumbnail_id"))
-  }
-
   /** Posts (reference: posts.js:24-163): published posts only (P5), left
     * join to authors (J3, null-safe), decorrelated category-list agg
     * (J5/A2 as sorted ArrayType — no pack/unpack round-trip), permalink
@@ -140,7 +127,11 @@ object Pipelines {
       .groupBy(col("object_id"))
       .agg(sort_array(collect_list(col("slug"))).as("category"))
 
-    val featured = featuredImages(spark, cat)
+    // J8: the _thumbnail_id rows (assets.js:49-65, the reference's
+    // _featured.json) join the filtered posts; wp_posts is scanned once
+    val featured = cat.table(spark, "postmeta")
+      .filter(disc(spark, col("meta_key")) === "_thumbnail_id")
+      .select(col("post_id"), col("meta_value").cast("long").as("thumbnail_id"))
 
     val url: Column =
       if (structure.nonEmpty)

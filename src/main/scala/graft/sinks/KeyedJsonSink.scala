@@ -5,9 +5,11 @@ import java.nio.file.{AtomicMoveNotSupportedException, Files, Path, Paths, Stand
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.unsafe.types.UTF8String
 
 /** S7/S8 — keyed-JSON entry sink: a single JSON object keyed by uid, not
   * an array (reference: authordata[login]={...} then JSON.stringify(x,
@@ -29,6 +31,9 @@ import org.apache.spark.sql.internal.SQLConf
   *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, 1 to
   *    [[MaxShards]]), because every committed file has a fixed cost that
   *    a small state should not pay 64 times.
+  *
+  * A module's output runs once, in [[materialize]]: both modes, the master
+  * manifest and the shard sizing read that one observed checkpoint.
   */
 object KeyedJsonSink {
 
@@ -39,6 +44,31 @@ object KeyedJsonSink {
     df.select(col(uidCol).cast("string").as("uid"),
       to_json(struct(valueCols.toIndexedSeq: _*)).as("json"))
   }
+
+  /** A module's (uid, json) rows in an eager local checkpoint, with the
+    * row count and JSON-lines bytes (uid TAB json NEWLINE) observed by the
+    * one job that built it ([[materialize]]). */
+  final case class Materialized(rows: DataFrame, count: Long, bytes: Long) {
+    def release(): Unit = KeyedJsonSink.release(rows)
+  }
+
+  /** Render `entries` with [[keyed]] and run the plan once. Unlike
+    * `cache()`, the checkpoint's final stage is coalesced by AQE (one
+    * partition for a small module), and its cut lineage means no later
+    * action re-runs the pipeline. */
+  def materialize(entries: DataFrame, uidCol: String): Materialized = {
+    val seen = Observation()
+    val rows = keyed(entries, uidCol).observe(seen, count(lit(1)).as("rows"),
+      coalesce(sum(octet_length(col("uid")) + octet_length(col("json")) + 2),
+        lit(0L)).as("bytes")).localCheckpoint(eager = true)
+    Materialized(rows, seen.get("rows").asInstanceOf[Long], seen.get("bytes").asInstanceOf[Long])
+  }
+
+  /** Drop a local checkpoint's blocks: `Dataset.unpersist` only drops
+    * cache-manager entries, leaving them resident until GC. */
+  def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .foreach(org.apache.spark.graft.CheckpointRelease.release)
 
   /** Pretty-print a JSON object string with 4-space indent, matching the
     * reference's JSON.stringify(x, null, 4). Minimal, deterministic. */
@@ -194,10 +224,25 @@ object KeyedJsonSink {
     * return the merged row count. Driver-side by design — see class
     * doc. Entries absent from the delta keep their raw JSON text. */
   def writeSingle(entries: DataFrame, uidCol: String, path: String,
-                  prettyPrint: Boolean = true,
-                  removeKeys: Set[String] = Set.empty): Long = {
+                  removeKeys: Set[String] = Set.empty): Long =
+    writeRows(keyed(entries, uidCol).collect(), path, removeKeys)
+
+  /** [[writeSingle]] of materialized rows. The same collect writes the
+    * master manifest (S8) {"en-us": {uid: ""}} (reference:
+    * authors.js:34,52) in Spark's string order (UTF-8 bytes), not Java's. */
+  def writeSingle(entries: Materialized, path: String,
+                  manifest: Option[String]): Long = {
+    val rows = entries.rows.collect()
+    val n = writeRows(rows, path, Set.empty)
+    manifest.foreach(p => atomicWrite(Paths.get(p), pretty(rows.map(_.getString(0))
+      .sortBy(UTF8String.fromString).map(escapeKey(_) + ": \"\"")
+      .mkString("{\"en-us\": {", ", ", "}}"))))
+    n
+  }
+
+  private def writeRows(rows: Array[Row], path: String, removeKeys: Set[String]): Long = {
     val fresh: Seq[(String, String)] =
-      keyed(entries, uidCol).collect().map(r => r.getString(0) -> r.getString(1))
+      rows.map(r => r.getString(0) -> r.getString(1))
         .toMap.toSeq // dedup within the delta: last collected row wins
     val freshKeys = fresh.map(_._1).toSet
     val p = Paths.get(path)
@@ -214,42 +259,37 @@ object KeyedJsonSink {
     val body = merged
       .map { case (k, v) => escapeKey(k) + ": " + v }
       .mkString("{", ", ", "}")
-    atomicWrite(p, if (prettyPrint) pretty(body) else body)
+    atomicWrite(p, pretty(body))
     merged.length.toLong
   }
 
   /** Scale path: distributed JSON-lines shards keyed by uid hash. Merging
     * a delta = union previous shards + delta, last-wins on uid, rewrite
     * (one shuffle, no driver materialization) — see [[mergeSharded]].
-    * `shards` = 0 (the default) sizes the shard count from `entries`
-    * ([[shardCount]]); a positive `shards` is used as given. */
+    * `shards` = 0 (the default) sizes the count from the observed bytes of
+    * `entries` ([[shardCount]]); a positive `shards` is used as given. */
   def writeSharded(entries: DataFrame, uidCol: String, dir: String,
                    shards: Int = 0): Unit = {
-    val n = if (shards > 0) shards else shardCount(entries, 0L)
-    writeShardFiles(keyed(entries, uidCol).repartition(n, col("uid")), dir, n)
+    val m = materialize(entries, uidCol)
+    val n = if (shards > 0) shards else shardCount(m.rows.sparkSession, m.bytes)
+    try writeShardFiles(m.rows.repartition(n, col("uid")), dir, n)
+    finally m.release()
   }
 
-  /** Ceiling of the derived shard count, and the count for a delta whose
-    * size Spark cannot estimate. */
+  /** Ceiling of the derived shard count. */
   val MaxShards = 64
 
-  /** Shard count for a state of `existingBytes` on disk plus `delta`:
+  /** Shard count for a state of `bytes` JSON-lines bytes:
     * ceil(bytes / `spark.sql.adaptive.advisoryPartitionSizeInBytes`),
-    * clamped to 1..[[MaxShards]]. The delta's bytes are its optimized
-    * plan's size estimate — the real in-memory size for a cached and
-    * materialized frame, the file size for a file scan. An unknown
-    * estimate (Spark's default-size sentinel) keeps [[MaxShards]]. */
-  private[graft] def shardCount(delta: DataFrame, existingBytes: Long): Int = {
-    val conf = delta.sparkSession.sessionState.conf
-    val deltaBytes = delta.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (deltaBytes >= conf.defaultSizeInBytes) MaxShards
-    else {
-      val target = BigInt(math.max(1L,
-        conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
-      val n = (deltaBytes + existingBytes + target - 1) / target
-      n.max(1).min(MaxShards).toInt
-    }
+    * clamped to 1..[[MaxShards]]. */
+  private[graft] def shardCount(spark: SparkSession, bytes: Long): Int = {
+    val target = math.max(1L,
+      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    ((bytes - 1) / target + 1).max(1L).min(MaxShards.toLong).toInt
   }
+
+  /** A sharded write's row count (observed on the write) and shard count. */
+  final case class Sharded(rows: Long, shards: Int)
 
   /** Sidecar file recording the writer's shard count, so readers
     * ([[graft.sources.KeyedJsonSource]]) can prune shards without
@@ -263,11 +303,14 @@ object KeyedJsonSink {
     * `shards` partitions: Spark names each file after its task's
     * partition, so part-NNNNN holds exactly the uids with
     * pmod(murmur3(uid), shards) = NNNNN — the layout
-    * [[graft.sources.KeyedJsonSource]] prunes by. */
+    * [[graft.sources.KeyedJsonSource]] prunes by. Returns the number of
+    * lines written, observed on the write itself. */
   private def writeShardFiles(partitioned: DataFrame, dir: String,
-                              shards: Int): Unit = {
+                              shards: Int): Sharded = {
+    val written = Observation()
     partitioned
       .select(concat_ws("\t", col("uid"), col("json")).as("value"))
+      .observe(written, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).text(dir)
     val hPath = new org.apache.hadoop.fs.Path(dir, ShardSidecar)
     val fs = hPath.getFileSystem(
@@ -275,14 +318,14 @@ object KeyedJsonSink {
     val out = fs.create(hPath, true)
     try out.write(shards.toString.getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    Sharded(written.get("rows").asInstanceOf[Long], shards)
   }
 
   /** Read a sharded dir back as (uid, json) rows. `to_json` escapes tabs
     * and newlines inside values, so the FIRST tab of each line is the
     * separator (uids themselves must not contain tabs — they are ids,
     * logins and slugs in every pipeline). */
-  def readSharded(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): DataFrame =
+  def readSharded(spark: SparkSession, dir: String): DataFrame =
     spark.read.text(dir).select(
       substring_index(col("value"), "\t", 1).as("uid"),
       expr("substring(value, instr(value, '\t') + 1)").as("json"))
@@ -294,10 +337,11 @@ object KeyedJsonSink {
     * [[writeSingle]] keeps an arbitrary collected row), drop
     * `removeKeys` (the remove-on-success contract, applied in the same
     * aggregate instead of a driver-side Set), and rewrite every shard.
-    * `shards` = 0 (the default) sizes the count from the existing part
-    * files, the absorbed legacy file and the delta ([[shardCount]]), so a
-    * state written with more shards re-merges into the derived count; a
-    * positive `shards` is used as given.
+    * Returns the merged state's row and shard counts.
+    * `shards` = 0 (the default) sizes the count ([[shardCount]]) from the
+    * delta's observed bytes plus the existing part files and the absorbed
+    * legacy file, so a state written with more shards re-merges into the
+    * derived count; a positive `shards` is used as given.
     * One shuffle: existing ∪ delta ∪ removed ids are hash-partitioned on
     * uid to the shard count, and the last-wins aggregate and the file
     * write reuse that partitioning. Nothing materializes on the driver.
@@ -309,8 +353,17 @@ object KeyedJsonSink {
   def mergeSharded(delta: DataFrame, uidCol: String, dir: String,
                    shards: Int = 0,
                    removeKeys: Option[DataFrame] = None,
-                   legacyFile: Option[String] = None): Unit = {
-    val spark = delta.sparkSession
+                   legacyFile: Option[String] = None): Sharded = {
+    val m = materialize(delta, uidCol)
+    try mergeSharded(m, dir, shards, removeKeys, legacyFile)
+    finally m.release()
+  }
+
+  /** [[mergeSharded]] of an already materialized delta. */
+  def mergeSharded(delta: Materialized, dir: String, shards: Int,
+                   removeKeys: Option[DataFrame],
+                   legacyFile: Option[String]): Sharded = {
+    val spark = delta.rows.sparkSession
     val hPath = new org.apache.hadoop.fs.Path(dir)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val oldPath = new org.apache.hadoop.fs.Path(dir + ".old")
@@ -325,7 +378,7 @@ object KeyedJsonSink {
         fs.listStatus(hPath).filter(_.getPath.getName.startsWith("part-"))
       else Array.empty[org.apache.hadoop.fs.FileStatus]
     // src orders the last-wins aggregate: existing 0 < delta 1 < removed 2
-    val fresh = keyed(delta, uidCol).withColumn("src", lit(1))
+    val fresh = delta.rows.withColumn("src", lit(1))
     // a [[writeSingle]]-format file from earlier small-scale runs is
     // absorbed once (its size is bounded by the small-mode contract that
     // wrote it) and deleted after a successful merge, so crossing the
@@ -347,7 +400,7 @@ object KeyedJsonSink {
     }
     val n =
       if (shards > 0) shards
-      else shardCount(delta, existingParts.map(_.getLen).sum +
+      else shardCount(spark, delta.bytes + existingParts.map(_.getLen).sum +
         legacyPath.fold(0L)(Files.size(_)))
     val unioned = (legacyDf.toSeq ++
       (if (existingParts.nonEmpty)
@@ -366,7 +419,7 @@ object KeyedJsonSink {
     // empty). Hadoop FS has no atomic directory swap to do better.
     val tmp = new org.apache.hadoop.fs.Path(
       dir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    writeShardFiles(kept, tmp.toString, n)
+    val written = writeShardFiles(kept, tmp.toString, n)
     fs.delete(oldPath, true)
     val hadPrev = fs.exists(hPath)
     if (hadPrev && !fs.rename(hPath, oldPath))
@@ -375,17 +428,6 @@ object KeyedJsonSink {
       throw new java.io.IOException(s"rename $tmp -> $dir failed")
     if (hadPrev) fs.delete(oldPath, true)
     legacyPath.foreach(Files.delete(_))
-  }
-
-  /** Master-manifest sink (S8): {"en-us": {uid: ""}} locale map
-    * (reference: authors.js:34,52). */
-  def writeMasterManifest(entries: DataFrame, uidCol: String, path: String,
-                          locale: String = "en-us"): Long = {
-    val uids = entries.select(col(uidCol).cast("string").as("uid"))
-      .orderBy("uid").collect().map(_.getString(0))
-    val inner = uids.map(u => escapeKey(u) + ": \"\"").mkString("{", ", ", "}")
-    val out = pretty(s"""{"$locale": $inner}""")
-    atomicWrite(Paths.get(path), out)
-    uids.length.toLong
+    written
   }
 }

@@ -12,10 +12,8 @@ import org.apache.spark.sql.types._
 /** Target schemas COMPILED from contenttypes JSON config instead of
   * hand-transcribed case classes (reference: contenttypes/{authors,
   * categories,posts}.json field definitions; __priority.json import
-  * order). The hand-written [[ContentTypes]] entry classes remain the
-  * typed Dataset surface; this catalog is the config-driven source of
-  * truth the orchestrator uses for module ordering and output-column
-  * conformance.
+  * order): the config-driven source of truth the orchestrator uses for
+  * module ordering and output-column conformance.
   */
 final case class FieldDef(uid: String, dataType: String, multiple: Boolean,
                           mandatory: Boolean, unique: Boolean)

@@ -66,25 +66,3 @@ object WpSchemas {
     "term_taxonomy" -> termTaxonomy, "term_relationships" -> termRelationships,
     "posts" -> posts, "postmeta" -> postmeta, "options" -> options)
 }
-
-/** Target entry shapes compiled from the reference's contenttypes JSON
-  * (contenttypes/{authors,categories,posts}.json; SURVEY.md §1.2). */
-object ContentTypes {
-  final case class AuthorEntry(ID: Long, title: String, url: String,
-      email: String, first_name: String, last_name: String,
-      biographical_info: String, uid: String)
-
-  final case class CategoryEntry(id: Long, title: String, url: String,
-      description: String, parent: Seq[String], uid: String)
-
-  final case class PostEntry(uid: String, title: String, url: String,
-      author: Seq[String], date: String, guid: String,
-      full_description: String, category: Seq[String],
-      featured_image: String)
-
-  final case class AssetRecord(uid: String, filename: String, url: String,
-      status: Boolean)
-
-  /** Import order (reference: contenttypes/__priority.json). */
-  val priority: Seq[String] = Seq("authors", "categories", "posts")
-}

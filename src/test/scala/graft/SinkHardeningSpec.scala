@@ -238,18 +238,87 @@ class SinkHardeningSpec extends AnyFunSuite {
     assert(spark.read.text(shardDir).count() == 501)
   }
 
-  test("a delta of unknown size keeps 64 shards") {
+  test("an RDD-backed delta is sized from its observed bytes") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    // an RDD has no size estimate; the shard count reads the bytes the
+    // materialization observed instead
     val rows = spark.sparkContext.parallelize((1 to 20).map(i => Row(s"k$i", "v")))
     val delta = spark.createDataFrame(rows, StructType(Seq(
       StructField("uid", StringType), StructField("x", StringType))))
-    assert(KeyedJsonSink.shardCount(delta, 0L) == KeyedJsonSink.MaxShards)
-    val shardDir = Files.createTempDirectory("shardunknown").resolve("s").toString
+    val bytes = (1 to 20).map(i => s"k$i".length + """{"x":"v"}""".length + 2).sum
+    val m = KeyedJsonSink.materialize(delta, "uid")
+    try assert(m.count == 20 && m.bytes == bytes) finally m.release()
+    val shardDir = Files.createTempDirectory("shardrdd").resolve("s").toString
     KeyedJsonSink.mergeSharded(delta, "uid", shardDir)
-    assert(sidecar(shardDir) == "64")
-    assertHashLayout(shardDir, 64)
-    assert(shardedKeys(shardDir).size == 20)
+    assert(sidecar(shardDir) == "1")
+    val grown = Files.createTempDirectory("shardrdd").resolve("s").toString
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64b")
+    try KeyedJsonSink.mergeSharded(delta, "uid", grown)
+    finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    assert(sidecar(grown) == ((bytes + 63) / 64).toString)
+    assertHashLayout(grown, (bytes + 63) / 64)
+    assert(shardedKeys(grown).size == 20)
+  }
+
+  test("observed bytes equal the part file of a one-shard state") {
+    val shardDir = Files.createTempDirectory("shardbytes").resolve("s").toString
+    val m = KeyedJsonSink.materialize(
+      (1 to 30).map(i => (s"k$i", s"é-$i", i)).toDF("uid", "x", "n"), "uid")
+    try {
+      assert(KeyedJsonSink.mergeSharded(m, shardDir, 0, None, None) ==
+        KeyedJsonSink.Sharded(30, 1))
+      assert(partFiles(shardDir).map(_.length).sum == m.bytes)
+    } finally m.release()
+    // an empty module still reports its observations
+    for (empty <- Seq(Seq.empty[(String, String)].toDF("uid", "x"),
+        (1 to 5).map(i => (s"k$i", "v")).toDF("uid", "x").filter("uid = ''"))) {
+      val e = KeyedJsonSink.materialize(empty, "uid")
+      try assert(e.count == 0 && e.bytes == 0) finally e.release()
+    }
+  }
+
+  test("mergeSharded returns the merged count: removeKeys, legacy file, duplicate uids") {
+    val dir = Files.createTempDirectory("shardcount")
+    val shardDir = dir.resolve("s").toString
+    val legacy = dir.resolve("legacy.json").toString
+    Files.write(Paths.get(legacy),
+      """{"old1": {"x": "a"}, "k1": {"x": "b"}}""".getBytes(StandardCharsets.UTF_8))
+    def merged(delta: org.apache.spark.sql.DataFrame,
+               rm: Option[org.apache.spark.sql.DataFrame] = None,
+               legacyFile: Option[String] = None): Unit = {
+      val got = KeyedJsonSink.mergeSharded(delta, "uid", shardDir,
+        removeKeys = rm, legacyFile = legacyFile)
+      assert(got.rows == KeyedJsonSink.readSharded(spark, shardDir).count())
+    }
+    // legacy absorption: old1 joins, k1 is overwritten by the delta
+    merged((1 to 10).map(i => (s"k$i", "v")).toDF("uid", "x"),
+      legacyFile = Some(legacy))
+    assert(shardedKeys(shardDir).size == 11 && !Files.exists(Paths.get(legacy)))
+    // removeKeys: one existing and one new id dropped
+    merged(Seq(("k11", "v"), ("k12", "v")).toDF("uid", "x"),
+      rm = Some(Seq("k2", "k12").toDF("uid")))
+    assert(shardedKeys(shardDir).size == 11)
+    // duplicate uids in the delta collapse to one line each
+    merged(Seq(("k3", "a"), ("k3", "b"), ("n1", "c"), ("n1", "d")).toDF("uid", "x"))
+    assert(shardedKeys(shardDir).size == 12)
+  }
+
+  test("the single-file master manifest keeps Spark's UTF-8 uid order") {
+    // Java orders U+FFFD after a surrogate pair, UTF-8 bytes before it
+    val uids = Seq("\uD83D\uDE00", "\uFFFD", "b", "A", "\u00e9")
+    val df = uids.map(u => (u, 1)).toDF("uid", "n")
+    // what writeMasterManifest wrote: Spark's orderBy over the uids
+    val sparkOrder = df.select("uid").orderBy("uid").collect().map(_.getString(0))
+    assert(sparkOrder.toSeq != uids.sorted)
+    val want = KeyedJsonSink.pretty("""{"en-us": """ +
+      sparkOrder.map(u => "\"" + u + "\": \"\"").mkString("{", ", ", "}") + "}")
+    val dir = Files.createTempDirectory("manifest")
+    val manifest = dir.resolve("master.json")
+    val m = KeyedJsonSink.materialize(df, "uid")
+    try assert(KeyedJsonSink.writeSingle(m, dir.resolve("en-us.json").toString,
+      Some(manifest.toString)) == 5) finally m.release()
+    assert(Files.readAllBytes(manifest).sameElements(want.getBytes(StandardCharsets.UTF_8)))
   }
 
   test("an explicit shard count is honoured by writeSharded and mergeSharded") {

@@ -118,14 +118,18 @@ class WpPipelineSpec extends AnyFunSuite {
     Seq((16L, "_Thumbnail_Id", "5"), (17L, "_thumbnail_id", "7"))
       .toDF("post_id", "meta_key", "meta_value")
       .write.parquet(s"$dir/wp_postmeta.parquet")
+    for (t <- Seq("wp_terms", "wp_term_taxonomy", "wp_term_relationships",
+        "wp_options"))
+      spark.read.parquet(s"$fixtureDir/$t.parquet").write.parquet(s"$dir/$t.parquet")
     val ciCat = new ParquetCatalog(dir)
+    def featured(): Map[String, String] = Pipelines.posts(spark, ciCat)
+      .select("uid", "featured_image").as[(String, String)].collect().toMap
 
     // default (binary collation): mixed-case rows silently miss
     val plain = Pipelines.authors(spark, ciCat).collect().head
     assert(plain.getAs[String]("first_name") == "")
     assert(plain.getAs[String]("last_name") == "Lovelace")
-    assert(Pipelines.featuredImages(spark, ciCat).collect()
-      .map(_.getLong(0)).toSet == Set(17L))
+    assert(featured() == Map("17" -> "7"))
 
     // opt-in ci mode: reference row counts/content restored
     spark.conf.set("spark.graft.wp.ciCollation", "true")
@@ -133,8 +137,7 @@ class WpPipelineSpec extends AnyFunSuite {
       val ci = Pipelines.authors(spark, ciCat).collect().head
       assert(ci.getAs[String]("first_name") == "Ada")
       assert(ci.getAs[String]("biographical_info") == "First programmer")
-      assert(Pipelines.featuredImages(spark, ciCat).collect()
-        .map(_.getLong(0)).toSet == Set(16L, 17L))
+      assert(featured() == Map("16" -> "5", "17" -> "7"))
     } finally spark.conf.unset("spark.graft.wp.ciCollation")
   }
 
@@ -162,6 +165,30 @@ class WpPipelineSpec extends AnyFunSuite {
     assert(p20.getAs[scala.collection.Seq[String]]("author").toSeq == Seq.empty) // J3 NPE avoided
     assert(p20.getAs[scala.collection.Seq[String]]("category").toSeq == Seq.empty)
     assert(p20.getAs[String]("featured_image") == "")
+  }
+
+  test("posts joins featured images onto the published posts, one wp_posts scan") {
+    val dir = Files.createTempDirectory("wpthumb").toString
+    for (t <- Seq("wp_users", "wp_usermeta", "wp_terms", "wp_term_taxonomy",
+        "wp_term_relationships", "wp_posts", "wp_options"))
+      spark.read.parquet(s"$fixtureDir/$t.parquet").write.parquet(s"$dir/$t.parquet")
+    // 16: two thumbnail rows; 21: a thumbnail on a draft; 18, 20: none
+    Seq((16L, "_thumbnail_id", "5"), (16L, "_thumbnail_id", "6"),
+        (21L, "_thumbnail_id", "7"), (18L, "noise", "x"))
+      .toDF("post_id", "meta_key", "meta_value")
+      .write.parquet(s"$dir/wp_postmeta.parquet")
+    val posts = Pipelines.posts(spark, new ParquetCatalog(dir))
+    // every thumbnail row of a published post joins, as the reference's
+    // SQL join does; the sinks keep one entry per uid
+    assert(posts.select("uid", "featured_image").as[(String, String)]
+      .collect().sorted.toSeq ==
+      Seq("16" -> "5", "16" -> "6", "18" -> "", "20" -> ""))
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val scans = posts.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r.location.rootPaths }
+      .filter(_.exists(_.getName == "wp_posts.parquet"))
+    assert(scans.length == 1, posts.queryExecution.optimizedPlan.toString)
   }
 
   test("assets pipeline encodes URLs; fetch sink retries, skips, dead-letters") {
@@ -207,6 +234,52 @@ class WpPipelineSpec extends AnyFunSuite {
     // re-run: read-modify-write merge keeps counts stable (A4 last-wins)
     val counts2 = orch.runModule("posts")
     assert(counts2 == 3)
+  }
+
+  /** Spark jobs submitted while `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.graft.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("each entry module runs its pipeline once: pinned job counts") {
+    // authors: two AQE stage jobs, the checkpoint, and one collect that
+    // writes both the entries file and the master manifest. posts adds
+    // the wp_options collect and five more stage jobs for its joins. A
+    // recount, a second collect or a re-read of written state adds a job.
+    val orch = new Orchestrator(spark, cat,
+      Files.createTempDirectory("wpjobs").toString, _ => Right(Array[Byte](1)))
+    for (_ <- 1 to 2) { // a fresh export, then a merge into its state
+      assert(jobsOf(orch.runModule("authors")) == 4)
+      assert(jobsOf(orch.runModule("posts")) == 10)
+    }
+  }
+
+  test("runModule releases every checkpoint it takes") {
+    val sc = spark.sparkContext
+    FlakyImg6.failing = true
+    for (bound <- Seq(10000L, 0L)) {
+      val orch = new Orchestrator(spark, cat,
+        Files.createTempDirectory("wprelease").toString, FlakyImg6.fetcher,
+        maxDriverManifest = bound)
+      val before = sc.getPersistentRDDs.keySet
+      orch.runModule("assets")
+      orch.runModule("posts")
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+        s"resident after export (bound $bound): ${sc.getPersistentRDDs}")
+    }
   }
 
   test("dead-letter remove-on-success: healed asset leaves wp_failed") {
@@ -344,6 +417,11 @@ class WpPipelineSpec extends AnyFunSuite {
       .readSharded(spark, s"$outDir/master/entries/posts-sharded")
       .collect().map(_.getString(0)).toSet
     assert(manifest == Set("16", "18", "20"))
+    val exported = Files.readAllLines(Paths.get(s"$outDir/logs/posts.log"))
+      .toArray.map(_.toString).filter(_.contains("Exported posts"))
+    assert(exported.length == 2 && exported.forall(l =>
+      l.contains("""\"entries\":3,""") &&
+        l.contains("""\"path\":\"sharded\",\"shards\":1}""")), exported.mkString("\n"))
   }
 
   test("contenttypes config drives module order, column order, and S11 logs") {
@@ -371,8 +449,14 @@ class WpPipelineSpec extends AnyFunSuite {
       graft.sinks.KeyedJsonSink.topLevelEntries(l).toMap)
     assert(entries.forall(e =>
       e.contains("level") && e.contains("message") && e.contains("timestamp")))
+    val exported = entries.filter(_("message").contains("Exported authors"))
+      .map(_("message"))
     assert(entries.exists(e => e("level") == "\"info\"" &&
       e("message").contains("Exported authors")))
+    // observed bytes, the sink path taken and its shard count
+    assert(exported.length == 1)
+    assert(raw"""\\"bytes\\":[1-9][0-9]*,\\"path\\":\\"single\\",\\"shards\\":0\b""".r
+      .findFirstIn(exported.head).nonEmpty, exported.head)
   }
 
   test("asset failures produce S11 error log lines") {
