@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{Q, QueryModule, Tables}
+import graft.catalog.{Q, QueryModule}
+import graft.catalog.Tables.t
 
 /** Round-10 corpus-analytics operators (SURVEY.md §2.12 X108-X110):
   * iterative link-graph centrality (the crawl-prioritization /
@@ -21,8 +22,6 @@ import graft.catalog.{Q, QueryModule, Tables}
   */
 object AnalyticsQueries extends QueryModule {
 
-  private def t(s: org.apache.spark.sql.SparkSession, d: String, n: String) =
-    Tables.t(s, d, n)
 
   /** Whole-partition frame per source (q133 convention). */
   private def bySource = Window.partitionBy(col("source"))

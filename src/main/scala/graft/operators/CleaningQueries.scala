@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{Q, QueryModule, Tables}
+import graft.catalog.{Q, QueryModule}
+import graft.catalog.Tables.t
 import graft.functions.GraftFunctions
 
 /** Text-cleaning / normalization operators (SURVEY.md §2.12 X96-X100) —
@@ -19,8 +20,6 @@ import graft.functions.GraftFunctions
   */
 object CleaningQueries extends QueryModule {
 
-  private def t(s: org.apache.spark.sql.SparkSession, d: String, n: String) =
-    Tables.t(s, d, n)
 
   def qs: Seq[Q] = Seq(
 

@@ -175,7 +175,7 @@ object CorpusOps {
       .filter($"a" =!= $"b")
       .distinct())
 
-    // Small-N fast path (the writeSingle/writeSharded precedent): a near-dup
+    // Small-N fast path (the writeSingle/mergeSharded precedent): a near-dup
     // edge set far smaller than the corpus is the common case, and the
     // iterative loop's fixed cost (2 jobs x O(log n) rounds) dominates it.
     // The edge set is already materialized, so the count is free; below the

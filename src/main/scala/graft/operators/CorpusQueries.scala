@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.catalog.{Q, QueryModule, Stats, Tables}
+import graft.catalog.{Q, QueryModule, Stats}
+import graft.catalog.Tables.t
 
 /** Corpus-curation surface: the operations a training-data pipeline runs
   * AFTER candidate generation — duplicate-cluster resolution, benchmark
@@ -12,8 +13,6 @@ import graft.catalog.{Q, QueryModule, Stats, Tables}
   */
 object CorpusQueries extends QueryModule {
 
-  private def t(s: org.apache.spark.sql.SparkSession, d: String, n: String) =
-    Tables.t(s, d, n)
 
   /** Per-language sampling rates (permille) for the mixing demo. */
   private val mixPermille =

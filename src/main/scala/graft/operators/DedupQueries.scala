@@ -3,15 +3,14 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{Q, QueryModule, Tables}
+import graft.catalog.{Q, QueryModule}
+import graft.catalog.Tables.t
 
 /** Deduplication surface: exact, brute-force n-gram Jaccard (oracle
   * baseline), SimHash (+hamming pairs), MinHash+LSH (the scale path).
   */
 object DedupQueries extends QueryModule {
 
-  private def t(s: org.apache.spark.sql.SparkSession, d: String, n: String) =
-    Tables.t(s, d, n)
 
   /** DuckDB twin of [[TextOps.distinctWindows]] (n=8): emits the CTE
     * pair `dtoks, wins` (distinct (doc_id, win) rows) over source CTE

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.catalog.{Q, QueryModule, Tables}
+import graft.catalog.Tables.t
 
 /** Engine extensions beyond the reference surface (SURVEY.md §2.4/§4.2
   * "built-ins exist if we extend"): multi-level aggregation (rollup),
@@ -13,8 +14,6 @@ import graft.catalog.{Q, QueryModule, Tables}
 object ExtensionQueries extends QueryModule {
 
   private val D = DecimalType(12, 2)
-  private def t(s: org.apache.spark.sql.SparkSession, d: String, n: String) =
-    Tables.t(s, d, n)
 
   /** Register every testdata table as a temp view — the shared-ANSI-text
     * queries (q93, q96) run their SQL against these. */

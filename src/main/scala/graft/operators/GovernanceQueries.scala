@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{Q, QueryModule, Stats, Tables}
+import graft.catalog.{Q, QueryModule, Stats}
+import graft.catalog.Tables.t
 
 /** Round-11 data-governance operators (SURVEY.md §2.12 X121-X123): the
   * release-side audits a corpus owner runs before training or shipping
@@ -18,8 +19,6 @@ import graft.catalog.{Q, QueryModule, Stats, Tables}
   */
 object GovernanceQueries extends QueryModule {
 
-  private def t(s: org.apache.spark.sql.SparkSession, d: String, n: String) =
-    Tables.t(s, d, n)
 
   /** Java-regex == RE2 PII patterns: every construct used (literal
     * classes, bounded/unbounded greedy repetition, ASCII `\b`, `\d`) has

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.catalog.{Q, QueryModule, Tables}
+import graft.catalog.{Q, QueryModule}
+import graft.catalog.Tables.t
 
 /** Core relational operator surface (SURVEY.md §2.1-§2.7), recast over the
   * driver testdata tables per FIXTURES.md §3.
@@ -21,7 +22,6 @@ import graft.catalog.{Q, QueryModule, Tables}
 object RelationalQueries extends QueryModule {
 
   private val D = DecimalType(12, 2)
-  private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
 
   def qs: Seq[Q] = Seq(
 

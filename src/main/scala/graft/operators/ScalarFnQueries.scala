@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{Q, QueryModule, Tables}
+import graft.catalog.{Q, QueryModule}
+import graft.catalog.Tables.t
 import graft.functions.{GraftFunctions, Permalink, StringFns}
 
 /** Scalar function surface (SURVEY.md §2.8 F1-F12), exercised row-level so
@@ -11,8 +12,6 @@ import graft.functions.{GraftFunctions, Permalink, StringFns}
   */
 object ScalarFnQueries extends QueryModule {
 
-  private def t(s: org.apache.spark.sql.SparkSession, d: String, n: String) =
-    Tables.t(s, d, n)
 
   def qs: Seq[Q] = Seq(
 

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.catalog.{Q, QueryModule, Stats, Tables}
+import graft.catalog.{Q, QueryModule, Stats}
+import graft.catalog.Tables.t
 
 /** Similarity-search surface over the embeddings table (64-dim unit
   * vectors): exact brute-force top-k baseline, row-local vector stats,
@@ -11,8 +12,6 @@ import graft.catalog.{Q, QueryModule, Stats, Tables}
   */
 object SimilarityQueries extends QueryModule {
 
-  private def t(s: org.apache.spark.sql.SparkSession, d: String, n: String) =
-    Tables.t(s, d, n)
 
   /** Seeded hyperplanes as a DuckDB VALUES table — `%.17e` round-trips
     * every double exactly and scientific notation parses as DOUBLE (a

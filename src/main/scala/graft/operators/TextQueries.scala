@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.catalog.{Q, QueryModule, Tables}
+import graft.catalog.{Q, QueryModule}
+import graft.catalog.Tables.t
 
 /** Text analysis + event-time operators (training-data pipeline surface):
   * windowed aggregation, sessionization, token counting, quality scoring,
@@ -13,8 +14,6 @@ import graft.catalog.{Q, QueryModule, Tables}
 object TextQueries extends QueryModule {
 
   private val D = DecimalType(12, 2)
-  private def t(s: org.apache.spark.sql.SparkSession, d: String, n: String) =
-    Tables.t(s, d, n)
 
   /** Dictionaries over the synthetic corpus vocabulary — varies per doc. */
   private val dicts = Seq(

@@ -26,11 +26,13 @@ import graft.sources.{ContentTypeCatalog, IdListSource, WpCatalog}
   * module writes winston-parity JSON-lines progress/error logs (S11)
   * under `outDir`/logs.
   *
-  * `maxDriverManifest` bounds driver-side failure handling: at most that
-  * many failed fetches go through the reference-contract collect +
-  * single-file wp_failed.json; past it the dead-letter manifest is merged
-  * distributed ([[KeyedJsonSink.mergeSharded]]) with remove-on-success
-  * inside the merge — no driver materialization at lake scale.
+  * `maxDriverManifest` bounds every driver-side keyed-JSON write, the
+  * dead-letter manifest (wp_failed) included: an output of at most that
+  * many entries goes to the reference-contract single pretty-printed file
+  * ([[KeyedJsonSink.writeSingle]]); past it, or once its sharded state
+  * exists, it merges distributed ([[KeyedJsonSink.mergeSharded]]) — no
+  * driver materialization at lake scale. Remove-on-success (the
+  * dead-letter heal) is the sink's `removeKeys` on either path.
   *
   * Each module's pipeline runs once, in [[KeyedJsonSink.materialize]]: the
   * count that picks the sink path, the shard sizing and every file read
@@ -83,22 +85,25 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  /** Write one module's entries, log its `Exported` line (merged count,
+  /** Write one keyed-JSON output, log its `Exported` line (merged count,
     * `fields`, observed bytes, path taken, shard count), return the merged
-    * count. The single pretty-printed file (reference contract) is a driver
-    * materialization bounded by maxDriverManifest; past it, or once sharded
-    * state exists, entries merge as sharded keyed JSON, and the sharded
-    * `manifest` follows the MERGED entry state, so uids absorbed from an
-    * earlier small-mode file are never lost. */
+    * count and the path taken (`single` or `sharded`). The single
+    * pretty-printed file (reference contract) is a driver materialization
+    * bounded by maxDriverManifest; past it, or once sharded state exists,
+    * entries merge as sharded keyed JSON, and the sharded `manifest`
+    * follows the MERGED entry state, so uids absorbed from an earlier
+    * small-mode file are never lost. Prior entries named by `removeKeys`
+    * are dropped on either path. */
   private def export(module: String, entries: DataFrame, single: String,
                      shardedDir: String, manifest: Option[String], logger: JsonLogger,
-                     fields: ListMap[String, Any] = ListMap.empty): Long = {
+                     fields: ListMap[String, Any] = ListMap.empty,
+                     removeKeys: Option[DataFrame] = None): (Long, String) = {
     val m = KeyedJsonSink.materialize(entries, "uid")
     val (n, path, shards) = try {
       if (m.count <= maxDriverManifest && !shardedExists(shardedDir))
-        (KeyedJsonSink.writeSingle(m, single, manifest), "single", 0)
+        (KeyedJsonSink.writeSingle(m, single, manifest, removeKeys), "single", 0)
       else {
-        val merged = KeyedJsonSink.mergeSharded(m, shardedDir, 0, None, Some(single))
+        val merged = KeyedJsonSink.mergeSharded(m, shardedDir, removeKeys, Some(single))
         manifest.foreach { file =>
           KeyedJsonSink.mergeSharded(KeyedJsonSink.readSharded(spark, shardedDir)
             .select(col("uid"), lit("en-us").as("locale")),
@@ -110,7 +115,7 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
     } finally m.release()
     logger.log(s"Exported $module", ListMap("entries" -> n) ++ fields ++
       ListMap("bytes" -> m.bytes, "path" -> path, "shards" -> shards))
-    n
+    (n, path)
   }
 
   /** Run one module end-to-end: entries → keyed-JSON sink + master
@@ -122,7 +127,7 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
     if (module == "assets") exportAssets(df, logger)
     else export(module, df, s"$outDir/entries/$module/en-us.json",
       s"$outDir/entries/$module/sharded",
-      Some(s"$outDir/master/entries/$module.json"), logger)
+      Some(s"$outDir/master/entries/$module.json"), logger)._1
   }
 
   private def exportAssets(df: DataFrame, logger: JsonLogger): Long = {
@@ -138,56 +143,30 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
     try {
       val failed = fetched.get("failed").asInstanceOf[Long]
       val okIds = results.filter(col("ok")).select(col("id").cast("string").as("uid"))
-      val shardedDir = s"$outDir/master/wp_failed"
       // remove-on-success (reference assets.js:135-137): an id that
-      // fetched OK this run — fresh or idempotent-skip — must drop out of
-      // any stale wp_failed state before the new failures merge in. Once
-      // the manifest has gone sharded it stays sharded (healed ids must
-      // anti-join out of the shard state even on a run with few fresh
-      // failures).
-      if (failed <= maxDriverManifest && !shardedExists(shardedDir)) {
-        // reference-contract path: the single pretty-printed
-        // wp_failed.json and a per-asset error log line. Only ids ALREADY
-        // IN the prior manifest need the remove-on-success set —
-        // collecting every succeeded id would materialize the whole
-        // (possibly huge) corpus on the driver to heal a manifest bounded
-        // at maxDriverManifest keys.
-        val failedFile = s"$outDir/master/wp_failed.json"
-        val priorFailed: Set[String] =
-          if (Files.exists(Paths.get(failedFile)))
-            KeyedJsonSink.topLevelEntries(new String(
-              Files.readAllBytes(Paths.get(failedFile)), "UTF-8")).map(_._1).toSet
-          else Set.empty
-        val healed: Set[String] =
-          if (priorFailed.isEmpty) Set.empty
-          else results.filter(col("ok") &&
-              col("id").cast("string").isin(priorFailed.toSeq: _*))
-            .select(col("id").cast("string")).collect().map(_.getString(0)).toSet
-        HttpFetchSink.deadLetter(results).collect().foreach(r =>
-          logger.error("Failed to download asset", Map("id" -> r.getLong(0),
-            "url" -> r.getString(1), "error" -> r.getString(2))))
-        KeyedJsonSink.writeSingle(
-          HttpFetchSink.deadLetter(results).withColumn("uid", col("id")),
-          "uid", failedFile, removeKeys = healed)
-      } else {
-        // lake path: NOTHING materializes on the driver. The failure
-        // manifest lives as sharded keyed JSON; remove-on-success drops
-        // the succeeded ids inside the same distributed merge. The error
-        // log carries the aggregate count — a per-row log line at this
-        // scale IS a driver materialization in disguise.
-        KeyedJsonSink.mergeSharded(
-          HttpFetchSink.deadLetter(results).withColumn("uid", col("id")),
-          "uid", shardedDir, removeKeys = Some(okIds),
-          legacyFile = Some(s"$outDir/master/wp_failed.json"))
-        if (failed > 0)
-          logger.error("Failed to download assets",
-            Map("failed" -> failed, "manifest" -> shardedDir))
+      // fetched OK this run — fresh or idempotent-skip — drops out of the
+      // prior dead-letter state as the new failures merge in, on either
+      // sink path.
+      val failedDir = s"$outDir/master/wp_failed"
+      val (_, path) = export("wp_failed",
+        HttpFetchSink.deadLetter(results).withColumn("uid", col("id")),
+        s"$failedDir.json", failedDir, None, logger, removeKeys = Some(okIds))
+      // per-asset error lines only beside the bounded single file: at
+      // sharded scale a per-row log line IS a driver materialization in
+      // disguise, so the log carries the aggregate count.
+      if (failed > 0) {
+        if (path == "single")
+          HttpFetchSink.deadLetter(results).collect().foreach(r =>
+            logger.error("Failed to download asset", Map("id" -> r.getLong(0),
+              "url" -> r.getString(1), "error" -> r.getString(2))))
+        else logger.error("Failed to download assets",
+          Map("failed" -> failed, "manifest" -> failedDir))
       }
       // the ok-asset entries file is a driver materialization too: same
       // scale split as every other entries sink.
       export("assets", df.join(okIds, "uid", "left_semi"),
         s"$outDir/assets/assets.json", s"$outDir/assets/sharded", None, logger,
-        ListMap("failed" -> failed))
+        ListMap("failed" -> failed))._1
     } finally KeyedJsonSink.release(results)
   }
 

@@ -128,8 +128,7 @@ object HttpFetchSink {
       .mapPartitions { rows =>
         rows.map { case (id, url) =>
           val fileName = safeFileName(url, id)
-          val dir = Paths.get(destDir, id.toString)
-          val target = dir.resolve(fileName)
+          val target = Paths.get(destDir, id.toString, fileName)
           if (Files.exists(target)) // assets.js:78-80 idempotent skip
             FetchResult(id, url, target.toString, ok = true, skipped = true, "")
           else {
@@ -146,8 +145,9 @@ object HttpFetchSink {
             }
             result match {
               case Right(bytes) =>
-                Files.createDirectories(dir)
-                Files.write(target, bytes)
+                // temp sibling + rename: a task killed mid-write must not
+                // leave a truncated file the skip above takes as fetched
+                KeyedJsonSink.atomicWrite(target, bytes)
                 FetchResult(id, url, target.toString, ok = true,
                   skipped = false, "")
               case Left(err) =>

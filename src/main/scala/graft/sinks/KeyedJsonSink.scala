@@ -1,11 +1,12 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{AtomicMoveNotSupportedException, Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{AtomicMoveNotSupportedException, Files, Path, Paths, StandardCopyOption,
+  StandardOpenOption}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -24,13 +25,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (no schema inference, no null-field dropping, no cross-entry type
   *    coercion), and the file is replaced with an atomic temp-file move
   *    so a crash mid-write cannot corrupt existing state.
-  *  - [[writeSharded]]: the scale path — entries stay distributed, hashed
+  *  - [[mergeSharded]]: the scale path — entries stay distributed, hashed
   *    on uid into shard files of JSON-lines (uid TAB json), mergeable by
   *    re-sharding on uid. Compaction = groupBy shard with last-wins. The
   *    shard count follows the state's size ([[shardCount]]: one shard per
   *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, 1 to
   *    [[MaxShards]]), because every committed file has a fixed cost that
   *    a small state should not pay 64 times.
+  *
+  * Both modes share one remove-on-success contract (the dead-letter heal,
+  * reference assets.js:135-137): `removeKeys` names ids whose PRIOR
+  * entries are dropped; the delta always lands, so an id in both the
+  * delta and `removeKeys` keeps its delta entry.
   *
   * A module's output runs once, in [[materialize]]: both modes, the master
   * manifest and the shard sizing read that one observed checkpoint.
@@ -203,13 +209,14 @@ object KeyedJsonSink {
   private def escapeKey(k: String): String =
     "\"" + k.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
-  /** Temp-file + atomic rename so readers never observe a half-written
-    * state file and a crash can't destroy the previous one. */
-  private def atomicWrite(path: Path, content: String): Unit = {
+  /** Write `bytes` to a temp sibling (dot-prefixed) and rename it into
+    * place, so readers never observe a half-written file and a crash
+    * can't destroy the previous one. */
+  private[graft] def atomicWrite(path: Path, bytes: Array[Byte]): Unit = {
     Files.createDirectories(path.getParent)
-    val tmp = Files.createTempFile(path.getParent,
-      "." + path.getFileName.toString, ".tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    val tmp = path.resolveSibling(
+      s".${path.getFileName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
     try Files.move(tmp, path,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     catch {
@@ -218,62 +225,50 @@ object KeyedJsonSink {
     }
   }
 
-  /** Merge `entries` into the keyed-JSON file at `path` (new rows win;
-    * `removeKeys` are dropped — the dead-letter remove-on-success path,
-    * reference assets.js:135-137), write pretty-printed atomically,
-    * return the merged row count. Driver-side by design — see class
-    * doc. Entries absent from the delta keep their raw JSON text. */
+  /** [[materialize]] `entries`, [[writeSingle]] them, release. */
   def writeSingle(entries: DataFrame, uidCol: String, path: String,
-                  removeKeys: Set[String] = Set.empty): Long =
-    writeRows(keyed(entries, uidCol).collect(), path, removeKeys)
-
-  /** [[writeSingle]] of materialized rows. The same collect writes the
-    * master manifest (S8) {"en-us": {uid: ""}} (reference:
-    * authors.js:34,52) in Spark's string order (UTF-8 bytes), not Java's. */
-  def writeSingle(entries: Materialized, path: String,
-                  manifest: Option[String]): Long = {
-    val rows = entries.rows.collect()
-    val n = writeRows(rows, path, Set.empty)
-    manifest.foreach(p => atomicWrite(Paths.get(p), pretty(rows.map(_.getString(0))
-      .sortBy(UTF8String.fromString).map(escapeKey(_) + ": \"\"")
-      .mkString("{\"en-us\": {", ", ", "}}"))))
-    n
+                  removeKeys: Option[DataFrame] = None): Long = {
+    val m = materialize(entries, uidCol)
+    try writeSingle(m, path, None, removeKeys)
+    finally m.release()
   }
 
-  private def writeRows(rows: Array[Row], path: String, removeKeys: Set[String]): Long = {
-    val fresh: Seq[(String, String)] =
-      rows.map(r => r.getString(0) -> r.getString(1))
-        .toMap.toSeq // dedup within the delta: last collected row wins
-    val freshKeys = fresh.map(_._1).toSet
+  /** Merge `entries` into the keyed-JSON file at `path` (new rows win;
+    * prior entries named by `removeKeys` are dropped — see the class doc),
+    * write pretty-printed atomically, return the merged row count.
+    * Driver-side by design — see class doc. Entries absent from the delta
+    * keep their raw JSON text. `removeKeys` is looked up only among the
+    * prior file's keys, in one bounded collect; no job runs when the prior
+    * file is empty. The same collect of `entries` writes the master
+    * manifest (S8) {"en-us": {uid: ""}} (reference: authors.js:34,52) in
+    * Spark's string order (UTF-8 bytes), not Java's. */
+  def writeSingle(entries: Materialized, path: String, manifest: Option[String],
+                  removeKeys: Option[DataFrame]): Long = {
+    val rows = entries.rows.collect()
+    val fresh = rows.map(r => r.getString(0) -> r.getString(1))
+      .toMap // dedup within the delta: last collected row wins
     val p = Paths.get(path)
-    val existing: Seq[(String, String)] =
+    val prior: Seq[(String, String)] =
       if (Files.exists(p) && Files.size(p) > 2)
         topLevelEntries(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
           .map { case (k, v) => k -> minify(v) }
       else Seq.empty
-    // last-wins: fresh replaces existing per key; removeKeys dropped
-    val merged = (existing.filterNot { case (k, _) =>
-      freshKeys(k) || removeKeys(k)
-    } ++ fresh.filterNot { case (k, _) => removeKeys(k) })
-      .sortBy(_._1)
-    val body = merged
-      .map { case (k, v) => escapeKey(k) + ": " + v }
-      .mkString("{", ", ", "}")
-    atomicWrite(p, pretty(body))
+    val removed: Set[String] = removeKeys match {
+      case Some(rm) if prior.nonEmpty =>
+        val uid = col(rm.columns.head).cast("string")
+        rm.select(uid).filter(uid.isin(prior.map(_._1): _*))
+          .collect().map(_.getString(0)).toSet
+      case _ => Set.empty
+    }
+    // last-wins: fresh replaces prior per key
+    val merged = (prior.filterNot { case (k, _) => fresh.contains(k) || removed(k) } ++
+      fresh).sortBy(_._1)
+    atomicWrite(p, pretty(merged.map { case (k, v) => escapeKey(k) + ": " + v }
+      .mkString("{", ", ", "}")).getBytes(StandardCharsets.UTF_8))
+    manifest.foreach(m => atomicWrite(Paths.get(m), pretty(rows.map(_.getString(0))
+      .sortBy(UTF8String.fromString).map(escapeKey(_) + ": \"\"")
+      .mkString("{\"en-us\": {", ", ", "}}")).getBytes(StandardCharsets.UTF_8)))
     merged.length.toLong
-  }
-
-  /** Scale path: distributed JSON-lines shards keyed by uid hash. Merging
-    * a delta = union previous shards + delta, last-wins on uid, rewrite
-    * (one shuffle, no driver materialization) — see [[mergeSharded]].
-    * `shards` = 0 (the default) sizes the count from the observed bytes of
-    * `entries` ([[shardCount]]); a positive `shards` is used as given. */
-  def writeSharded(entries: DataFrame, uidCol: String, dir: String,
-                   shards: Int = 0): Unit = {
-    val m = materialize(entries, uidCol)
-    val n = if (shards > 0) shards else shardCount(m.rows.sparkSession, m.bytes)
-    try writeShardFiles(m.rows.repartition(n, col("uid")), dir, n)
-    finally m.release()
   }
 
   /** Ceiling of the derived shard count. */
@@ -334,14 +329,13 @@ object KeyedJsonSink {
     * merge `delta` into the shards at `dir` with last-wins per uid
     * (delta beats existing; within the delta, ties resolve to the
     * lexicographically-greatest rendered json — deterministic, where
-    * [[writeSingle]] keeps an arbitrary collected row), drop
-    * `removeKeys` (the remove-on-success contract, applied in the same
-    * aggregate instead of a driver-side Set), and rewrite every shard.
-    * Returns the merged state's row and shard counts.
-    * `shards` = 0 (the default) sizes the count ([[shardCount]]) from the
-    * delta's observed bytes plus the existing part files and the absorbed
-    * legacy file, so a state written with more shards re-merges into the
-    * derived count; a positive `shards` is used as given.
+    * [[writeSingle]] keeps an arbitrary collected row), drop the existing
+    * entries `removeKeys` names (the remove-on-success contract, applied
+    * in the same aggregate), and rewrite every shard into a fresh or
+    * existing `dir`. Returns the merged state's row and shard counts.
+    * The shard count ([[shardCount]]) follows the delta's observed bytes
+    * plus the existing part files and the absorbed legacy file, so a
+    * state written with more shards re-merges into the derived count.
     * One shuffle: existing ∪ delta ∪ removed ids are hash-partitioned on
     * uid to the shard count, and the last-wins aggregate and the file
     * write reuse that partitioning. Nothing materializes on the driver.
@@ -351,16 +345,15 @@ object KeyedJsonSink {
     * absence; every crash window leaves a recoverable copy (`.old` or
     * `.tmp-*`), never zero. */
   def mergeSharded(delta: DataFrame, uidCol: String, dir: String,
-                   shards: Int = 0,
                    removeKeys: Option[DataFrame] = None,
                    legacyFile: Option[String] = None): Sharded = {
     val m = materialize(delta, uidCol)
-    try mergeSharded(m, dir, shards, removeKeys, legacyFile)
+    try mergeSharded(m, dir, removeKeys, legacyFile)
     finally m.release()
   }
 
   /** [[mergeSharded]] of an already materialized delta. */
-  def mergeSharded(delta: Materialized, dir: String, shards: Int,
+  def mergeSharded(delta: Materialized, dir: String,
                    removeKeys: Option[DataFrame],
                    legacyFile: Option[String]): Sharded = {
     val spark = delta.rows.sparkSession
@@ -377,8 +370,8 @@ object KeyedJsonSink {
       if (fs.exists(hPath))
         fs.listStatus(hPath).filter(_.getPath.getName.startsWith("part-"))
       else Array.empty[org.apache.hadoop.fs.FileStatus]
-    // src orders the last-wins aggregate: existing 0 < delta 1 < removed 2
-    val fresh = delta.rows.withColumn("src", lit(1))
+    // src orders the last-wins aggregate: existing 0 < removed 1 < delta 2
+    val fresh = delta.rows.withColumn("src", lit(2))
     // a [[writeSingle]]-format file from earlier small-scale runs is
     // absorbed once (its size is bounded by the small-mode contract that
     // wrote it) and deleted after a successful merge, so crossing the
@@ -396,12 +389,10 @@ object KeyedJsonSink {
       }
     val removed = removeKeys.map { rm =>
       rm.select(col(rm.columns.head).cast("string").as("uid"),
-        lit(null).cast("string").as("json"), lit(2).as("src"))
+        lit(null).cast("string").as("json"), lit(1).as("src"))
     }
-    val n =
-      if (shards > 0) shards
-      else shardCount(spark, delta.bytes + existingParts.map(_.getLen).sum +
-        legacyPath.fold(0L)(Files.size(_)))
+    val n = shardCount(spark, delta.bytes + existingParts.map(_.getLen).sum +
+      legacyPath.fold(0L)(Files.size(_)))
     val unioned = (legacyDf.toSeq ++
       (if (existingParts.nonEmpty)
         Seq(readSharded(spark, dir).withColumn("src", lit(0))) else Nil) ++
@@ -411,7 +402,7 @@ object KeyedJsonSink {
       .repartition(n, col("uid"))
       .groupBy(col("uid"))
       .agg(max(struct(col("src"), col("json"))).as("w"))
-      .filter(col("w.src") < 2)
+      .filter(col("w.src") =!= 1)
       .select(col("uid"), col("w.json").as("json"))
     // backup-rename swap: the previous state is parked at .old until the
     // new state is in place, so no crash window loses BOTH copies (a

@@ -17,7 +17,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 reader for the engine's own sharded keyed-JSON sink
-  * format ([[graft.sinks.KeyedJsonSink.writeSharded]]: text shards of
+  * format ([[graft.sinks.KeyedJsonSink.mergeSharded]]: text shards of
   * `uid TAB json`, hash-partitioned on uid by Spark's Murmur3). Closes
   * the loop on the custom sink: state written at scale is a TABLE —
   * `spark.read.format("graft.sources.KeyedJsonSource")

@@ -18,15 +18,18 @@ import graft.sinks.KeyedJsonSink
   *    reader at lake sizes;
   *  - a full-lake count (the sanity row count).
   *
-  * Usage: runMain graft.tools.LakeLookupBench [nEntries] [shards]
+  * Usage: runMain graft.tools.LakeLookupBench [nEntries] [advisoryBytes]
+  * (`advisoryBytes` sets `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
+  * which sizes the shard count like every sharded write; default 1m).
   * Prints ONE JSON line.
   */
 object LakeLookupBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val shards = args.lift(1).map(_.toInt).getOrElse(66)
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        args.lift(1).getOrElse("1m"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -41,7 +44,7 @@ object LakeLookupBench {
         concat(lit("title-"), $"id").as("title"),
         concat(lit("/posts/"), $"id").as("url")).as("entry"))
       .select($"uid", to_json($"entry").as("json"))
-    KeyedJsonSink.writeSharded(entries, "uid", dir, shards = shards)
+    val shards = KeyedJsonSink.mergeSharded(entries, "uid", dir).shards
     val tWrite = (System.nanoTime() - t0) / 1e9
 
     val fmt = "graft.sources.KeyedJsonSource"

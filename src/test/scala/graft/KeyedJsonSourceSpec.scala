@@ -13,11 +13,21 @@ class KeyedJsonSourceSpec extends AnyFunSuite {
   private val dir = "/tmp/kjsource_state"
   private val fmt = "graft.sources.KeyedJsonSource"
 
+  /** A fresh 8-shard state: the advisory partition size is an eighth of
+    * the entries' observed bytes. */
   private def writeState(): Unit = {
     import spark.implicits._
     val df = (0 until 1000)
       .map(i => (i.toString, s"name-$i", i * 2)).toDF("uid", "name", "score")
-    KeyedJsonSink.writeSharded(df, "uid", dir, shards = 8)
+    Seq(dir, dir + ".old").foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    val m = KeyedJsonSink.materialize(df, "uid")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${(m.bytes + 7) / 8}b")
+    try assert(KeyedJsonSink.mergeSharded(m, dir, None, None).shards == 8)
+    finally {
+      spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+      m.release()
+    }
   }
 
   test("DSv2 read round-trips the sharded sink (all shards, parallel)") {
@@ -132,7 +142,7 @@ class KeyedJsonSourceSpec extends AnyFunSuite {
   test("a small state sized to one shard still serves point lookups") {
     import spark.implicits._
     val small = java.nio.file.Files.createTempDirectory("kjsmall").resolve("s").toString
-    KeyedJsonSink.writeSharded((0 until 1000)
+    KeyedJsonSink.mergeSharded((0 until 1000)
       .map(i => (i.toString, s"name-$i")).toDF("uid", "name"), "uid", small)
     val parts = new java.io.File(small).listFiles().map(_.getName)
       .filter(_.startsWith("part-"))

@@ -64,6 +64,30 @@ class SinkHardeningSpec extends AnyFunSuite {
     assert(Files.readAllBytes(written).sameElements(Array[Byte](42)))
   }
 
+  test("fetch writes each asset through a temp sibling: only final files remain") {
+    val dest = Files.createTempDirectory("fetchatomic")
+    val fetcher: HttpFetchSink.Fetcher = url => Right(url.getBytes(StandardCharsets.UTF_8))
+    val assets = (1L to 6L).map(i => (i, s"http://x/a/img-$i.jpg")).toDF("uid", "url")
+      .repartition(3)
+    assert(HttpFetchSink.fetch(assets, "uid", "url", dest.toString, fetcher)
+      .filter("ok and not skipped").count() == 6)
+    (1L to 6L).foreach { i =>
+      val files = new java.io.File(dest.toFile, i.toString).listFiles().map(_.getName)
+      assert(files.toSeq == Seq(s"img-$i.jpg"), s"id $i holds ${files.mkString(", ")}")
+      assert(new String(Files.readAllBytes(dest.resolve(s"$i/img-$i.jpg")),
+        StandardCharsets.UTF_8) == s"http://x/a/img-$i.jpg")
+    }
+  }
+
+  private val Advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+  /** Run `body` with the advisory partition size that sizes shard counts
+    * set to `size`, unset afterwards. */
+  private def withAdvisory[T](size: String)(body: => T): T = {
+    spark.conf.set(Advisory, size)
+    try body finally spark.conf.unset(Advisory)
+  }
+
   test("writeSingle preserves untouched entries' raw JSON (nulls, order, types)") {
     val dir = Files.createTempDirectory("keyedjson")
     val path = dir.resolve("state.json").toString
@@ -89,12 +113,14 @@ class SinkHardeningSpec extends AnyFunSuite {
       """{"11": {"url": "http://x/a"}, "22": {"url": "http://x/b"}}"""
         .getBytes(StandardCharsets.UTF_8))
     val delta = Seq(("33", "http://x/c")).toDF("uid", "url")
+    // prior 11 healed; 33 is this run's delta, which lands even though
+    // removeKeys names it; 44 names nothing
     val n = KeyedJsonSink.writeSingle(delta, "uid", path,
-      removeKeys = Set("11", "33")) // 11 healed; 33 also healed later
-    assert(n == 1)
+      removeKeys = Some(Seq("11", "33", "44").toDF("uid")))
+    assert(n == 2)
     val entries = KeyedJsonSink.topLevelEntries(
       new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)).toMap
-    assert(entries.keySet == Set("22"))
+    assert(entries.keySet == Set("22", "33"))
   }
 
   test("sharded merge + compaction round-trips ≡ writeSingle on same data") {
@@ -102,20 +128,20 @@ class SinkHardeningSpec extends AnyFunSuite {
     val shardDir = dir.resolve("state").toString
     val singlePath = dir.resolve("state.json").toString
     val base = (1 to 40).map(i => (s"k$i", s"v$i", i)).toDF("uid", "field", "n")
-    // delta: update 5 existing keys, add 3 new; remove 2 (one updated-
-    // and-removed, one untouched-and-removed)
+    // delta: update 5 existing keys, add 3 new; removeKeys names 2: k20
+    // (untouched, dropped) and k3 (updated by the delta, which lands)
     val delta = ((3 to 7).map(i => (s"k$i", s"V$i", i * 100)) ++
       Seq(("x1", "nx1", -1), ("x2", "nx2", -2), ("x3", "nx3", -3)))
       .toDF("uid", "field", "n")
     val rm = Seq("k3", "k20").toDF("uid")
 
-    KeyedJsonSink.writeSharded(base, "uid", shardDir, shards = 4)
-    KeyedJsonSink.mergeSharded(delta, "uid", shardDir, shards = 4,
-      removeKeys = Some(rm))
+    withAdvisory("512b") {
+      assert(KeyedJsonSink.mergeSharded(base, "uid", shardDir).shards > 1)
+      KeyedJsonSink.mergeSharded(delta, "uid", shardDir, removeKeys = Some(rm))
+    }
 
     KeyedJsonSink.writeSingle(base, "uid", singlePath)
-    KeyedJsonSink.writeSingle(delta, "uid", singlePath,
-      removeKeys = Set("k3", "k20"))
+    KeyedJsonSink.writeSingle(delta, "uid", singlePath, removeKeys = Some(rm))
 
     val sharded = KeyedJsonSink.readSharded(spark, shardDir).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -123,13 +149,14 @@ class SinkHardeningSpec extends AnyFunSuite {
       new String(Files.readAllBytes(Paths.get(singlePath)), StandardCharsets.UTF_8))
       .map { case (k, v) => k -> KeyedJsonSink.minify(v) }.toMap
     assert(sharded.keySet == single.keySet)
-    assert(sharded.keySet.size == 41) // 40 - 2 removed + 3 added
+    assert(sharded.keySet.size == 42) // 40 - 1 removed + 3 added
+    assert(single("k3") == """{"field":"V3","n":300}""")
     sharded.keySet.foreach(k => assert(sharded(k) == single(k), s"key $k"))
 
     // compaction: exactly one line per key across the shard files — the
     // merge rewrote state, not appended a log.
     val lines = spark.read.text(shardDir).count()
-    assert(lines == 41)
+    assert(lines == 42)
   }
 
   test("mergeSharded absorbs a legacy writeSingle file once") {
@@ -140,7 +167,7 @@ class SinkHardeningSpec extends AnyFunSuite {
       """{"old1": {"url": "http://x/a"}, "old2": {"url": "http://x/b"}}"""
         .getBytes(StandardCharsets.UTF_8))
     val delta = Seq(("new1", "http://x/c")).toDF("uid", "url")
-    KeyedJsonSink.mergeSharded(delta, "uid", shardDir, shards = 2,
+    KeyedJsonSink.mergeSharded(delta, "uid", shardDir,
       removeKeys = Some(Seq("old2").toDF("uid")), legacyFile = Some(legacy))
     val got = KeyedJsonSink.readSharded(spark, shardDir).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -152,13 +179,14 @@ class SinkHardeningSpec extends AnyFunSuite {
   test("mergeSharded self-heals an interrupted swap from the .old backup") {
     val dir = Files.createTempDirectory("shardheal")
     val shardDir = dir.resolve("state").toString
-    KeyedJsonSink.writeSharded(
-      Seq(("a", "1"), ("b", "2")).toDF("uid", "x"), "uid", shardDir, shards = 2)
-    // simulate a crash that landed between rename(dir -> .old) and
-    // rename(tmp -> dir): live dir missing, backup present
-    Files.move(Paths.get(shardDir), Paths.get(shardDir + ".old"))
-    KeyedJsonSink.mergeSharded(
-      Seq(("c", "3")).toDF("uid", "x"), "uid", shardDir, shards = 2)
+    withAdvisory("16b") {
+      assert(KeyedJsonSink.mergeSharded(Seq(("a", "1"), ("b", "2")).toDF("uid", "x"),
+        "uid", shardDir).shards > 1)
+      // simulate a crash that landed between rename(dir -> .old) and
+      // rename(tmp -> dir): live dir missing, backup present
+      Files.move(Paths.get(shardDir), Paths.get(shardDir + ".old"))
+      KeyedJsonSink.mergeSharded(Seq(("c", "3")).toDF("uid", "x"), "uid", shardDir)
+    }
     val got = KeyedJsonSink.readSharded(spark, shardDir).collect()
       .map(_.getString(0)).toSet
     assert(got == Set("a", "b", "c"),
@@ -208,12 +236,11 @@ class SinkHardeningSpec extends AnyFunSuite {
     val base = (1 to 300).map(i => (s"k$i", s"value-$i" * 4)).toDF("uid", "x")
     KeyedJsonSink.mergeSharded(base, "uid", shardDir)
     assert(sidecar(shardDir) == "1")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4k")
-    try {
+    withAdvisory("4k") {
       KeyedJsonSink.mergeSharded(
         (290 to 320).map(i => (s"k$i", s"new-$i")).toDF("uid", "x"),
         "uid", shardDir)
-    } finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    }
     val n = sidecar(shardDir).toInt
     assert(n > 1 && n < KeyedJsonSink.MaxShards, s"derived $n shards")
     assert(partFiles(shardDir).length > 1)
@@ -227,7 +254,7 @@ class SinkHardeningSpec extends AnyFunSuite {
   test("a 64-shard state re-merges into the derived count with no stale part") {
     val shardDir = Files.createTempDirectory("shard64").resolve("s").toString
     val base = (1 to 500).map(i => (s"k$i", s"v$i")).toDF("uid", "x")
-    KeyedJsonSink.writeSharded(base, "uid", shardDir, shards = 64)
+    withAdvisory("64b")(KeyedJsonSink.mergeSharded(base, "uid", shardDir))
     assert(sidecar(shardDir) == "64" && partFiles(shardDir).length > 32)
     KeyedJsonSink.mergeSharded(Seq(("k1", "V1"), ("k501", "v501"))
       .toDF("uid", "x"), "uid", shardDir)
@@ -253,9 +280,7 @@ class SinkHardeningSpec extends AnyFunSuite {
     KeyedJsonSink.mergeSharded(delta, "uid", shardDir)
     assert(sidecar(shardDir) == "1")
     val grown = Files.createTempDirectory("shardrdd").resolve("s").toString
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64b")
-    try KeyedJsonSink.mergeSharded(delta, "uid", grown)
-    finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    withAdvisory("64b")(KeyedJsonSink.mergeSharded(delta, "uid", grown))
     assert(sidecar(grown) == ((bytes + 63) / 64).toString)
     assertHashLayout(grown, (bytes + 63) / 64)
     assert(shardedKeys(grown).size == 20)
@@ -266,7 +291,7 @@ class SinkHardeningSpec extends AnyFunSuite {
     val m = KeyedJsonSink.materialize(
       (1 to 30).map(i => (s"k$i", s"é-$i", i)).toDF("uid", "x", "n"), "uid")
     try {
-      assert(KeyedJsonSink.mergeSharded(m, shardDir, 0, None, None) ==
+      assert(KeyedJsonSink.mergeSharded(m, shardDir, None, None) ==
         KeyedJsonSink.Sharded(30, 1))
       assert(partFiles(shardDir).map(_.length).sum == m.bytes)
     } finally m.release()
@@ -295,13 +320,13 @@ class SinkHardeningSpec extends AnyFunSuite {
     merged((1 to 10).map(i => (s"k$i", "v")).toDF("uid", "x"),
       legacyFile = Some(legacy))
     assert(shardedKeys(shardDir).size == 11 && !Files.exists(Paths.get(legacy)))
-    // removeKeys: one existing and one new id dropped
+    // removeKeys: the existing k2 is dropped; the delta's k12 lands
     merged(Seq(("k11", "v"), ("k12", "v")).toDF("uid", "x"),
       rm = Some(Seq("k2", "k12").toDF("uid")))
-    assert(shardedKeys(shardDir).size == 11)
+    assert(shardedKeys(shardDir).size == 12)
     // duplicate uids in the delta collapse to one line each
     merged(Seq(("k3", "a"), ("k3", "b"), ("n1", "c"), ("n1", "d")).toDF("uid", "x"))
-    assert(shardedKeys(shardDir).size == 12)
+    assert(shardedKeys(shardDir).size == 13)
   }
 
   test("the single-file master manifest keeps Spark's UTF-8 uid order") {
@@ -317,22 +342,8 @@ class SinkHardeningSpec extends AnyFunSuite {
     val manifest = dir.resolve("master.json")
     val m = KeyedJsonSink.materialize(df, "uid")
     try assert(KeyedJsonSink.writeSingle(m, dir.resolve("en-us.json").toString,
-      Some(manifest.toString)) == 5) finally m.release()
+      Some(manifest.toString), None) == 5) finally m.release()
     assert(Files.readAllBytes(manifest).sameElements(want.getBytes(StandardCharsets.UTF_8)))
-  }
-
-  test("an explicit shard count is honoured by writeSharded and mergeSharded") {
-    val shardDir = Files.createTempDirectory("shardexplicit").resolve("s").toString
-    KeyedJsonSink.writeSharded(
-      (1 to 100).map(i => (s"k$i", "v")).toDF("uid", "x"), "uid", shardDir,
-      shards = 5)
-    assert(sidecar(shardDir) == "5")
-    assertHashLayout(shardDir, 5)
-    KeyedJsonSink.mergeSharded(Seq(("k101", "v")).toDF("uid", "x"), "uid",
-      shardDir, shards = 7)
-    assert(sidecar(shardDir) == "7")
-    assertHashLayout(shardDir, 7)
-    assert(shardedKeys(shardDir).size == 101)
   }
 
   test("mergeSharded shuffles once, removeKeys included") {
@@ -354,7 +365,7 @@ class SinkHardeningSpec extends AnyFunSuite {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val shardDir = Files.createTempDirectory("shardonce").resolve("s").toString
-    KeyedJsonSink.writeSharded(
+    KeyedJsonSink.mergeSharded(
       (1 to 100).map(i => (s"k$i", "v")).toDF("uid", "x"), "uid", shardDir)
     spark.listenerManager.register(listener)
     try {
@@ -367,8 +378,9 @@ class SinkHardeningSpec extends AnyFunSuite {
     val plan = writes.peek()
     val exchanges = nodes(plan).collect { case e: ShuffleExchangeLike => e }
     assert(exchanges.length == 1, plan.toString)
+    // k2 is dropped; n1, named by removeKeys but in the delta, lands
     val got = shardedKeys(shardDir)
-    assert(got.keySet == (1 to 100).filter(_ != 2).map(i => s"k$i").toSet)
+    assert(got.keySet == (1 to 100).filter(_ != 2).map(i => s"k$i").toSet + "n1")
     assert(got("k1") == """{"x":"V"}""")
   }
 

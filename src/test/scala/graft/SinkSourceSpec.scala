@@ -35,10 +35,13 @@ class SinkSourceSpec extends AnyFunSuite {
     assert(merged == Seq(("a", "Alice", 1L), ("b", "Bobby", 3L), ("c", "Cara", 4L)))
   }
 
-  test("KeyedJsonSink.writeSharded keeps entries distributed and re-readable") {
+  test("KeyedJsonSink.mergeSharded keeps entries distributed and re-readable") {
     val dir = Files.createTempDirectory("shard").toString + "/out"
     val entries = (1 to 100).map(i => (s"u$i", i)).toDF("uid", "v")
-    KeyedJsonSink.writeSharded(entries, "uid", dir, shards = 8)
+    // a small advisory partition size spreads the entries over several shards
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256b")
+    try assert(KeyedJsonSink.mergeSharded(entries, "uid", dir).shards > 1)
+    finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     val back = spark.read.text(dir)
       .select(split($"value", "\t").getItem(0).as("uid"),
         get_json_object(split($"value", "\t").getItem(1), "$.v").cast("int").as("v"))

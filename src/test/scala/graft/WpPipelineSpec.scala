@@ -11,11 +11,12 @@ import graft.sinks.HttpFetchSink
 import graft.sources.ParquetCatalog
 
 /** Stateful fake fetcher shared with executor closures (local mode =
-  * same JVM): img6 fails while `failing` is set, then recovers. */
-object FlakyImg6 {
-  @volatile var failing = true
+  * same JVM): every URL containing one of `failing` (e.g. "img6") fails
+  * until the set changes. */
+object FlakyImgs {
+  @volatile var failing = Set.empty[String]
   val fetcher: HttpFetchSink.Fetcher = url =>
-    if (failing && url.contains("img6")) Left("ECONNREFUSED")
+    if (failing.exists(url.contains)) Left("ECONNREFUSED")
     else Right(url.getBytes("UTF-8"))
 }
 
@@ -259,9 +260,13 @@ class WpPipelineSpec extends AnyFunSuite {
     // writes both the entries file and the master manifest. posts adds
     // the wp_options collect and five more stage jobs for its joins. A
     // recount, a second collect or a re-read of written state adds a job.
+    // assets: the fetch checkpoint, then the dead letter's and the
+    // ok-asset entries' checkpoint + collect each (no failures, so no
+    // error-line collect and no heal lookup).
     val orch = new Orchestrator(spark, cat,
       Files.createTempDirectory("wpjobs").toString, _ => Right(Array[Byte](1)))
     for (_ <- 1 to 2) { // a fresh export, then a merge into its state
+      assert(jobsOf(orch.runModule("assets")) == 6)
       assert(jobsOf(orch.runModule("authors")) == 4)
       assert(jobsOf(orch.runModule("posts")) == 10)
     }
@@ -269,10 +274,10 @@ class WpPipelineSpec extends AnyFunSuite {
 
   test("runModule releases every checkpoint it takes") {
     val sc = spark.sparkContext
-    FlakyImg6.failing = true
+    FlakyImgs.failing = Set("img6")
     for (bound <- Seq(10000L, 0L)) {
       val orch = new Orchestrator(spark, cat,
-        Files.createTempDirectory("wprelease").toString, FlakyImg6.fetcher,
+        Files.createTempDirectory("wprelease").toString, FlakyImgs.fetcher,
         maxDriverManifest = bound)
       val before = sc.getPersistentRDDs.keySet
       orch.runModule("assets")
@@ -284,8 +289,8 @@ class WpPipelineSpec extends AnyFunSuite {
 
   test("dead-letter remove-on-success: healed asset leaves wp_failed") {
     val outDir = Files.createTempDirectory("wpheal").toString
-    FlakyImg6.failing = true
-    val orch = new Orchestrator(spark, cat, outDir, FlakyImg6.fetcher)
+    FlakyImgs.failing = Set("img6")
+    val orch = new Orchestrator(spark, cat, outDir, FlakyImgs.fetcher)
     orch.runModule("assets")
     val failedPath = Paths.get(s"$outDir/master/wp_failed.json")
     val failed1 = new String(Files.readAllBytes(failedPath), "UTF-8")
@@ -293,10 +298,38 @@ class WpPipelineSpec extends AnyFunSuite {
 
     // img6's host recovers; the re-run fetches it and the stale failure
     // key must disappear (reference assets.js:135-137).
-    FlakyImg6.failing = false
+    FlakyImgs.failing = Set.empty
     orch.runModule("assets")
     val failed2 = new String(Files.readAllBytes(failedPath), "UTF-8")
     assert(!failed2.contains("\"6\""), s"expected id 6 removed from: $failed2")
+
+    // a mixed re-run on both sink paths: the first run (restricted to ids
+    // 5 and 6) dead-letters both; the second heals 5, 6 stays failed and
+    // 7 fails for the first time. Both paths go through one write.
+    val kept = for (bound <- Seq(10000L, 0L)) yield {
+      val out = Files.createTempDirectory("wpmixed").toString
+      val mixed = new Orchestrator(spark, cat, out, FlakyImgs.fetcher,
+        maxDriverManifest = bound)
+      Files.write(Paths.get(s"$out/ids.txt"), "5,6".getBytes("UTF-8"))
+      FlakyImgs.failing = Set("img5", "img6")
+      mixed.runModule("assets", Some(s"$out/ids.txt"))
+      FlakyImgs.failing = Set("img6", "img7")
+      mixed.runModule("assets")
+      val single = Paths.get(s"$out/master/wp_failed.json")
+      val sharded = s"$out/master/wp_failed"
+      assert(Files.exists(single) == (bound > 0) &&
+        Files.exists(Paths.get(sharded)) == (bound == 0), s"bound $bound")
+      val exported = Files.readAllLines(Paths.get(s"$out/logs/assets.log"))
+        .toArray.map(_.toString).filter(_.contains("Exported wp_failed"))
+      assert(exported.length == 2 && exported.last.contains("""\"entries\":2,"""),
+        exported.mkString("\n"))
+      if (Files.exists(single))
+        graft.sinks.KeyedJsonSink.topLevelEntries(
+          new String(Files.readAllBytes(single), "UTF-8")).map(_._1).toSet
+      else graft.sinks.KeyedJsonSink.readSharded(spark, sharded)
+        .collect().map(_.getString(0)).toSet
+    }
+    assert(kept == Seq(Set("6", "7"), Set("6", "7")))
   }
 
   /** Fixture variant: empty permalink_structure + subdirectory siteurl
@@ -366,8 +399,8 @@ class WpPipelineSpec extends AnyFunSuite {
 
   test("lake-scale failure manifest: sharded wp_failed, anti-join heal, no collect") {
     val outDir = Files.createTempDirectory("wplake").toString
-    FlakyImg6.failing = true
-    val orch = new Orchestrator(spark, cat, outDir, FlakyImg6.fetcher,
+    FlakyImgs.failing = Set("img6")
+    val orch = new Orchestrator(spark, cat, outDir, FlakyImgs.fetcher,
       maxDriverManifest = 0)
     orch.runModule("assets")
     val shardDir = s"$outDir/master/wp_failed"
@@ -392,7 +425,7 @@ class WpPipelineSpec extends AnyFunSuite {
     // img6 heals: the re-run has ZERO fresh failures but the sharded
     // state must still anti-join the healed id out (sharded mode is
     // sticky once entered).
-    FlakyImg6.failing = false
+    FlakyImgs.failing = Set.empty
     orch.runModule("assets")
     val m2 = graft.sinks.KeyedJsonSink.readSharded(spark, shardDir)
       .collect().map(_.getString(0)).toSet
@@ -461,8 +494,8 @@ class WpPipelineSpec extends AnyFunSuite {
 
   test("asset failures produce S11 error log lines") {
     val outDir = Files.createTempDirectory("wplogs").toString
-    FlakyImg6.failing = true
-    new Orchestrator(spark, cat, outDir, FlakyImg6.fetcher).runModule("assets")
+    FlakyImgs.failing = Set("img6")
+    new Orchestrator(spark, cat, outDir, FlakyImgs.fetcher).runModule("assets")
     val lines = Files.readAllLines(
       Paths.get(s"$outDir/logs/assets.log")).toArray.map(_.toString)
     val errs = lines.filter(_.contains("\"level\":\"error\""))
