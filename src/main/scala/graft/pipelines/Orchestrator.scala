@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{HttpFetchSink, JsonLogger, KeyedJsonSink}
@@ -87,22 +87,24 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
 
   /** Write one keyed-JSON output, log its `Exported` line (merged count,
     * `fields`, observed bytes, path taken, shard count), return the merged
-    * count and the path taken (`single` or `sharded`). The single
+    * count and, on the single path, the (uid, json) rows it collected
+    * (None on the sharded path). The single
     * pretty-printed file (reference contract) is a driver materialization
     * bounded by maxDriverManifest; past it, or once sharded state exists,
     * entries merge as sharded keyed JSON, and the sharded `manifest`
     * follows the MERGED entry state, so uids absorbed from an earlier
     * small-mode file are never lost. Prior entries named by `removeKeys`
     * are dropped on either path. */
-  private def export(module: String, entries: DataFrame, single: String,
-                     shardedDir: String, manifest: Option[String], logger: JsonLogger,
-                     fields: ListMap[String, Any] = ListMap.empty,
-                     removeKeys: Option[DataFrame] = None): (Long, String) = {
+  private def writeKeyed(module: String, entries: DataFrame, single: String,
+                         shardedDir: String, manifest: Option[String], logger: JsonLogger,
+                         fields: ListMap[String, Any] = ListMap.empty,
+                         removeKeys: Option[DataFrame] = None): (Long, Option[Array[Row]]) = {
     val m = KeyedJsonSink.materialize(entries, "uid")
-    val (n, path, shards) = try {
-      if (m.count <= maxDriverManifest && !shardedExists(shardedDir))
-        (KeyedJsonSink.writeSingle(m, single, manifest, removeKeys), "single", 0)
-      else {
+    val (n, collected, shards) = try {
+      if (m.count <= maxDriverManifest && !shardedExists(shardedDir)) {
+        val rows = m.rows.collect()
+        (KeyedJsonSink.writeSingle(rows, single, manifest, removeKeys), Some(rows), 0)
+      } else {
         val merged = KeyedJsonSink.mergeSharded(m, shardedDir, removeKeys, Some(single))
         manifest.foreach { file =>
           KeyedJsonSink.mergeSharded(KeyedJsonSink.readSharded(spark, shardedDir)
@@ -110,12 +112,13 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
             "uid", file.stripSuffix(".json") + "-sharded")
           Files.deleteIfExists(Paths.get(file))
         }
-        (merged.rows, "sharded", merged.shards)
+        (merged.rows, None, merged.shards)
       }
     } finally m.release()
     logger.log(s"Exported $module", ListMap("entries" -> n) ++ fields ++
-      ListMap("bytes" -> m.bytes, "path" -> path, "shards" -> shards))
-    (n, path)
+      ListMap("bytes" -> m.bytes, "path" -> collected.fold("sharded")(_ => "single"),
+        "shards" -> shards))
+    (n, collected)
   }
 
   /** Run one module end-to-end: entries → keyed-JSON sink + master
@@ -125,7 +128,7 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
     val logger = new JsonLogger(s"$outDir/logs", module)
     val df = restrict(conform(entries(module), module), module, idFile)
     if (module == "assets") exportAssets(df, logger)
-    else export(module, df, s"$outDir/entries/$module/en-us.json",
+    else writeKeyed(module, df, s"$outDir/entries/$module/en-us.json",
       s"$outDir/entries/$module/sharded",
       Some(s"$outDir/master/entries/$module.json"), logger)._1
   }
@@ -148,23 +151,26 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
       // prior dead-letter state as the new failures merge in, on either
       // sink path.
       val failedDir = s"$outDir/master/wp_failed"
-      val (_, path) = export("wp_failed",
+      val (_, dead) = writeKeyed("wp_failed",
         HttpFetchSink.deadLetter(results).withColumn("uid", col("id")),
         s"$failedDir.json", failedDir, None, logger, removeKeys = Some(okIds))
-      // per-asset error lines only beside the bounded single file: at
-      // sharded scale a per-row log line IS a driver materialization in
-      // disguise, so the log carries the aggregate count.
-      if (failed > 0) {
-        if (path == "single")
-          HttpFetchSink.deadLetter(results).collect().foreach(r =>
-            logger.error("Failed to download asset", Map("id" -> r.getLong(0),
-              "url" -> r.getString(1), "error" -> r.getString(2))))
-        else logger.error("Failed to download assets",
+      // per-asset error lines only beside the bounded single file, from
+      // the dead-letter rows it collected: at sharded scale a per-row log
+      // line IS a driver materialization in disguise, so the log carries
+      // the aggregate count.
+      if (failed > 0) dead match {
+        case Some(rows) => rows.foreach { r =>
+          val f = KeyedJsonSink.topLevelEntries(r.getString(1)).toMap
+          def str(k: String) = f.get(k).map(KeyedJsonSink.unquote).orNull
+          logger.error("Failed to download asset", Map("id" -> r.getString(0).toLong,
+            "url" -> str("url"), "error" -> str("error")))
+        }
+        case None => logger.error("Failed to download assets",
           Map("failed" -> failed, "manifest" -> failedDir))
       }
       // the ok-asset entries file is a driver materialization too: same
       // scale split as every other entries sink.
-      export("assets", df.join(okIds, "uid", "left_semi"),
+      writeKeyed("assets", df.join(okIds, "uid", "left_semi"),
         s"$outDir/assets/assets.json", s"$outDir/assets/sharded", None, logger,
         ListMap("failed" -> failed))._1
     } finally KeyedJsonSink.release(results)

@@ -6,10 +6,13 @@ import java.nio.file.{AtomicMoveNotSupportedException, Files, Path, Paths, Stand
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** S7/S8 — keyed-JSON entry sink: a single JSON object keyed by uid, not
@@ -31,7 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    shard count follows the state's size ([[shardCount]]: one shard per
   *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, 1 to
   *    [[MaxShards]]), because every committed file has a fixed cost that
-  *    a small state should not pay 64 times.
+  *    a small state should not pay 64 times. This object owns the layout
+  *    both ways: [[writeShardFiles]] writes it and [[readSharded]] reads
+  *    it back, opening only the shard files a uid lookup can hit.
   *
   * Both modes share one remove-on-success contract (the dead-letter heal,
   * reference assets.js:135-137): `removeKeys` names ids whose PRIOR
@@ -118,8 +123,8 @@ object KeyedJsonSink {
     sb.toString
   }
 
-  private def unescapeKey(raw: String): String = {
-    // raw includes the surrounding quotes
+  /** Decode a JSON string literal, quotes included. */
+  private[graft] def unquote(raw: String): String = {
     val s = raw.substring(1, raw.length - 1)
     val sb = new StringBuilder(s.length)
     var i = 0
@@ -172,7 +177,7 @@ object KeyedJsonSink {
         i += 1
       }
       i += 1 // closing quote
-      val key = unescapeKey(s.substring(kStart, i))
+      val key = unquote(s.substring(kStart, i))
       skipWs()
       if (i >= s.length || s(i) != ':') return out.toSeq
       i += 1
@@ -229,22 +234,22 @@ object KeyedJsonSink {
   def writeSingle(entries: DataFrame, uidCol: String, path: String,
                   removeKeys: Option[DataFrame] = None): Long = {
     val m = materialize(entries, uidCol)
-    try writeSingle(m, path, None, removeKeys)
+    try writeSingle(m.rows.collect(), path, None, removeKeys)
     finally m.release()
   }
 
-  /** Merge `entries` into the keyed-JSON file at `path` (new rows win;
-    * prior entries named by `removeKeys` are dropped — see the class doc),
-    * write pretty-printed atomically, return the merged row count.
+  /** Merge the collected (uid, json) `rows` of a [[materialize]] into the
+    * keyed-JSON file at `path` (new rows win; prior entries named by
+    * `removeKeys` are dropped — see the class doc), write pretty-printed
+    * atomically, return the merged row count.
     * Driver-side by design — see class doc. Entries absent from the delta
     * keep their raw JSON text. `removeKeys` is looked up only among the
     * prior file's keys, in one bounded collect; no job runs when the prior
-    * file is empty. The same collect of `entries` writes the master
+    * file is empty. The same `rows` write the master
     * manifest (S8) {"en-us": {uid: ""}} (reference: authors.js:34,52) in
     * Spark's string order (UTF-8 bytes), not Java's. */
-  def writeSingle(entries: Materialized, path: String, manifest: Option[String],
+  def writeSingle(rows: Array[Row], path: String, manifest: Option[String],
                   removeKeys: Option[DataFrame]): Long = {
-    val rows = entries.rows.collect()
     val fresh = rows.map(r => r.getString(0) -> r.getString(1))
       .toMap // dedup within the delta: last collected row wins
     val p = Paths.get(path)
@@ -286,19 +291,24 @@ object KeyedJsonSink {
   /** A sharded write's row count (observed on the write) and shard count. */
   final case class Sharded(rows: Long, shards: Int)
 
-  /** Sidecar file recording the writer's shard count, so readers
-    * ([[graft.sources.KeyedJsonSource]]) can prune shards without
-    * trusting a caller-supplied `shards` option — a wrong option would
-    * otherwise open the wrong files and silently return incomplete
-    * results for point lookups. Underscore prefix keeps it invisible to
-    * Spark's file listing (and to [[readSharded]]). */
+  /** Sidecar file recording the writer's shard count, so [[readSharded]]
+    * prunes by the count the files were written with, never a guess.
+    * Underscore prefix keeps it invisible to Spark's file listing. */
   private[graft] val ShardSidecar = "_graft_shards"
+
+  /** The writer-side shard of a uid: replays exactly what
+    * `repartition(shards, col("uid"))` computed — Catalyst's
+    * HashPartitioning, pmod(Murmur3Hash(seed=42), shards) — by evaluating
+    * that expression rather than re-implementing it. */
+  def shardOf(uid: String, shards: Int): Int =
+    Pmod(new Murmur3Hash(Seq(Literal(UTF8String.fromString(uid), StringType))),
+      Literal(shards, IntegerType)).eval(InternalRow.empty).asInstanceOf[Int]
 
   /** Write (uid, json) rows that are ALREADY hash-partitioned on uid into
     * `shards` partitions: Spark names each file after its task's
     * partition, so part-NNNNN holds exactly the uids with
-    * pmod(murmur3(uid), shards) = NNNNN — the layout
-    * [[graft.sources.KeyedJsonSource]] prunes by. Returns the number of
+    * [[shardOf]](uid, shards) = NNNNN — the layout [[readSharded]] prunes
+    * by — and the [[ShardSidecar]] records `shards`. Returns the number of
     * lines written, observed on the write itself. */
   private def writeShardFiles(partitioned: DataFrame, dir: String,
                               shards: Int): Sharded = {
@@ -316,14 +326,63 @@ object KeyedJsonSink {
     Sharded(written.get("rows").asInstanceOf[Long], shards)
   }
 
-  /** Read a sharded dir back as (uid, json) rows. `to_json` escapes tabs
-    * and newlines inside values, so the FIRST tab of each line is the
-    * separator (uids themselves must not contain tabs — they are ids,
-    * logins and slugs in every pipeline). */
-  def readSharded(spark: SparkSession, dir: String): DataFrame =
-    spark.read.text(dir).select(
+  /** Read a sharded dir back as (uid, json) rows — the one parser of the
+    * line format. `to_json` escapes tabs and newlines inside values, so
+    * the FIRST tab of each line is the separator (uids themselves must not
+    * contain tabs — they are ids, logins and slugs in every pipeline); a
+    * line with no tab or an empty uid is skipped.
+    *
+    * With `uids`, only the rows of those uids come back, read from only
+    * the part files they hash to under the [[ShardSidecar]]'s count
+    * ([[shardOf]]): a point lookup reads one file at any state size. Part
+    * names that don't parse are always read. A missing sidecar, or a part
+    * index at or past its count (a stale sidecar over a rewritten dir,
+    * which would prune away the rows living in the higher parts), reads
+    * every file. */
+  def readSharded(spark: SparkSession, dir: String,
+                  uids: Option[Set[String]] = None): DataFrame = uids match {
+    case None => parse(spark.read.text(dir))
+    case Some(wanted) =>
+      val files = shardFiles(spark, dir, wanted)
+      if (files.isEmpty) {
+        import spark.implicits._
+        Seq.empty[(String, String)].toDF("uid", "json")
+      } else parse(spark.read.text(files: _*))
+        .filter(col("uid").isin(wanted.toSeq: _*))
+  }
+
+  private def parse(lines: DataFrame): DataFrame =
+    lines.filter(instr(col("value"), "\t") > 1).select(
       substring_index(col("value"), "\t", 1).as("uid"),
       expr("substring(value, instr(value, '\t') + 1)").as("json"))
+
+  private val PartIdx = "part-(\\d+)".r
+
+  /** The part files of `dir` that can hold `uids` (see [[readSharded]]),
+    * from one Hadoop FS listing. */
+  private def shardFiles(spark: SparkSession, dir: String,
+                         uids: Set[String]): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = fs.listStatus(p).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).toSeq
+    // toIntOption: an over-long digit run escapes pruning like any other
+    // unparseable name
+    val idx = files.map(f => PartIdx.findPrefixMatchOf(f.getName)
+      .flatMap(_.group(1).toIntOption))
+    val sidecar = new org.apache.hadoop.fs.Path(p, ShardSidecar)
+    val shards = if (!fs.exists(sidecar)) None else {
+      val in = fs.open(sidecar)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toIntOption
+      finally in.close()
+    }
+    shards.filter(n => n > 0 && idx.flatten.forall(_ < n)) match {
+      case Some(n) =>
+        val wanted = uids.map(shardOf(_, n))
+        files.zip(idx).collect { case (f, i) if i.forall(wanted) => f.toString }
+      case None => files.map(_.toString)
+    }
+  }
 
   /** The distributed analog of [[writeSingle]]'s read-modify-write:
     * merge `delta` into the shards at `dir` with last-wins per uid

@@ -6,16 +6,17 @@ import org.apache.spark.sql.functions._
 import graft.sinks.KeyedJsonSink
 
 /** Point-lookup bench against a PRODUCTION-SIZED sharded keyed-JSON lake:
-  * ties the DSv2 reader's shard pruning (KeyedJsonSourceSpec proves it at
-  * 1k entries) to the sharded sink path at the 1M-entry size PipelineBench
-  * proved for writes (round-11 verdict stretch item). Generates N entries
-  * distributed (no driver loop), writes the sharded lake, then measures:
+  * ties `readSharded`'s shard pruning (ShardedReadSpec proves it at 1k
+  * entries) to the sharded sink path at the 1M-entry size PipelineBench
+  * proved for writes. Generates N entries distributed (no driver loop),
+  * writes the sharded lake, then measures:
   *
-  *  - point lookup WITH pruning (DSv2): must open exactly 1 shard file —
-  *    asserted on `rdd.getNumPartitions`, not argued;
-  *  - the same lookup over the naive full-scan path (readSharded +
-  *    filter): opens every shard — the contrast that justifies the DSv2
-  *    reader at lake sizes;
+  *  - a point lookup WITH pruning (`readSharded(spark, dir, Some(uids))`):
+  *    must read exactly 1 shard file — asserted on `inputFiles`, not
+  *    argued;
+  *  - the same lookup unpruned (`readSharded(spark, dir)` + filter): reads
+  *    every shard file — the contrast that justifies pruning at lake
+  *    sizes;
   *  - a full-lake count (the sanity row count).
   *
   * Usage: runMain graft.tools.LakeLookupBench [nEntries] [advisoryBytes]
@@ -47,34 +48,31 @@ object LakeLookupBench {
     val shards = KeyedJsonSink.mergeSharded(entries, "uid", dir).shards
     val tWrite = (System.nanoTime() - t0) / 1e9
 
-    val fmt = "graft.sources.KeyedJsonSource"
-    val v2 = spark.read.format(fmt).option("path", dir).load()
-
-    // point lookup via DSv2: the reader must prune to ONE shard file
+    // point lookup: the pruned read must open ONE shard file
     val probe = s"uid${n / 2}"
-    val one = v2.filter($"uid" === probe)
-    val pruned = one.rdd.getNumPartitions
+    val one = KeyedJsonSink.readSharded(spark, dir, Some(Set(probe)))
+    val pruned = one.inputFiles.length
     require(pruned == 1,
-      s"point lookup opened $pruned of $shards shards — pruning regressed")
+      s"point lookup read $pruned of $shards shard files — pruning regressed")
     val t1 = System.nanoTime()
     val hit = one.collect()
     val tPoint = (System.nanoTime() - t1) / 1e9
     require(hit.length == 1 && hit.head.getString(0) == probe,
       s"lookup returned ${hit.length} rows")
 
-    // contrast: the same lookup without the DSv2 reader (full scan)
+    // contrast: the same lookup without pruning (full scan)
     val t2 = System.nanoTime()
-    val brute = KeyedJsonSink.readSharded(spark, dir)
-      .filter($"uid" === probe).collect()
+    val all = KeyedJsonSink.readSharded(spark, dir)
+    val brute = all.filter($"uid" === probe).collect()
     val tScan = (System.nanoTime() - t2) / 1e9
     require(brute.length == 1)
 
     val t3 = System.nanoTime()
-    val total = v2.count()
+    val total = all.count()
     val tCount = (System.nanoTime() - t3) / 1e9
     require(total == n, s"lake holds $total of $n entries")
 
-    println(f"""{"metric":"lake_point_lookup","n_entries":$n,"shards":$shards,"pruned_partitions":$pruned,"write_sec":$tWrite%.2f,"point_lookup_sec":$tPoint%.3f,"full_scan_lookup_sec":$tScan%.2f,"count_sec":$tCount%.2f}""")
+    println(f"""{"metric":"lake_point_lookup","n_entries":$n,"shards":$shards,"pruned_files":$pruned,"write_sec":$tWrite%.2f,"point_lookup_sec":$tPoint%.3f,"full_scan_lookup_sec":$tScan%.2f,"count_sec":$tCount%.2f}""")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     spark.stop()
   }

@@ -177,21 +177,40 @@ class SinkHardeningSpec extends AnyFunSuite {
   }
 
   test("mergeSharded self-heals an interrupted swap from the .old backup") {
-    val dir = Files.createTempDirectory("shardheal")
-    val shardDir = dir.resolve("state").toString
-    withAdvisory("16b") {
-      assert(KeyedJsonSink.mergeSharded(Seq(("a", "1"), ("b", "2")).toDF("uid", "x"),
-        "uid", shardDir).shards > 1)
-      // simulate a crash that landed between rename(dir -> .old) and
-      // rename(tmp -> dir): live dir missing, backup present
-      Files.move(Paths.get(shardDir), Paths.get(shardDir + ".old"))
-      KeyedJsonSink.mergeSharded(Seq(("c", "3")).toDF("uid", "x"), "uid", shardDir)
+    // Two crash windows of the previous merge, each rebuilt on disk: a
+    // crash between rename(dir -> .old) and rename(tmp -> dir) leaves the
+    // live dir missing and the backup present; a crash during the shard
+    // write leaves a `.tmp-*` sibling holding a stale shard. Either way the
+    // next merge must equal an uninterrupted run, and no read of the
+    // state may return the stale rows.
+    val stale = Seq(("a", "stale"), ("z", "stale")).toDF("uid", "x")
+    def run(crash: String => Unit): Map[String, String] = {
+      val shardDir = Files.createTempDirectory("shardheal").resolve("state").toString
+      withAdvisory("16b") {
+        assert(KeyedJsonSink.mergeSharded(Seq(("a", "1"), ("b", "2")).toDF("uid", "x"),
+          "uid", shardDir).shards > 1)
+        crash(shardDir)
+        KeyedJsonSink.mergeSharded(Seq(("c", "3")).toDF("uid", "x"), "uid", shardDir)
+      }
+      assert(!Files.exists(Paths.get(shardDir + ".old")))
+      Seq("a", "z").foreach { u =>
+        assert(KeyedJsonSink.readSharded(spark, shardDir, Some(Set(u))).collect()
+          .forall(!_.getString(1).contains("stale")), s"stale row for $u")
+      }
+      shardedKeys(shardDir)
     }
-    val got = KeyedJsonSink.readSharded(spark, shardDir).collect()
-      .map(_.getString(0)).toSet
-    assert(got == Set("a", "b", "c"),
-      s"expected pre-crash state recovered from .old, got $got")
-    assert(!Files.exists(Paths.get(shardDir + ".old")))
+    val clean = run(_ => ())
+    assert(clean.keySet == Set("a", "b", "c"))
+    val swap = run(d => Files.move(Paths.get(d), Paths.get(d + ".old")))
+    assert(swap == clean, s"expected pre-crash state recovered from .old, got $swap")
+    val leftover = run { d =>
+      // a stale shard of the same layout, in the sibling a crashed write
+      // would have left
+      val tmp = d + ".tmp-dead0000"
+      KeyedJsonSink.mergeSharded(stale, "uid", tmp)
+      assert(partFiles(tmp).nonEmpty)
+    }
+    assert(leftover == clean, s"a leftover .tmp-* changed the merge: $leftover")
   }
 
   private def partFiles(dir: String): Seq[java.io.File] =
@@ -209,7 +228,7 @@ class SinkHardeningSpec extends AnyFunSuite {
       assert(idx < n, s"${f.getName} beyond $n shards")
       Files.readAllLines(f.toPath).forEach { l =>
         val uid = l.takeWhile(_ != '\t')
-        assert(graft.sources.KeyedJsonSource.shardOf(uid, n) == idx,
+        assert(KeyedJsonSink.shardOf(uid, n) == idx,
           s"uid $uid in ${f.getName}")
       }
     }
@@ -341,7 +360,7 @@ class SinkHardeningSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("manifest")
     val manifest = dir.resolve("master.json")
     val m = KeyedJsonSink.materialize(df, "uid")
-    try assert(KeyedJsonSink.writeSingle(m, dir.resolve("en-us.json").toString,
+    try assert(KeyedJsonSink.writeSingle(m.rows.collect(), dir.resolve("en-us.json").toString,
       Some(manifest.toString), None) == 5) finally m.release()
     assert(Files.readAllBytes(manifest).sameElements(want.getBytes(StandardCharsets.UTF_8)))
   }
