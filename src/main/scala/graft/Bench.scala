@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every bench-flagged query from the catalog on
   * SPARK_GRAFT_SF_DIR, materializing each with a `noop` write (forces the
   * full plan — a bare count() would let Catalyst prune projections and
@@ -44,8 +42,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
+    // optional comma-separated name filter for focused re-measures
+    // (e.g. SPARK_GRAFT_BENCH_ONLY=q81,q83) with the full artifact
+    // instrumentation; unset = every bench-flagged query
+    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(v => SparkEntry.selectOrExit(v.split(",").toSeq))
+      .getOrElse(SparkEntry.benchQueries)
     // inter-query quiesce (ms) — absorbs async cache/shuffle cleanup so
     // it lands between measurements, not inside them. 0 disables.
     val settleMs = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_MS", "200").toLong
@@ -56,21 +59,7 @@ object Bench {
     // to shuffle-probe spikes from exactly this shared-/tmp contention.
     val benchLocalDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
       java.nio.file.Files.createTempDirectory("graft-bench-local-").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", benchLocalDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // the compiled-codegen cache holds 100 classes by default — far
-      // fewer than a 101-query catalog generates. Evictions make later
-      // runs of an UNCHANGED plan (incl. the calibration probe) re-pay
-      // Janino compilation (~0.1-0.4 s), which reads as position-pinned
-      // noise. Static conf, so it must be set before session creation.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("spark.local.dir" -> benchLocalDir)
     // optional two-path override (round-15): forcing the driver-rows cap
     // lets a focused window measure the DISTRIBUTED arm of a two-path
     // operator at an SF where the default cap would route it to the
@@ -148,17 +137,6 @@ object Bench {
       }
     }
 
-    // optional comma-separated substring filter for focused re-measures
-    // (e.g. SPARK_GRAFT_BENCH_ONLY=q81,q83); empty = full catalog
-    val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "").split(",")
-      .map(_.trim).filter(_.nonEmpty)
-    // focused-subset support (comma-separated names): single-query A/B
-    // with the FULL artifact instrumentation (metrics, probes, canon
-    // adjudication) that BenchOne's bare timing loop lacks.
-    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-      .getOrElse(SparkEntry.benchQueries)
-      .filter(n => only.isEmpty || only.exists(n.contains))
     // per-query JVM diagnostics to stderr (codecache/metaspace/GC/local
     // dir growth) — DEFAULT ON since round 12 (stderr is free; the two
     // rounds of unattributed driver-window elevations are exactly the

@@ -1,81 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `explain("formatted")` for selected queries so
   * pushdown/broadcast/codegen can be inspected (and greps for the
-  * markers). Usage: runMain graft.Explain [sfDir] [queryName...]
+  * markers). Usage: runMain graft.Explain [sfDir] [nameFilter...]
+  * (each filter selects the catalog names containing it; none = all).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.drop(1).toSeq
-                else Seq("q01_pricing_summary", "q02_filter_project",
-                         "q03_join_agg", "q08_group_concat", "q36_minhash_lsh",
-                         "q45_knn_ivf", "q52_neardup_multiprobe",
-                         "q62_reservoir_sample", "q63_repetition",
-                         "q64_knn_pq", "q67_ingest_dedup", "q68_knn_ivfpq",
-                         "q70_boilerplate_strip", "q73_unigram_logprob",
-                         "q74_semantic_dedup", "q75_budget_select",
-                         "q77_window_dedup", "q79_vocab_oov",
-                         "q80_adaptive_threshold", "q81_bloom_decontam",
-                         "q82_salted_join", "q83_topp_select",
-                         "q86_countmin_freq", "q87_hll_relational",
-                         "q91_regional_revenue", "q100_pipeline_v2",
-                         "q103_excerpt_pairs", "q126_paragraph_dedup",
-                         "q129_char_entropy", "q131_split_leakage",
-                         "q132_stride_chunk", "q133_zipf_decay",
-                         "q134_source_dup_matrix", "q135_embedding_outliers",
-                         "q138_semantic_leakage", "q139_link_pagerank",
-                         "q140_cdc_chunks", "q141_hard_negatives",
-                         "q142_robust_outliers", "q143_ks_drift",
-                         "q144_snapshot_diff", "q145_distribution_match",
-                         "q146_rare_group_suppress", "q147_tokenizer_fertility",
-                         "q148_shard_balance", "q149_bloom_join_prune",
-                         "q150_hll_merge", "q151_pii_audit",
-                         "q152_dense_ids", "q153_group_folds",
-                         "q154_setsim_join",
-                         "q155_hits_centrality", "q156_heaps_growth",
-                         "q157_centroid_drift", "q158_range_frame",
-                         "q159_join_size_sketch", "q160_source_datasheet",
-                         "q161_pareto_skyline", "q162_scd2_intervals",
-                         "q163_attribution", "q164_fk_integrity",
-                         "q165_rbo_rankings", "q166_budget_apportion",
-                         "q167_scd2_probe", "q168_triangle_count",
-                         "q169_markov_transitions",
-                         "q170_quantile_normalize", "q171_anchor_terms",
-                         "q172_skipgram_ppmi",
-                         "q173_basket_lift", "q174_ab_readout",
-                         "q175_noisy_release", "q176_calibration_curve",
-                         "q177_fuzzy_match", "q178_seasonality",
-                         "q179_golden_record", "q180_mass_quantiles",
-                         "q181_skew_report", "q182_upsert_merge",
-                         "q183_trend_slope", "q184_bootstrap_ci",
-                         "q185_lateness_histogram", "q186_column_profile",
-                         "q187_asof_nearest", "q188_file_prune_stats",
-                         "q189_path_mining", "q190_wow_growth",
-                         "q191_rrf_fusion", "q192_energy_compaction",
-                         "q193_kcore", "q194_benford_drift",
-                         "q195_kappa_agreement", "q196_variance_alloc",
-                         "q197_activity_gini", "q198_dim_collapse",
-                         "q199_persistent_parts", "q200_fano_burstiness",
-                         "q201_sample_size", "q202_information_value",
-                         "q203_embedding_covariance", "q204_blocking_efficiency",
-                         "q205_effective_tokens", "q206_index_compression",
-                         "q207_source_kl", "q208_item_cooccurrence",
-                         "q209_cluster_cohesion", "q210_multiplicity_audit",
-                         "q211_purged_folds", "q212_knn_label_noise",
-                         "q213_reconciliation", "q214_delete_impact",
-                         "q215_salt_advisor", "q216_watermark_advisor",
-                         "q217_threshold_sweep", "q218_metric_comovement",
-                         "q219_conformal_threshold", "q220_quality_scorecard")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = SparkEntry.selectOrExit(args.drop(1).toSeq)
+    val spark = Sessions.local()
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(

@@ -12,8 +12,10 @@ import graft.operators._
   */
 object SparkEntry {
 
-  /** All registered query modules, in SURVEY.md §2 order. */
-  def modules: Seq[Q] =
+  /** All registered query modules, in SURVEY.md §2 order. Built once per
+    * JVM, like the maps below (a rebuild costs tens of milliseconds): no
+    * Q reads session or environment state when it is constructed. */
+  lazy val modules: Seq[Q] =
     RelationalQueries.qs ++ ScalarFnQueries.qs ++ TextQueries.qs ++
       DedupQueries.qs ++ CorpusQueries.qs ++ SimilarityQueries.qs ++
       MultimodalQueries.qs ++ ExtensionQueries.qs ++ CleaningQueries.qs ++
@@ -27,12 +29,12 @@ object SparkEntry {
     queries("q100_pipeline_v2")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     modules.flatMap(q => q.oracle.map(sql => q.name -> sql.trim)).toMap
 
   /** Like [[oracleSql]], but scale-adaptive: queries with a dynamic
@@ -46,5 +48,27 @@ object SparkEntry {
     }.toMap
 
   /** Names of queries included in the benchmark run. */
-  def benchQueries: Seq[String] = modules.filter(_.bench).map(_.name)
+  lazy val benchQueries: Seq[String] = modules.filter(_.bench).map(_.name)
+
+  /** The harnesses' query selection: the catalog names, in catalog order,
+    * that contain any of the trimmed, non-empty `filters`; every name
+    * when there are none. */
+  def select(filters: Seq[String]): Seq[String] = {
+    val fs = filters.map(_.trim).filter(_.nonEmpty)
+    modules.map(_.name).filter(n => fs.isEmpty || fs.exists(n.contains))
+  }
+
+  /** [[select]] for a main's command line: exits 1, naming them, when
+    * any filter matches no query, so a typo never runs a partial or
+    * empty selection. */
+  def selectOrExit(filters: Seq[String]): Seq[String] = {
+    val unmatched = filters.map(_.trim)
+      .filter(f => f.nonEmpty && select(Seq(f)).isEmpty)
+    if (unmatched.nonEmpty) {
+      System.err.println(
+        s"no catalog query name contains: ${unmatched.mkString(", ")}")
+      sys.exit(1)
+    }
+    select(filters)
+  }
 }

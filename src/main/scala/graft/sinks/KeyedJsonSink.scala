@@ -402,7 +402,9 @@ object KeyedJsonSink {
     * like [[atomicWrite]]'s file move (no Hadoop FS offers an atomic
     * directory swap), so concurrent readers must tolerate a brief
     * absence; every crash window leaves a recoverable copy (`.old` or
-    * `.tmp-*`), never zero. */
+    * `.tmp-*`), never zero. The sink assumes a single writer per `dir`:
+    * a merge restores a parked `.old` and deletes every `<dir>.tmp-*`
+    * sibling, which would destroy a concurrent writer's work. */
   def mergeSharded(delta: DataFrame, uidCol: String, dir: String,
                    removeKeys: Option[DataFrame] = None,
                    legacyFile: Option[String] = None): Sharded = {
@@ -425,6 +427,15 @@ object KeyedJsonSink {
     // later .old cleanup would destroy the only backup.
     if (!fs.exists(hPath) && fs.exists(oldPath) && !fs.rename(oldPath, hPath))
       throw new java.io.IOException(s"recovering $oldPath -> $dir failed")
+    // a `.tmp-*` sibling is a crashed shard write's partial copy: no reader
+    // looks at it, so only the single writer can reclaim it. Matched by
+    // name prefix, not a glob: `dir` may hold glob metacharacters.
+    val tmpPrefix = hPath.getName + ".tmp-"
+    val parent = hPath.getParent
+    if (fs.exists(parent))
+      fs.listStatus(parent).map(_.getPath)
+        .filter(_.getName.startsWith(tmpPrefix))
+        .foreach(fs.delete(_, true))
     val existingParts =
       if (fs.exists(hPath))
         fs.listStatus(hPath).filter(_.getPath.getName.startsWith("part-"))

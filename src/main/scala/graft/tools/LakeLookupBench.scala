@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.sinks.KeyedJsonSink
 
 /** Point-lookup bench against a PRODUCTION-SIZED sharded keyed-JSON lake:
@@ -22,18 +22,15 @@ import graft.sinks.KeyedJsonSink
   * Usage: runMain graft.tools.LakeLookupBench [nEntries] [advisoryBytes]
   * (`advisoryBytes` sets `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
   * which sizes the shard count like every sharded write; default 1m).
-  * Prints ONE JSON line.
+  * Runs on the harness session ([[graft.Sessions.local]]: SPARK_GRAFT_CPUS
+  * cores, default every core), so the shard count does not depend on the
+  * core count. Prints ONE JSON line.
   */
 object LakeLookupBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        args.lift(1).getOrElse("1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+      args.lift(1).getOrElse("1m"))
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("graft_lake").toString

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Full-export throughput bench: generates a WordPress-shaped dataset at
@@ -17,16 +16,14 @@ import org.apache.spark.sql.functions._
   * automatically take the sharded keyed-JSON lake path, so the run also
   * exercises the scale branch end-to-end.
   *
-  * Usage: runMain graft.tools.PipelineBench [nPosts]
+  * Usage: runMain graft.tools.PipelineBench [nPosts], on the harness
+  * session ([[graft.Sessions.local]]: SPARK_GRAFT_CPUS cores, default
+  * every core).
   */
 object PipelineBench {
   def main(args: Array[String]): Unit = {
     val nPosts = args.headOption.map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     import spark.implicits._
 
     val nUsers = math.max(nPosts / 50, 1)

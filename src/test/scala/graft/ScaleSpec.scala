@@ -19,6 +19,11 @@ class ScaleSpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet == SparkEntry.modules.map(_.name).toSet)
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.benchQueries.toSet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.queries eq SparkEntry.queries, "the registry is rebuilt per call")
+    assert(SparkEntry.select(Seq("q81")) == Seq("q81_bloom_decontam"))
+    assert(SparkEntry.select(Seq(" q77 ", "")) == Seq("q77_window_dedup"))
+    assert(SparkEntry.select(Seq("nope")).isEmpty)
+    assert(SparkEntry.select(Seq()) == SparkEntry.modules.map(_.name))
   }
 
   test("GraftExtensions injects encode_uri at session build time") {

@@ -203,14 +203,16 @@ class SinkHardeningSpec extends AnyFunSuite {
     assert(clean.keySet == Set("a", "b", "c"))
     val swap = run(d => Files.move(Paths.get(d), Paths.get(d + ".old")))
     assert(swap == clean, s"expected pre-crash state recovered from .old, got $swap")
+    var tmp = ""
     val leftover = run { d =>
       // a stale shard of the same layout, in the sibling a crashed write
       // would have left
-      val tmp = d + ".tmp-dead0000"
+      tmp = d + ".tmp-dead0000"
       KeyedJsonSink.mergeSharded(stale, "uid", tmp)
       assert(partFiles(tmp).nonEmpty)
     }
     assert(leftover == clean, s"a leftover .tmp-* changed the merge: $leftover")
+    assert(!Files.exists(Paths.get(tmp)), s"the crashed write's $tmp survived the merge")
   }
 
   private def partFiles(dir: String): Seq[java.io.File] =
