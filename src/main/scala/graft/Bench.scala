@@ -57,8 +57,15 @@ object Bench {
     // same window (the driver's DuckDB oracle, parquet dumps, other
     // JVMs) — the round-12 adjudications attributed q222/q36 elevations
     // to shuffle-probe spikes from exactly this shared-/tmp contention.
-    val benchLocalDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      java.nio.file.Files.createTempDirectory("graft-bench-local-").toString)
+    // A directory Bench made is removed on every exit path, sys.exit and
+    // exceptions included; priority 0 runs after Spark's shutdown hooks,
+    // which may still write under it.
+    val benchLocalDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
+      val dir = java.nio.file.Files.createTempDirectory("graft-bench-local-").toFile
+      org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+        () => org.apache.commons.io.FileUtils.deleteQuietly(dir), 0)
+      dir.toString
+    })
     val spark = Sessions.local("spark.local.dir" -> benchLocalDir)
     // optional two-path override (round-15): forcing the driver-rows cap
     // lets a focused window measure the DISTRIBUTED arm of a two-path

@@ -1285,14 +1285,7 @@ object AnalyticsQueries extends QueryModule {
       val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
       val itemN = baskets.select(explode($"its").as("item"))
         .groupBy($"item").agg(count(lit(1)).as("n_item"))
-      baskets
-        .select(explode(expr(
-          """flatten(transform(its, (a, i) ->
-            |  transform(slice(its, i + 2, size(its)),
-            |    b -> struct(a as item_a, b as item_b))))""".stripMargin))
-          .as("p"))
-        .select($"p.item_a".as("item_a"), $"p.item_b".as("item_b"))
-        .groupBy($"item_a", $"item_b").agg(count(lit(1)).as("n_ab"))
+      PairOps.pairCounts(baskets, "its", "item_a", "item_b", "n_ab")
         .filter($"n_ab" >= 5)
         .join(itemN.select($"item".as("item_a"), $"n_item".as("n_a")),
           "item_a")
@@ -2359,13 +2352,7 @@ object AnalyticsQueries extends QueryModule {
         .groupBy($"ok")
         .agg(sort_array(collect_set($"pk")).as("ps"))
         .persist()
-      val pairs = baskets
-        .select(explode(expr(
-          """flatten(transform(ps, (a, i) ->
-            |  transform(slice(ps, i + 2, size(ps)),
-            |    b -> struct(a as pa, b as pb))))""".stripMargin)).as("p"))
-        .groupBy($"p.pa".as("pa"), $"p.pb".as("pb"))
-        .agg(count(lit(1)).as("cab"))
+      val pairs = PairOps.pairCounts(baskets, "ps", "pa", "pb", "cab")
         .filter($"cab" >= 3)
       val sup = baskets.select(explode($"ps").as("pk"))
         .groupBy($"pk").agg(count(lit(1)).as("c"))

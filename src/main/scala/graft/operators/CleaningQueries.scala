@@ -40,13 +40,9 @@ object CleaningQueries extends QueryModule {
       // fp keeper window below is the first (and only corpus) shuffle.
       val paras = t(s, d, "documents")
         .select($"doc_id", TextOps.tokens($"text").as("__toks"))
-        .select($"doc_id", posexplode(expr(
-          """flatten(transform(array(__toks), tk ->
-            |  transform(sequence(0, (size(tk) - 1) div 25),
-            |    k -> struct(
-            |      size(slice(tk, k * 25 + 1, 25)) as n,
-            |      md5(array_join(slice(tk, k * 25 + 1, 25), ' ')) as fp))))"""
-            .stripMargin)).as(Seq("k", "c")))
+        .select($"doc_id", posexplode(TextOps.chunks($"__toks", 25, 25)(ck =>
+          struct(size(ck).as("n"), md5(array_join(ck, " ")).as("fp"))))
+          .as(Seq("k", "c")))
         .select($"doc_id", $"k".cast("long").as("para_id"),
           $"c.n".cast("long").as("n_toks"), $"c.fp".as("fp"))
       val w = Window.partitionBy($"fp").orderBy($"doc_id".asc, $"para_id".asc)
@@ -288,17 +284,11 @@ object CleaningQueries extends QueryModule {
     // token order).
     Q("q132_stride_chunk", (s, d) => {
       import s.implicits._
-      // toks bound once through the lambda variable (r15 unbound-split
-      // lesson: HOFs re-evaluate unbound child expressions per element)
       t(s, d, "documents")
         .select($"doc_id", TextOps.tokens($"text").as("__toks"))
-        .select($"doc_id", posexplode(expr(
-          """flatten(transform(array(__toks), tk ->
-            |  transform(sequence(0, (size(tk) - 1) div 16),
-            |    k -> struct(
-            |      size(slice(tk, k * 16 + 1, 32)) as n,
-            |      md5(array_join(slice(tk, k * 16 + 1, 32), ' ')) as fp))))"""
-            .stripMargin)).as(Seq("k", "c")))
+        .select($"doc_id", posexplode(TextOps.chunks($"__toks", 16, 32)(ck =>
+          struct(size(ck).as("n"), md5(array_join(ck, " ")).as("fp"))))
+          .as(Seq("k", "c")))
         .select($"doc_id", $"k".cast("long").as("chunk_id"),
           $"c.n".cast("long").as("n_tokens"), $"c.fp".as("chunk_fp"))
     }, Some("""
@@ -400,14 +390,11 @@ object CleaningQueries extends QueryModule {
         .groupBy($"fp", $"source").agg(count(lit(1)).as("n"))
       sfc.groupBy($"fp")
         .agg(sort_array(collect_list(struct($"source", $"n"))).as("srcs"))
-        .select($"fp", explode(expr(
-          """concat(
-             |  transform(filter(srcs, x -> x.n >= 2),
-             |    x -> struct(x.source as src_a, x.source as src_b)),
-             |  flatten(transform(srcs, (a, i) ->
-             |    transform(slice(srcs, i + 2, size(srcs)), b ->
-             |      struct(a.source as src_a, b.source as src_b)))))"""
-            .stripMargin)).as("p"))
+        .select($"fp", explode(concat(
+          expr("""transform(filter(srcs, x -> x.n >= 2),
+            |  x -> struct(x.source as src_a, x.source as src_b))""".stripMargin),
+          PairOps.pairs($"srcs", "src_a", "src_b",
+            (x, y) => (x.getField("source"), y.getField("source"))))).as("p"))
         .groupBy($"p.src_a".as("src_a"), $"p.src_b".as("src_b"))
         .agg(count(lit(1)).as("n_dup_fps"))
     }, Some("""

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
@@ -82,9 +82,7 @@ object CorpusOps {
     * loop (the rare branch — these frames are bounded by construction,
     * so the cap only trips if a caller widens the node domain). */
   def boundedRows(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
-    val cap = df.sparkSession.conf
-      .getOption("spark.graft.graph.maxDriverRows").map(_.toLong)
-      .getOrElse(1000000L)
+    val cap = maxDriverRows(df.sparkSession)
     val upTo = math.min(cap + 1, (Int.MaxValue - 1).toLong).toInt
     // persist BEFORE the probe job: on the above-cap (None) path the
     // caller's distributed loop then reuses what the probe materialized
@@ -111,6 +109,13 @@ object CorpusOps {
       Some(rows)
     } else None
   }
+
+  /** The one driver-arm cap of the two-path operators ([[boundedRows]],
+    * [[connectedComponents]]' union-find): `spark.graft.graph.maxDriverRows`,
+    * default 1e6. */
+  def maxDriverRows(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.graph.maxDriverRows").map(_.toLong)
+      .getOrElse(1000000L)
 
   def globalTopK(df: DataFrame, bucketKey: Column, k: Int,
                  order: Seq[Column], buckets: Int = 64): DataFrame = {
@@ -182,10 +187,7 @@ object CorpusOps {
     // bounded threshold, union-find on the driver replaces ~10 scheduler
     // round-trips with one collect. Above it (billions of edges at 100 TB),
     // the distributed star loop below runs unchanged.
-    val maxDriver = spark.conf
-      .getOption("spark.graft.cc.maxDriverEdges").map(_.toLong)
-      .getOrElse(1000000L)
-    if (e.count() <= maxDriver) {
+    if (e.count() <= maxDriverRows(spark)) {
       val parent = scala.collection.mutable.LongMap.empty[Long]
       // iterative find (walk to root, then compress): recursion here can
       // exceed JVM stack depth on path-shaped components whose edges
@@ -369,16 +371,10 @@ object CorpusOps {
   def stripBoilerplateSegments(df: DataFrame, idCol: String, textCol: Column,
                                segTokens: Int, dfThreshold: Int): DataFrame = {
     val id = col(idCol)
-    // bind the token array once through a lambda variable (the r15
-    // unbound-split lesson: HOFs re-evaluate unbound child expressions)
     val segs = df
       .select(id, TextOps.tokens(textCol).as("__toks"))
-      .select(id, posexplode(expr(
-        s"""flatten(transform(array(__toks), tk ->
-           |  transform(sequence(0, (size(tk) - 1) div $segTokens),
-           |    g -> array_join(slice(tk, g * $segTokens + 1, $segTokens),
-           |                    ' '))))""".stripMargin))
-        .as(Seq("seg_id", "seg")))
+      .select(id, posexplode(TextOps.chunks(col("__toks"), segTokens, segTokens)(
+        array_join(_, " "))).as(Seq("seg_id", "seg")))
       .select(id, col("seg_id").cast("long").as("seg_id"), col("seg"))
     val freq = segs.groupBy(col("seg"))
       .agg(countDistinct(id).as("df"))

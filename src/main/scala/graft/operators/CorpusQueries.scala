@@ -969,20 +969,13 @@ object CorpusQueries extends QueryModule {
       import s.implicits._
       graft.plans.GraftPlanner.install(s)
       val docs = t(s, d, "documents")
-      // round-16 opt (q77's owner-carrying form): a doc's duplicated-
-      // window count is nw − (its wdf == 1 windows), and a wdf == 1
-      // window is OWNED by exactly one doc — so the frequency agg
-      // carries min(doc_id) and the per-doc unique counts aggregate
-      // from that vocabulary-sized frame. The old withWindowFreq form
-      // joined the frequency table back onto every (doc, window) row
-      // (corpus-side join + a second evaluation of the window stream);
-      // nw is the row-local q31 fact. dfrac values are bit-identical:
-      // nd = nw − nu exactly, same long-to-double division.
-      val wins = TextOps.distinctWindows(docs, "doc_id", "text")
-      val uniq = wins.groupBy($"shingle")
-        .agg(count(lit(1)).as("wdf"), min($"doc_id").as("d0"))
-        .filter($"wdf" === 1)
-        .groupBy($"d0".as("doc_id")).agg(count(lit(1)).as("nu"))
+      // round-16 opt (q77's form): a doc's duplicated-window count is
+      // nw − nu (uniqueWindowCounts, windowCount), so the corpus rows
+      // never cross a join. dfrac values are bit-identical to the old
+      // withWindowFreq join-back: nd = nw − nu exactly, same
+      // long-to-double division.
+      val uniq = TextOps.uniqueWindowCounts(
+        TextOps.distinctWindows(docs, "doc_id", "text"), "doc_id")
       // quality gate on the FLOOR-quantized milli score (qualityRaw's
       // documented comparison form — round(double, N) half-ties are not
       // engine-portable; q75/q85 precedent)
@@ -990,9 +983,7 @@ object CorpusQueries extends QueryModule {
           TextOps.tokenCount($"text").cast("long").as("tok"),
           floor(TextOps.qualityRaw($"text") * 1000).as("qm"),
           TextOps.fingerprint($"text").as("fp"),
-          coalesce(size(array_distinct(
-            TextOps.shingles(TextOps.tokens($"text"), 8))), lit(0))
-            .cast("long").as("nw"))
+          TextOps.windowCount($"text").as("nw"))
         .join(uniq, Seq("doc_id"), "left_outer")
         .withColumn("dfrac", when($"nw" === 0L, lit(0.0))
           .otherwise(($"nw" - coalesce($"nu", lit(0L))).cast("double") /

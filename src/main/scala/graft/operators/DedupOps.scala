@@ -270,11 +270,8 @@ object DedupOps {
       .agg(collect_list(col(idCol)).as("ids"))
       .filter(size(col("ids")).between(2, maxBucket))
     buckets
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids)), y ->
-          |    struct(least(x, y) AS a, greatest(x, y) AS b))))""".stripMargin))
-        .as("p"))
+      .select(explode(PairOps.pairs(col("ids"), "a", "b",
+        (x, y) => (least(x, y), greatest(x, y)))).as("p"))
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .distinct()
   }

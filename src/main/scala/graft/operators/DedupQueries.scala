@@ -12,16 +12,18 @@ import graft.catalog.Tables.t
 object DedupQueries extends QueryModule {
 
 
-  /** DuckDB twin of [[TextOps.distinctWindows]] (n=8): emits the CTE
+  /** DuckDB twin of [[TextOps.distinctWindows]]: emits the CTE
     * pair `dtoks, wins` (distinct (doc_id, win) rows) over source CTE
-    * `src` — ONE definition for the q77/q100/q103 oracles so the window
-    * shape cannot drift from the Spark side's shared helper. */
+    * `src` — ONE definition for the q77/q100/q103 oracles, over the same
+    * [[TextOps.windowTokens]], so the window shape cannot drift from the
+    * Spark side's shared helper. */
   private[operators] def winCteSql(src: String): String = {
-    val terms = (0 until 8).map(j => s"toks[i+$j]").mkString(" || ' ' || ")
+    val w = TextOps.windowTokens
+    val terms = (0 until w).map(j => s"toks[i+$j]").mkString(" || ' ' || ")
     s"""dtoks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
        |           FROM $src),
        |wins AS (SELECT DISTINCT doc_id,
-       |           unnest(list_transform(range(1, greatest(len(toks) - 6, 1)),
+       |           unnest(list_transform(range(1, greatest(len(toks) - ${w - 2}, 1)),
        |             i -> $terms)) AS win
        |         FROM dtoks)""".stripMargin
   }
@@ -196,26 +198,14 @@ object DedupQueries extends QueryModule {
             lit(" the quick brown fox jumps over the lazy dog again and again")))
         .otherwise($"text").as("text"))
       // round-16 opt: the corpus rows never cross a join. A doc's
-      // duplicated-window count is nw - (its windows with wdf == 1),
-      // and a wdf == 1 window is OWNED by exactly one doc — so the
-      // frequency agg carries min(doc_id) (the owner when wdf == 1)
-      // and the per-doc unique-window counts aggregate from that
-      // vocabulary-sized frame. The old withWindowFreq form joined the
-      // frequency table back onto every (doc, window) row (a second
-      // evaluation of the window stream AND a corpus-side join);
-      // here the only frames shuffled are the window-keyed counts
-      // (map-side combined) and a per-doc count — both aggregated
-      // before the wire, both skew-immune. nw itself is a row-local
-      // fact (q31 convention): size(array_distinct(grams)).
-      val wins = TextOps.distinctWindows(planted, "doc_id", "text")
-      val fq = wins.groupBy($"shingle")
-        .agg(count(lit(1)).as("wdf"), min($"doc_id").as("d0"))
-      val uniq = fq.filter($"wdf" === 1)
-        .groupBy($"d0".as("doc_id")).agg(count(lit(1)).as("nu"))
-      planted.select($"doc_id",
-          coalesce(size(array_distinct(
-            TextOps.shingles(TextOps.tokens($"text"), 8))), lit(0))
-            .cast("long").as("nw"))
+      // duplicated-window count is nw - nu, nu from the owner-carrying
+      // uniqueWindowCounts and nw the row-local windowCount. The old
+      // withWindowFreq form joined the frequency table back onto every
+      // (doc, window) row (a second evaluation of the window stream AND
+      // a corpus-side join).
+      val uniq = TextOps.uniqueWindowCounts(
+        TextOps.distinctWindows(planted, "doc_id", "text"), "doc_id")
+      planted.select($"doc_id", TextOps.windowCount($"text").as("nw"))
         .join(uniq, Seq("doc_id"), "left_outer")
         .select($"doc_id",
           $"nw".as("n_windows"),
@@ -293,10 +283,7 @@ object DedupQueries extends QueryModule {
       // window stream plus its doc-keyed agg exchange. Zero-window
       // docs gain a (doc, 0) row the agg form lacked — unobservable:
       // sizes only inner-joins to pair docs (>= 5 shared windows).
-      val sizes = planted.select($"doc_id",
-        coalesce(size(array_distinct(
-          TextOps.shingles(TextOps.tokens($"text"), 8))), lit(0))
-          .cast("long").as("nw"))
+      val sizes = planted.select($"doc_id", TextOps.windowCount($"text").as("nw"))
       // pairs come from a per-window sorted doc list, NOT a rare×rare
       // self-join: the wdf <= 20 filter runs BEFORE the collect, so
       // every group is <= 20 docs (<= 190 pairs) by construction — no
@@ -308,15 +295,9 @@ object DedupQueries extends QueryModule {
       // (count + capped list in one agg, no join-back): shuffle bytes
       // ROSE 6.9 -> 8.9 MB (list-buffer serialization beats the saved
       // count partials) — kept out, the q116 measured-non-win rule.
-      val shared = rare.groupBy($"shingle")
-        .agg(sort_array(collect_list($"doc_id")).as("ds"))
-        .select(explode(expr(
-          """flatten(transform(ds, (a, i) ->
-             |  transform(slice(ds, i + 2, size(ds)),
-             |    b -> struct(a as doc_a, b as doc_b))))""".stripMargin))
-          .as("p"))
-        .select($"p.doc_a".as("doc_a"), $"p.doc_b".as("doc_b"))
-        .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("shared"))
+      val shared = PairOps.pairCounts(rare.groupBy($"shingle")
+          .agg(sort_array(collect_list($"doc_id")).as("ds")),
+          "ds", "doc_a", "doc_b", "shared")
         .filter($"shared" >= 5)
       shared
         .join(sizes.select($"doc_id".as("doc_a"), $"nw".as("nwa")), "doc_a")
@@ -705,15 +686,9 @@ object DedupQueries extends QueryModule {
       // per-row object aggregation. Kept out (measured-non-win rule).
       val dfs = sr.groupBy($"shingle").agg(count(lit(1)).as("sdf"))
       val rare = sr.join(dfs.filter($"sdf" >= 2 && $"sdf" <= 20), "shingle")
-      val inter = rare.groupBy($"shingle")
-        .agg(sort_array(collect_list($"doc_id")).as("ds"))
-        .select(explode(expr(
-          """flatten(transform(ds, (a, i) ->
-            |  transform(slice(ds, i + 2, size(ds)),
-            |    b -> struct(a as doc_a, b as doc_b))))""".stripMargin))
-          .as("p"))
-        .select($"p.doc_a".as("doc_a"), $"p.doc_b".as("doc_b"))
-        .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("inter"))
+      val inter = PairOps.pairCounts(rare.groupBy($"shingle")
+          .agg(sort_array(collect_list($"doc_id")).as("ds")),
+          "ds", "doc_a", "doc_b", "inter")
         .filter($"inter" >= 5)
       inter
         .join(sizes.select($"doc_id".as("doc_a"), $"sz".as("sza")), "doc_a")
@@ -871,10 +846,7 @@ object DedupQueries extends QueryModule {
         .select($"doc_id", $"p.tok".as("tok"))
       val cand = pref.groupBy($"tok")
         .agg(sort_array(collect_list($"doc_id")).as("ds"))
-        .select(explode(expr(
-          """flatten(transform(ds, (a, i) ->
-            |  transform(slice(ds, i + 2, size(ds)),
-            |    b -> struct(a as da, b as db))))""".stripMargin)).as("p"))
+        .select(explode(PairOps.pairs($"ds", "da", "db")).as("p"))
         .select($"p.da".as("da"), $"p.db".as("db")).distinct()
       cand
         .join(ord.select($"doc_id".as("da"), $"lst".as("la"), $"sz".as("sza")),
@@ -1144,10 +1116,8 @@ object DedupQueries extends QueryModule {
         .agg(sort_array(collect_list($"doc_id")).as("ms"),
           count(lit(1)).as("sz"))
         .filter($"sz" >= 2)
-        .select($"cluster_id", $"sz", explode(expr(
-          """flatten(transform(ms, (a, i) ->
-            |  transform(slice(ms, i + 2, size(ms)),
-            |    b -> struct(a as da, b as db))))""".stripMargin)).as("p"))
+        .select($"cluster_id", $"sz",
+          explode(PairOps.pairs($"ms", "da", "db")).as("p"))
         .select($"cluster_id", $"sz", $"p.da".as("da"), $"p.db".as("db"))
       pairs
         .join(sigs.select($"doc_id".as("da"), $"simhash".as("sa")), "da")
@@ -1741,10 +1711,7 @@ object DedupQueries extends QueryModule {
       val nb = adj.groupBy($"c")
         .agg(count(lit(1)).as("deg"), bcol($"x").as("xs")).persist()
       val wed = nb.filter($"deg" <= 20)
-        .select(explode(expr(
-          """flatten(transform(xs, (a, i) ->
-            |  transform(slice(xs, i + 2, size(xs)),
-            |    b -> struct(a as xa, b as xb))))""".stripMargin)).as("p"))
+        .select(explode(PairOps.pairs($"xs", "xa", "xb")).as("p"))
         .select($"p.xa".as("xa"), $"p.xb".as("xb"))
       val wf = wed.join(pr.select($"doc_a".as("xa"), $"doc_b".as("xb"),
           lit(1L).as("cl")), Seq("xa", "xb"), "left_outer")

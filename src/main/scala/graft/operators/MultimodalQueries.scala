@@ -143,16 +143,10 @@ object MultimodalQueries extends QueryModule {
       // by construction (array_distinct within the doc). Over-cap
       // lists are partition-dependent and discarded by the nd gate.
       val bcol = udaf(graft.functions.BoundedCollect(21))
-      val pairs = frames.groupBy($"frame_digest")
-        .agg(count(lit(1)).as("nd"), bcol($"doc_id").as("dl"))
-        .filter($"nd".between(2, 20))
-        .select(explode(expr(
-          """flatten(transform(dl, (a, i) ->
-            |  transform(slice(dl, i + 2, size(dl)),
-            |    b -> struct(a as doc_a, b as doc_b))))""".stripMargin))
-          .as("p"))
-        .select($"p.doc_a".as("doc_a"), $"p.doc_b".as("doc_b"))
-        .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("shared_frames"))
+      val pairs = PairOps.pairCounts(frames.groupBy($"frame_digest")
+          .agg(count(lit(1)).as("nd"), bcol($"doc_id").as("dl"))
+          .filter($"nd".between(2, 20)),
+          "dl", "doc_a", "doc_b", "shared_frames")
         .join(perDoc.select($"doc_id".as("doc_a"), $"nf".as("fa")), "doc_a")
         .join(perDoc.select($"doc_id".as("doc_b"), $"nf".as("fb")), "doc_b")
         .select($"doc_a", $"doc_b", $"shared_frames",

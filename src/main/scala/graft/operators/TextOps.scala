@@ -103,13 +103,50 @@ object TextOps {
     df.select(col(idCol),
       explode(array_distinct(shingles(tokens(col(textCol)), n))).as("shingle"))
 
-  /** Distinct rolling n-token windows per document — the shared frame
-    * behind the substring-dedup family (q77 profile, q100's gate,
-    * q103 excerpt pairs). One definition so the window shape cannot
+  /** Window width, in tokens, of the substring-dedup family. */
+  val windowTokens = 8
+
+  /** Distinct rolling [[windowTokens]]-token windows per document — the
+    * shared frame behind the substring-dedup family (q77 profile, q100's
+    * gate, q103 excerpt pairs). One definition so the window shape cannot
     * drift between the three. */
   def distinctWindows(df: org.apache.spark.sql.DataFrame, idCol: String,
-                      textCol: String, n: Int = 8): org.apache.spark.sql.DataFrame =
-    distinctShingleRows(df, idCol, textCol, n)
+                      textCol: String): org.apache.spark.sql.DataFrame =
+    distinctShingleRows(df, idCol, textCol, windowTokens)
+
+  /** A document's [[distinctWindows]] row count as a row-local long (the
+    * q31 convention: size(array_distinct(grams)) per row, no explode and
+    * no per-doc aggregate); 0 for a text shorter than the window. */
+  def windowCount(text: Column): Column =
+    coalesce(size(array_distinct(shingles(tokens(text), windowTokens))), lit(0))
+      .cast("long")
+
+  /** Per-document count `nu` of the windows no other document shares,
+    * from a [[distinctWindows]] frame. The window-keyed count carries
+    * min(id), which is the owner of every window with count 1, so both
+    * aggregates are map-side combined over window-vocabulary-sized frames
+    * and the corpus rows never cross a join. A document without such a
+    * window has no row. */
+  def uniqueWindowCounts(wins: org.apache.spark.sql.DataFrame,
+                         idCol: String): org.apache.spark.sql.DataFrame =
+    wins.groupBy(col("shingle"))
+      .agg(count(lit(1)).as("wdf"), min(col(idCol)).as("d0"))
+      .filter(col("wdf") === 1)
+      .groupBy(col("d0").as(idCol)).agg(count(lit(1)).as("nu"))
+
+  /** Row-local chunking of a token array: chunk k is
+    * `slice(toks, k * stride + 1, width)` for k in 0 to
+    * (size(toks) - 1) div stride, and `chunk` maps each slice to the
+    * element emitted for it. The result is the array of those elements
+    * in chunk order (posexplode gives (chunk id, element)); an empty
+    * token array gives one empty slice. No exchange at any size: a long
+    * document is one row's work, never one group of a wide aggregate.
+    * The tokens are bound once through a lambda variable, so an
+    * unmaterialized `toks` is evaluated once per row, not per chunk. */
+  def chunks(toks: Column, stride: Int, width: Int)(chunk: Column => Column): Column =
+    flatten(transform(array(toks), tk =>
+      transform(sequence(lit(0), call_function("div", size(tk) - 1, lit(stride))),
+        k => chunk(slice(tk, k * stride + 1, lit(width))))))
 
   /** Corpus frequency of each window, attached to the window rows via
     * groupBy + join-back on the window key (round-15 opt — the repo's

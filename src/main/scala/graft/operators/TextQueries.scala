@@ -338,13 +338,9 @@ object TextQueries extends QueryModule {
       import s.implicits._
       t(s, d, "documents")
         .select($"doc_id", TextOps.tokens($"text").as("__toks"))
-        .select($"doc_id", posexplode(expr(
-          """flatten(transform(array(__toks), tk ->
-            |  transform(sequence(0, (size(tk) - 1) div 64),
-            |    k -> struct(
-            |      size(slice(tk, k * 64 + 1, 64)) as n,
-            |      array_join(slice(tk, k * 64 + 1, 64), ' ') as ct))))"""
-            .stripMargin)).as(Seq("k", "c")))
+        .select($"doc_id", posexplode(TextOps.chunks($"__toks", 64, 64)(ck =>
+          struct(size(ck).as("n"), array_join(ck, " ").as("ct"))))
+          .as(Seq("k", "c")))
         .select($"doc_id", $"k".cast("long").as("chunk_id"),
           $"c.n".cast("long").as("n_tokens"), $"c.ct".as("chunk_text"))
     }, Some("""

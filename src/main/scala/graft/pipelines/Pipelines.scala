@@ -41,10 +41,9 @@ object Pipelines {
 
   /** Authors (reference: libs/export/authors.js:22-58): EAV widening via
     * one pivot instead of 3 self-joins (J1), slugified author URL (F1/F2).
-    * `dropIncomplete=true` reproduces the reference's INNER-join drop of
-    * users missing any meta key (README.md:77); default keeps them. */
-  def authors(spark: SparkSession, cat: WpCatalog,
-              dropIncomplete: Boolean = false): DataFrame = {
+    * Users missing a meta key are kept with empty fields, where the
+    * reference's INNER joins drop them (README.md:77). */
+  def authors(spark: SparkSession, cat: WpCatalog): DataFrame = {
     val users = cat.table(spark, "users")
     // ci mode rewrites meta_key itself (not just the compare): the pivot
     // below names its output columns from the VALUES, so 'First_Name'
@@ -55,13 +54,7 @@ object Pipelines {
       .filter(col("meta_key").isin("first_name", "last_name", "description"))
     val wide = EavOps.pivot(meta, "user_id", "meta_key", "meta_value",
       Seq("first_name", "last_name", "description"))
-    val joined = users.join(wide, users("ID") === wide("user_id"), "left_outer")
-    val filtered =
-      if (dropIncomplete)
-        joined.filter(col("first_name").isNotNull &&
-          col("last_name").isNotNull && col("description").isNotNull)
-      else joined
-    filtered.select(
+    users.join(wide, users("ID") === wide("user_id"), "left_outer").select(
       col("ID"),
       col("user_login").as("title"),
       slugUrl("/author/", col("user_login")).as("url"),

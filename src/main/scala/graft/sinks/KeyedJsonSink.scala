@@ -402,9 +402,9 @@ object KeyedJsonSink {
     * like [[atomicWrite]]'s file move (no Hadoop FS offers an atomic
     * directory swap), so concurrent readers must tolerate a brief
     * absence; every crash window leaves a recoverable copy (`.old` or
-    * `.tmp-*`), never zero. The sink assumes a single writer per `dir`:
-    * a merge restores a parked `.old` and deletes every `<dir>.tmp-*`
-    * sibling, which would destroy a concurrent writer's work. */
+    * `.tmp`), never zero. The sink assumes a single writer per `dir`:
+    * a merge restores a parked `.old` and deletes `<dir>.tmp`, which
+    * would destroy a concurrent writer's work. */
   def mergeSharded(delta: DataFrame, uidCol: String, dir: String,
                    removeKeys: Option[DataFrame] = None,
                    legacyFile: Option[String] = None): Sharded = {
@@ -427,15 +427,12 @@ object KeyedJsonSink {
     // later .old cleanup would destroy the only backup.
     if (!fs.exists(hPath) && fs.exists(oldPath) && !fs.rename(oldPath, hPath))
       throw new java.io.IOException(s"recovering $oldPath -> $dir failed")
-    // a `.tmp-*` sibling is a crashed shard write's partial copy: no reader
-    // looks at it, so only the single writer can reclaim it. Matched by
-    // name prefix, not a glob: `dir` may hold glob metacharacters.
-    val tmpPrefix = hPath.getName + ".tmp-"
-    val parent = hPath.getParent
-    if (fs.exists(parent))
-      fs.listStatus(parent).map(_.getPath)
-        .filter(_.getName.startsWith(tmpPrefix))
-        .foreach(fs.delete(_, true))
+    // a `.tmp` sibling is a crashed shard write's partial copy: no reader
+    // looks at it, so only the single writer can reclaim it. The name is
+    // fixed so reclaiming it is one delete, not a listing of the parent
+    // (for assets that parent holds one directory per asset).
+    val tmp = new org.apache.hadoop.fs.Path(dir + ".tmp")
+    fs.delete(tmp, true)
     val existingParts =
       if (fs.exists(hPath))
         fs.listStatus(hPath).filter(_.getPath.getName.startsWith("part-"))
@@ -476,10 +473,8 @@ object KeyedJsonSink {
       .select(col("uid"), col("w.json").as("json"))
     // backup-rename swap: the previous state is parked at .old until the
     // new state is in place, so no crash window loses BOTH copies (a
-    // crash can leave .old or a .tmp-* behind — recoverable, never
+    // crash can leave .old or a .tmp behind — recoverable, never
     // empty). Hadoop FS has no atomic directory swap to do better.
-    val tmp = new org.apache.hadoop.fs.Path(
-      dir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
     val written = writeShardFiles(kept, tmp.toString, n)
     fs.delete(oldPath, true)
     val hadPrev = fs.exists(hPath)

@@ -23,9 +23,9 @@ class CorpusSpec extends AnyFunSuite {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  /** Run f with the driver-edge threshold forced, restoring after. */
-  private def withMaxDriverEdges[T](n: Long)(f: => T): T = {
-    val key = "spark.graft.cc.maxDriverEdges"
+  /** Run f with the driver-arm cap forced, restoring after. */
+  private def withMaxDriverRows[T](n: Long)(f: => T): T = {
+    val key = "spark.graft.graph.maxDriverRows"
     spark.conf.set(key, n.toString)
     try f finally spark.conf.unset(key)
   }
@@ -37,7 +37,7 @@ class CorpusSpec extends AnyFunSuite {
     Seq(
       CorpusOps.connectedComponents(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      withMaxDriverEdges(0) {
+      withMaxDriverRows(0) {
         CorpusOps.connectedComponents(df)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       })
@@ -57,7 +57,7 @@ class CorpusSpec extends AnyFunSuite {
     val dir = "/tmp/graft_cc_ckpt"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     spark.conf.set("spark.graft.checkpointDir", dir)
-    try withMaxDriverEdges(0) {
+    try withMaxDriverRows(0) {
       val edges = Seq((1L, 2L), (2L, 3L), (10L, 1L), (5L, 6L), (8L, 7L))
       val got = CorpusOps.connectedComponents(edges.toDF("a", "b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -91,7 +91,7 @@ class CorpusSpec extends AnyFunSuite {
     // possible parent chains; the iterative find must not blow the stack.
     val n = 30000L
     val edges = (n to 1L by -1).map(i => (i, i - 1))
-    val got = withMaxDriverEdges(1000000) {
+    val got = withMaxDriverRows(1000000) {
       CorpusOps.connectedComponents(edges.toDF("a", "b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }

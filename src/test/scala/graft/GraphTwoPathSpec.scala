@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * BSP arm; results must be row-identical.
   *
   * Same pattern as CorpusSpec's connectedComponents both-paths test
-  * (spark.graft.cc.maxDriverEdges), generalized to the q193 family.
+  * (the same spark.graft.graph.maxDriverRows cap), generalized to the
+  * q193 family.
   */
 class GraphTwoPathSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark

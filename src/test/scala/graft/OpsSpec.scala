@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{EavOps, MergeOps, TextOps}
+import graft.operators.{EavOps, MergeOps, PairOps, TextOps}
 
 class OpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -61,6 +61,51 @@ class OpsSpec extends AnyFunSuite {
     val got = df.select(size(TextOps.shingleSet($"text")).as("n"))
       .as[Int].collect().toSeq
     assert(got == Seq(0, 0, 0, 2))
+  }
+
+  test("pairs: every i < j member pair in array order, none for empty, one-element or null lists") {
+    val lists = Seq((1, Seq.empty[Int]), (2, Seq(7)), (3, null: Seq[Int]),
+      (4, Seq(4, 3, 2, 1))).toDF("id", "xs")
+    val got = lists.select($"id", posexplode(PairOps.pairs($"xs", "a", "b")))
+      .orderBy($"id", $"pos").select($"id", $"col.a", $"col.b")
+      .as[(Int, Int, Int)].collect().toSeq
+    assert((1 to 4).map(id => got.count(_._1 == id)) == Seq(0, 0, 0, 6))
+    assert(got.map(r => (r._2, r._3)) ==
+      Seq((4, 3), (4, 2), (4, 1), (3, 2), (3, 1), (2, 1)))
+    val counts = PairOps.pairCounts(Seq(Seq(1, 2, 3), Seq(2, 3)).toDF("xs"),
+      "xs", "a", "b", "n").as[(Int, Int, Long)].collect().toSet
+    assert(counts == Set((1, 2, 1L), (1, 3, 1L), (2, 3, 2L)))
+  }
+
+  test("windowCount equals distinctWindows' per-document row count") {
+    val w = TextOps.windowTokens
+    val words = (1 to w + 3).map(i => s"w$i")
+    val docs = Seq(
+      1L -> words.take(w - 1).mkString(" "), // shorter than one window
+      2L -> words.take(w).mkString(" "),
+      3L -> words.mkString(" "),
+      4L -> (words.take(w) ++ words.take(w)).mkString(" "), // first == last
+      5L -> "").toDF("doc_id", "text")
+    val rows = TextOps.distinctWindows(docs, "doc_id", "text")
+      .groupBy($"doc_id").count().as[(Long, Long)].collect().toMap
+    val got = docs.select($"doc_id", TextOps.windowCount($"text"))
+      .as[(Long, Long)].collect().toMap
+    assert(got == (1L to 5L).map(id => id -> rows.getOrElse(id, 0L)).toMap)
+    assert(got == Map(1L -> 0L, 2L -> 1L, 3L -> 4L, 4L -> w.toLong, 5L -> 0L))
+  }
+
+  test("chunks: stride/width slices in order, a short last chunk, one empty chunk for no tokens") {
+    val toks = Seq(Seq.empty[String], Seq("a", "b", "c"), Seq("a", "b", "c", "d"))
+      .toDF("toks")
+    def chunked(stride: Int, width: Int) =
+      toks.select(TextOps.chunks($"toks", stride, width)(identity))
+        .as[Seq[Seq[String]]].collect().toSeq
+    assert(chunked(3, 3) == Seq(
+      Seq(Seq()),
+      Seq(Seq("a", "b", "c")),
+      Seq(Seq("a", "b", "c"), Seq("d"))))
+    // overlapping stride (q132's shape): chunk k starts at token k * stride
+    assert(chunked(2, 3).last == Seq(Seq("a", "b", "c"), Seq("c", "d")))
   }
 
   test("asofJoinLastBefore: inclusive bound, per-key isolation, null when no match") {

@@ -180,7 +180,7 @@ class SinkHardeningSpec extends AnyFunSuite {
     // Two crash windows of the previous merge, each rebuilt on disk: a
     // crash between rename(dir -> .old) and rename(tmp -> dir) leaves the
     // live dir missing and the backup present; a crash during the shard
-    // write leaves a `.tmp-*` sibling holding a stale shard. Either way the
+    // write leaves a `.tmp` sibling holding a stale shard. Either way the
     // next merge must equal an uninterrupted run, and no read of the
     // state may return the stale rows.
     val stale = Seq(("a", "stale"), ("z", "stale")).toDF("uid", "x")
@@ -207,11 +207,11 @@ class SinkHardeningSpec extends AnyFunSuite {
     val leftover = run { d =>
       // a stale shard of the same layout, in the sibling a crashed write
       // would have left
-      tmp = d + ".tmp-dead0000"
+      tmp = d + ".tmp"
       KeyedJsonSink.mergeSharded(stale, "uid", tmp)
       assert(partFiles(tmp).nonEmpty)
     }
-    assert(leftover == clean, s"a leftover .tmp-* changed the merge: $leftover")
+    assert(leftover == clean, s"a leftover .tmp changed the merge: $leftover")
     assert(!Files.exists(Paths.get(tmp)), s"the crashed write's $tmp survived the merge")
   }
 
