@@ -39,10 +39,10 @@ object SparkEntry {
 
   /** Like [[oracleSql]], but scale-adaptive: queries with a dynamic
     * oracle (sizing derived from the live corpus row count) resolve
-    * their SQL against the given data dir, so the same hash-exact
-    * check runs at any SF. */
-  def oracleSqlFor(spark: SparkSession, sfDir: String): Map[String, String] =
-    modules.flatMap { q =>
+    * check runs at any SF. Only the `names` queries are resolved. */
+  def oracleSqlFor(spark: SparkSession, sfDir: String,
+                   names: Seq[String]): Map[String, String] =
+    modules.filter(q => names.contains(q.name)).flatMap { q =>
       q.oracleDyn.map(f => q.name -> f(spark, sfDir).trim)
         .orElse(q.oracle.map(sql => q.name -> sql.trim))
     }.toMap

@@ -35,8 +35,9 @@ object Verify {
     } + "\""
     // Scale-adaptive oracles (Q.oracleDyn) resolve against the dir being
     // verified, so LSH/IVF/PQ sizing in the SQL tracks the live corpus
-    // row count; everything else dumps its static SQL.
-    val json = SparkEntry.oracleSqlFor(spark, sfDir)
+    // row count; everything else dumps its static SQL. Only the selected
+    // queries are written, so a focused run checks clean.
+    val json = SparkEntry.oracleSqlFor(spark, sfDir, names)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

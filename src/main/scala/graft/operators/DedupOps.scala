@@ -4,16 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact (hash
-  * groupBy), SimHash (row-local signature + hamming pairs), MinHash+LSH
-  * (shingle → signature → band bucket join), and brute-force n-gram
-  * Jaccard as the small-N oracle baseline.
+  * groupBy), SimHash (row-local signature + banded hamming pairs),
+  * MinHash+LSH (shingle → signature → band bucket join), and the exact
+  * prefix-filtered Jaccard self-join ([[jaccardPairs]]).
   *
   * Scale notes (100 TB):
   *  - signatures are row-local (no shuffle); candidate generation shuffles
   *    on band hash, whose cardinality ≫ executor count;
   *  - LSH bucket join caps bucket size ([[lshCandidates]]'s maxBucket) so
   *    a degenerate key cannot produce an O(n²) bucket;
-  *  - brute-force pair ops are quadratic by design — verification-only.
+  *  - candidates come from equi-joins or posting lists, never a nested loop.
   */
 object DedupOps {
 
@@ -112,27 +112,6 @@ object DedupOps {
       .drop((0 until bits).map("__b" + _): _*)
   }
 
-  /** All pairs within hamming distance `maxHamming` of their SimHash.
-    * Quadratic candidate generation (nested-loop self-join on a < b) —
-    * verification baseline only; [[simhashPairsBanded]] is the scale
-    * path with identical results. */
-  def simhashPairs(sigs: DataFrame, idCol: String, sigCol: String,
-                   maxHamming: Int): DataFrame = {
-    val a = sigs.select(col(idCol).as("doc_a"), col(sigCol).as("sig_a"))
-    val b = sigs.select(col(idCol).as("doc_b"), col(sigCol).as("sig_b"))
-    a.join(b, col("doc_a") < col("doc_b"))
-      .withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
-  }
-
-  /** Hamming-threshold self-join via pigeonhole banding — EXACT (not
-    * approximate): split the `bits`-bit signature into `maxHamming + 1`
-    * disjoint bit-bands; a pair within `maxHamming` differs in at most
-    * `maxHamming` bands and therefore matches EXACTLY on ≥ 1 band.
-    * Candidates come from hash equi-joins on (band, band_value) instead
-    * of an O(n²) nested loop; exact hamming verifies them. Shuffles on
-    * the band value — same result set as [[simhashPairs]]. */
   /** Pigeonhole band table for a simhash column: `maxHamming + 1`
     * contiguous bit-bands per signature, so any pair within the Hamming
     * budget MUST agree exactly on at least one band — candidate
@@ -175,6 +154,13 @@ object DedupOps {
     math.pow(2.0, width) / nDocs.toDouble
   }
 
+  /** Hamming-threshold self-join via pigeonhole banding — EXACT (not
+    * approximate): split the `bits`-bit signature into `maxHamming + 1`
+    * disjoint bit-bands; a pair within `maxHamming` differs in at most
+    * `maxHamming` bands and therefore matches EXACTLY on ≥ 1 band.
+    * Candidates come from hash equi-joins on (band, band_value) instead
+    * of an O(n²) nested loop; exact hamming verifies them. Shuffles on
+    * the band value — DedupSpec pins it to the brute hamming join. */
   def simhashPairsBanded(sigs: DataFrame, idCol: String, sigCol: String,
                          maxHamming: Int, bits: Int = 32): DataFrame = {
     // The band table feeds BOTH sides of the candidate equi-join below
@@ -276,7 +262,6 @@ object DedupOps {
       .distinct()
   }
 
-  /** Jaccard similarity of two distinct-element array columns. */
   /** Sorted-neighborhood entity-resolution pairs with a HOT-BLOCK CAP.
     *
     * Classic SNM: block on a key prefix, sort within the block, compare
@@ -330,7 +315,41 @@ object DedupOps {
       .groupBy(col("doc_a"), col("doc_b")).agg(min(col("dist")).as("dist"))
   }
 
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")
+  /** Exact Jaccard >= `tau` self-join over (id, distinct-element array):
+    * PPJoin's prefix filter, then exact verification. Each set is
+    * ordered by global (df, element); two sets with J >= tau share an
+    * element of their prefixes, the first |S| - ceil(tau·|S|) + 1
+    * (pigeonhole), so pairing each prefix element's sorted posting list
+    * ([[PairOps.pairs]]) finds every such pair with no nested loop.
+    * Output: (a, b, inter, size_a, size_b), a < b, one row per distinct
+    * candidate, NOT filtered by `tau` — the caller applies its exact test
+    * on union = size_a + size_b - inter. Empty sets are never candidates.
+    * `dfCap` drops join elements with df above it (C(cap, 2) pairs per
+    * posting at most) and is exact only when absent. `tau` enters as a
+    * decimal: ceil(0.55 · 100) is 55, not ceil of the double 55.00000000000001.
+    * The per-set frame is persisted: the postings and both verification
+    * sides read it. */
+  def jaccardPairs(sets: DataFrame, idCol: String, setCol: String,
+                   tau: Double, dfCap: Option[Long] = None): DataFrame = {
+    val elems = sets.select(col(idCol).as("__id"), explode(col(setCol)).as("__e"))
+    val df = elems.groupBy(col("__e")).agg(count(lit(1)).as("__df"))
+    val ord = elems.join(df, "__e").groupBy(col("__id"))
+      .agg(array_sort(collect_list(struct(col("__df"), col("__e")))).as("__dt"))
+      .withColumn("__sz", size(col("__dt")).cast("long"))
+      .persist()
+    val prefixLen = col("__sz") - ceil(lit(BigDecimal(tau)) * col("__sz")) + 1
+    val pref = ord.select(col("__id"),
+      explode(slice(col("__dt"), lit(1), prefixLen.cast("int"))).as("__p"))
+    val capped = dfCap.fold(pref)(c => pref.filter(col("__p.__df") <= c))
+    val cand = capped.groupBy(col("__p.__e"))
+      .agg(sort_array(collect_list(col("__id"))).as("__ids"))
+      .select(explode(PairOps.pairs(col("__ids"), "a", "b")).as("__pr"))
+      .select(col("__pr.a").as("a"), col("__pr.b").as("b")).distinct()
+    def side(s: String) = ord.select(col("__id").as(s),
+      expr("transform(__dt, x -> x.__e)").as(s"__l$s"), col("__sz").as(s"size_$s"))
+    cand.join(side("a"), "a").join(side("b"), "b")
+      .select(col("a"), col("b"),
+        size(array_intersect(col("__la"), col("__lb"))).cast("long").as("inter"),
+        col("size_a"), col("size_b"))
+  }
 }

@@ -1,13 +1,15 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{Q, QueryModule}
 import graft.catalog.Tables.t
 
-/** Deduplication surface: exact, brute-force n-gram Jaccard (oracle
-  * baseline), SimHash (+hamming pairs), MinHash+LSH (the scale path).
+/** Deduplication surface: exact, prefix-filtered exact n-gram Jaccard
+  * (the truth set), SimHash (+hamming pairs), MinHash+LSH (the
+  * approximate scale path).
   */
 object DedupQueries extends QueryModule {
 
@@ -26,6 +28,18 @@ object DedupQueries extends QueryModule {
        |           unnest(list_transform(range(1, greatest(len(toks) - ${w - 2}, 1)),
        |             i -> $terms)) AS win
        |         FROM dtoks)""".stripMargin
+  }
+
+  /** Document pairs with trigram-shingle Jaccard j >= 0.5 as (doc_a,
+    * doc_b, j): the q33 truth set, shared by q33 and q250. `j` is the
+    * double `inter / union`, the value the DuckDB oracles compute. */
+  private def shingleJaccardPairs(docs: DataFrame): DataFrame = {
+    val sets = docs.select(col("doc_id"), TextOps.shingleSet(col("text")).as("s"))
+    DedupOps.jaccardPairs(sets, "doc_id", "s", 0.5)
+      .withColumn("j", col("inter").cast("double") /
+        (col("size_a") + col("size_b") - col("inter")).cast("double"))
+      .filter(col("j") >= 0.5)
+      .select(col("a").as("doc_a"), col("b").as("doc_b"), col("j"))
   }
 
   /** DuckDB flavor of [[DedupOps.hv32Sql]] (no `L` literal suffix). */
@@ -122,17 +136,11 @@ object DedupQueries extends QueryModule {
         CAST((sum(c) - count(*)) * 1000000 // sum(c) AS BIGINT) AS dup_ppm
       FROM g GROUP BY source""")),
 
-    // brute-force trigram-shingle Jaccard pairs — quadratic verification
-    // baseline (excluded from bench; q36 is the scale path).
+    // exact trigram-shingle Jaccard >= 0.5 pairs (DedupOps.jaccardPairs)
+    // — excluded from bench so catalog totals stay comparable.
     Q("q33_jaccard_pairs", (s, d) => {
       import s.implicits._
-      val sets = t(s, d, "documents")
-        .select($"doc_id", TextOps.shingleSet($"text").as("s"))
-      val a = sets.select($"doc_id".as("doc_a"), $"s".as("sa"))
-      val b = sets.select($"doc_id".as("doc_b"), $"s".as("sb"))
-      a.join(b, col("doc_a") < col("doc_b"))
-        .withColumn("j", DedupOps.jaccard($"sa", $"sb"))
-        .filter($"j" >= 0.5)
+      shingleJaccardPairs(t(s, d, "documents"))
         .select($"doc_a", $"doc_b", round($"j", 6).as("jaccard"))
     }, Some("""
       WITH d AS (
@@ -784,25 +792,16 @@ object DedupQueries extends QueryModule {
 
     // prefix-filtered set-similarity join (the PPJoin family, the
     // third candidate-generation scheme after banding (q34/q36) and
-    // sorted neighborhood (q101)): exact shingle-set Jaccard >= 0.6,
-    // with candidates generated ONLY from shared PREFIX shingles —
-    // each doc's rarest L = |S| - ceil(0.6|S|) + 1 shingles in global
-    // (df, shingle) order. The pigeonhole guarantee: two sets with
-    // J >= tau MUST share a prefix element, so the inverted index
-    // over prefixes (not whole sets) finds every pair — and the
-    // prefix is the rarest slice of each doc, so the index's posting
-    // lists are short by construction. A df <= 20 cap on join
-    // shingles (the q103/q116 guard) bounds every posting's fan-out
-    // at 190 pairs; pairs reachable only through boilerplate
-    // shingles are dropped (documented approximation — those pairs
-    // are the near-dup CLUSTERS q53 already resolves; the spec
-    // proves no-false-negatives vs brute force under the cap at
-    // sf0.001). Scale shape: df and size are one agg each; the
-    // per-doc sorted list is doc-bounded; candidate pairs come from
-    // the q103 sorted-posting explode (bounded cap^2/2 per shingle,
-    // no self-join); verification is two doc-keyed array joins +
-    // row-local intersection. Output is the <= 5-row Jaccard-decile
-    // report + the candidate count (1-row broadcast).
+    // sorted neighborhood (q101)): exact shingle-set Jaccard >= 0.6
+    // through DedupOps.jaccardPairs, whose candidates come ONLY from
+    // shared PREFIX shingles (pigeonhole-complete; see its doc). A
+    // df <= 20 cap on join shingles (the q103/q116 guard) bounds every
+    // posting's fan-out at 190 pairs; pairs reachable only through
+    // boilerplate shingles are dropped (documented approximation —
+    // those pairs are the near-dup CLUSTERS q53 already resolves; the
+    // spec proves no-false-negatives vs brute force under the cap at
+    // sf0.001). Output is the <= 5-row Jaccard-decile report, with
+    // the pruned candidates counted in bucket -1.
     Q("q154_setsim_join", (s, d) => {
       import s.implicits._
       // shingles collapse to 32-bit hv hashes up front (q36's oracle-
@@ -811,55 +810,19 @@ object DedupQueries extends QueryModule {
       // engines) so every downstream stage — df agg, doc-keyed
       // collect, sort, posting explode, intersection — runs on longs,
       // not 30-char strings (string variant measured 3x slower).
-      // round-15 opt: hashes + per-doc dedup assemble row-locally
-      // (distinct hv set per doc == corpus distinct on (doc, hv) since
-      // the doc id is part of the key) — the explode + corpus-wide
-      // .distinct() exchanged every (doc, hv) row; now the first
-      // exchange is the map-side-combined df agg
-      val sh = t(s, d, "documents")
-        .select($"doc_id",
-          TextOps.shingles(TextOps.tokens($"text")).as("__g"))
-        .select($"doc_id", explode(array_distinct(
-          transform($"__g", g => DedupOps.hv32Col(g)))).as("tok"))
-      val df = sh.groupBy($"tok").agg(count(lit(1)).as("df"))
-      // ONE (df, tok)-sorted struct array per doc carries everything
-      // downstream: sz = its size (no separate size branch), the
-      // prefix slice keeps df attached so the cap filter is row-local
-      // (no df re-join). The frame is one row per doc with a
-      // doc-bounded array — persisted because the prefix branch and
-      // both verification sides read it (3 consumers; unpersisted the
-      // sh -> df -> collect chain re-executes per consumer — measured
-      // 16 -> 3 s at sf0.1. Tiny, unlike the q103 frame whose persist
-      // was session-sticky: this is |docs| rows, not an exploded
-      // corpus).
-      val ord0 = sh.join(df, "tok").groupBy($"doc_id")
-        .agg(array_sort(collect_list(struct($"df", $"tok"))).as("dt"))
-        .withColumn("sz", size($"dt").cast("long"))
-        .filter($"sz" >= 5)
-        .persist()
-      val ord = ord0.select($"doc_id", $"sz",
-        expr("transform(dt, x -> x.tok)").as("lst"))
-      val pref = ord0.select($"doc_id",
-        explode(slice($"dt", lit(1),
-          ($"sz" - expr("(6 * sz + 9) div 10") + 1).cast("int"))).as("p"))
-        .filter($"p.df" <= 20)
-        .select($"doc_id", $"p.tok".as("tok"))
-      val cand = pref.groupBy($"tok")
-        .agg(sort_array(collect_list($"doc_id")).as("ds"))
-        .select(explode(PairOps.pairs($"ds", "da", "db")).as("p"))
-        .select($"p.da".as("da"), $"p.db".as("db")).distinct()
-      cand
-        .join(ord.select($"doc_id".as("da"), $"lst".as("la"), $"sz".as("sza")),
-          "da")
-        .join(ord.select($"doc_id".as("db"), $"lst".as("lb"), $"sz".as("szb")),
-          "db")
-        .select(size(array_intersect($"la", $"lb")).cast("long").as("inter"),
-          $"sza", $"szb")
-        .withColumn("jp", expr("(inter * 1000) div (sza + szb - inter)"))
+      // df counts every document, as the oracle does; the sz >= 5 rule
+      // filters the verified pairs.
+      val sets = t(s, d, "documents")
+        .select($"doc_id", array_distinct(transform(
+          TextOps.shingles(TextOps.tokens($"text")),
+          g => DedupOps.hv32Col(g))).as("s"))
+      DedupOps.jaccardPairs(sets, "doc_id", "s", 0.6, dfCap = Some(20L))
+        .filter($"size_a" >= 5 && $"size_b" >= 5)
+        .withColumn("jp", expr("(inter * 1000) div (size_a + size_b - inter)"))
         // matched pairs land in their jaccard decile; pruned candidates
         // (verified but below tau) land in bucket -1, so the report
         // carries the selectivity of the filter in the same frame —
-        // cand has exactly ONE consumer (no second count pipeline)
+        // the candidates have ONE consumer (no second count pipeline)
         .groupBy(when($"jp" >= 600, expr("jp div 100")).otherwise(-1L)
           .as("bucket"))
         .agg(count(lit(1)).as("n_pairs"), min($"jp").as("min_jp"),
@@ -1446,15 +1409,14 @@ object DedupQueries extends QueryModule {
 
     // Blocking pair-completeness (the ER-evaluation RECALL companion
     // to q204's reduction ratio): ground truth = every pair with
-    // exact shingle Jaccard >= 0.5 (q33's brute baseline); candidates
+    // exact shingle Jaccard >= 0.5 (q33's exact pair set); candidates
     // = the production MinHash-LSH band pairs (q36's pipeline, before
     // verification). Pair completeness = recall of true pairs that
     // co-occur in >= 1 band bucket, pair quality = precision of the
     // candidate set, plus their harmonic F — the three numbers that
     // decide whether 4x4 banding is the right operating point before
-    // a lake-scale dedup run. Bench-excluded like q33: the TRUTH side
-    // is the quadratic verification baseline (the production path it
-    // audits — q36 — stays linear). Output is one audit row.
+    // a lake-scale dedup run. Bench-excluded like q33, whose exact
+    // pair set is the TRUTH side. Output is one audit row.
     Q("q250_pair_completeness", (s, d) => {
       import s.implicits._
       val docs = t(s, d, "documents")
@@ -1462,18 +1424,14 @@ object DedupQueries extends QueryModule {
         .select($"doc_id", $"shingle").distinct()
       val sigs = DedupOps.minhashSignatures(sr, "doc_id", "shingle", k = 16)
       val bt = DedupOps.lshBands(sigs, "doc_id", "sig", bands = 4, rows = 4)
-      val cands = DedupOps.lshCandidates(bt, "doc_id").persist()
-      val sets = docs.select($"doc_id", TextOps.shingleSet($"text").as("sa"))
-      val truth = sets.select($"doc_id".as("doc_a"), $"sa")
-        .join(sets.select($"doc_id".as("doc_b"), $"sa".as("sb")),
-          col("doc_a") < col("doc_b"))
-        .filter(DedupOps.jaccard($"sa", $"sb") >= 0.5)
-        .select($"doc_a", $"doc_b").persist()
-      val nTrue = truth.agg(count(lit(1)).as("n_true"))
-      val nCand = cands.agg(count(lit(1)).as("n_cand"))
-      val nHit = truth.join(cands, Seq("doc_a", "doc_b"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-      nTrue.crossJoin(nCand).crossJoin(nHit)
+      val cands = DedupOps.lshCandidates(bt, "doc_id").withColumn("c", lit(1))
+      val truth = shingleJaccardPairs(docs)
+        .select($"doc_a", $"doc_b", lit(1).as("t"))
+      // one full outer join counts all three sets in one aggregate: a
+      // pair is true (t set), a candidate (c set) or a hit (both)
+      truth.join(cands, Seq("doc_a", "doc_b"), "full_outer")
+        .agg(count($"t").as("n_true"), count($"c").as("n_cand"),
+          count(when($"t".isNotNull && $"c".isNotNull, 1)).as("n_hit"))
         .withColumn("pc_ppm",
           expr("(n_hit * 1000000) div greatest(n_true, 1)"))
         .withColumn("pq_ppm",

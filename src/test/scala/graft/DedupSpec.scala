@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +11,45 @@ class DedupSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** Jaccard similarity of two distinct-element array columns: the brute
+    * all-pairs formula the exact operators are checked against. Under
+    * ANSI mode two empty sets raise DIVIDE_BY_ZERO. */
+  private def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") /
+      size(array_union(a, b)).cast("double")
+
+  /** All pairs within hamming distance `maxHamming` of their SimHash, by
+    * a nested-loop self-join on a < b: the quadratic baseline that
+    * [[DedupOps.simhashPairsBanded]] must equal. */
+  private def simhashPairs(sigs: DataFrame, idCol: String, sigCol: String,
+                           maxHamming: Int): DataFrame = {
+    val a = sigs.select(col(idCol).as("doc_a"), col(sigCol).as("sig_a"))
+    val b = sigs.select(col(idCol).as("doc_b"), col(sigCol).as("sig_b"))
+    a.join(b, col("doc_a") < col("doc_b"))
+      .withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))
+      .filter(col("hamming") <= maxHamming)
+      .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
+  }
+
+  /** Every pair a < b of `sets` (columns doc_id, s) with its exact
+    * (inter, size_a, size_b), by the brute nested-loop join. */
+  private def bruteOverlaps(sets: DataFrame): Set[(Long, Long, Long, Long, Long)] =
+    sets.select($"doc_id".as("a"), $"s".as("sa"))
+      .join(sets.select($"doc_id".as("b"), $"s".as("sb")), $"a" < $"b")
+      .select($"a", $"b", size(array_intersect($"sa", $"sb")).cast("long"),
+        size($"sa").cast("long"), size($"sb").cast("long"))
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+
+  private def operatorOverlaps(sets: DataFrame, tau: Double,
+      cap: Option[Long]): Set[(Long, Long, Long, Long, Long)] =
+    DedupOps.jaccardPairs(sets, "doc_id", "s", tau, cap)
+      .select($"a", $"b", $"inter", $"size_a", $"size_b")
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+
+  /** inter / union >= num / den, in exact integer arithmetic. */
+  private def atLeast(num: Long, den: Long)(r: (Long, Long, Long, Long, Long)) =
+    r._3 * den >= num * (r._4 + r._5 - r._3)
 
   test("exactDedup groups duplicates and keeps min id as canonical") {
     val df = Seq((1L, "aa"), (2L, "bb"), (3L, "aa"), (4L, "aa"))
@@ -45,7 +85,7 @@ class DedupSpec extends AnyFunSuite {
     val a = sets.select($"doc_id".as("doc_a"), $"s".as("sa"))
     val b = sets.select($"doc_id".as("doc_b"), $"s".as("sb"))
     val exact = a.join(b, col("doc_a") < col("doc_b"))
-      .withColumn("j", DedupOps.jaccard($"sa", $"sb"))
+      .withColumn("j", jaccard($"sa", $"sb"))
       .filter($"j" >= 0.5)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty, "testdata should contain planted near-dups")
@@ -58,7 +98,7 @@ class DedupSpec extends AnyFunSuite {
       DedupOps.lshBands(sigs, "doc_id", "sig", bands = 4, rows = 4), "doc_id")
       .join(sets.select($"doc_id".as("doc_a"), $"s".as("sa")), "doc_a")
       .join(sets.select($"doc_id".as("doc_b"), $"s".as("sb")), "doc_b")
-      .withColumn("j", DedupOps.jaccard($"sa", $"sb"))
+      .withColumn("j", jaccard($"sa", $"sb"))
       .filter($"j" >= 0.5)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
 
@@ -74,13 +114,99 @@ class DedupSpec extends AnyFunSuite {
       .select($"doc_id", $"simhash").cache()
     try {
       for (h <- Seq(1, 2, 3)) {
-        val brute = DedupOps.simhashPairs(sigs, "doc_id", "simhash", h)
+        val brute = simhashPairs(sigs, "doc_id", "simhash", h)
           .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
         val banded = DedupOps.simhashPairsBanded(sigs, "doc_id", "simhash", h)
           .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
         assert(banded == brute, s"maxHamming=$h: banded must be exact")
       }
     } finally { sigs.unpersist(); () }
+  }
+
+  test("jaccardPairs equals the brute all-pairs join at tau 0.5") {
+    val sets = graft.catalog.Tables.t(spark, sf, "documents")
+      .select($"doc_id", TextOps.shingleSet($"text").as("s"))
+    val brute = bruteOverlaps(sets)
+    val got = operatorOverlaps(sets, 0.5, None)
+    // every candidate is verified exactly, and no true pair is missed
+    assert(got.subsetOf(brute))
+    val truth = brute.filter(atLeast(1, 2))
+    assert(truth.nonEmpty, "testdata should contain planted near-dups")
+    assert(got.filter(atLeast(1, 2)) == truth)
+    // the prefix filter prunes: far fewer candidates than pairs
+    assert(got.size * 10 < brute.size)
+  }
+
+  test("jaccardPairs on q154's hv32 sets: exact uncapped, capped equals the capped-prefix recompute") {
+    val sets = graft.catalog.Tables.t(spark, sf, "documents")
+      .select($"doc_id", array_distinct(transform(
+        TextOps.shingles(TextOps.tokens($"text")),
+        g => conv(substring(md5(g), 1, 8), 16, 10).cast("long"))).as("s"))
+      .cache()
+    try {
+      val brute = bruteOverlaps(sets)
+      val truth = brute.filter(atLeast(3, 5))
+      assert(truth.nonEmpty)
+      assert(operatorOverlaps(sets, 0.6, None).filter(atLeast(3, 5)) == truth)
+      // at tau 0.55, J = 55/100 is found only through the 46th prefix
+      // element of the 100-set (its 45 rarest elements are its own); the
+      // double 0.55 · 100 is 55.00000000000001, whose ceil would give a
+      // 45-element prefix and miss the pair
+      val shared = (1L to 55L)
+      val tight = Seq(1L -> ((1000L until 1045L) ++ shared), 2L -> shared)
+        .toDF("doc_id", "s")
+      assert(operatorOverlaps(tight, 0.55, None) == Set((1L, 2L, 55L, 100L, 55L)))
+      // the cap drops join elements with df > 20: recompute the capped
+      // candidate rule on the driver, prefixes in (df, element) order
+      val local = sets.as[(Long, Seq[Long])].collect().toMap
+      val df = local.values.flatten.groupBy(identity).view.mapValues(_.size).toMap
+      def capped(s: Seq[Long]): Set[Long] = {
+        val l = s.size - (6 * s.size + 9) / 10 + 1
+        s.sortBy(e => (df(e), e)).take(l).filter(df(_) <= 20).toSet
+      }
+      val exp = brute.filter { case (a, b, _, _, _) =>
+        (capped(local(a)) & capped(local(b))).nonEmpty }
+      val got = operatorOverlaps(sets, 0.6, Some(20L))
+      assert(got == exp)
+      assert(got.filter(atLeast(3, 5)).subsetOf(truth))
+    } finally { sets.unpersist(); () }
+  }
+
+  test("documents under 3 tokens: the brute formula divides by zero, jaccardPairs and q33 return no pair for them") {
+    val texts = Seq(
+      1L -> "", 2L -> "one", 3L -> "one two", 4L -> "one two",
+      5L -> "alpha beta", 6L -> "x",
+      7L -> "the quick brown fox jumps over the lazy dog today",
+      8L -> "the quick brown fox jumps over the lazy dog again",
+      9L -> "completely different words about query plans and joins")
+    val docs = texts.toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("web"))
+      .withColumn("n_chars", length($"text").cast("long"))
+    val sets = docs.select($"doc_id", TextOps.shingleSet($"text").as("s"))
+    // the brute all-pairs join (q33 and q250's truth side before
+    // jaccardPairs) fails on two empty shingle sets under ANSI mode
+    val err = intercept[Exception] {
+      sets.select($"doc_id".as("a"), $"s".as("sa"))
+        .join(sets.select($"doc_id".as("b"), $"s".as("sb")), $"a" < $"b")
+        .filter(jaccard($"sa", $"sb") >= 0.5).collect()
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("DIVIDE_BY_ZERO")))
+    // an empty set has an empty prefix, so it is never a candidate; the
+    // DuckDB oracle's 0/0 is NULL and drops the pair the same way
+    assert(operatorOverlaps(sets, 0.5, None).map(r => (r._1, r._2)) == Set((7L, 8L)))
+    val dir = java.nio.file.Files.createTempDirectory("dedup-short").toString
+    try {
+      docs.write.parquet(s"$dir/documents.parquet")
+      val q33 = SparkEntry.queries("q33_jaccard_pairs")(spark, dir)
+        .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
+      assert(q33 == Set((7L, 8L)))
+      val q250 = SparkEntry.queries("q250_pair_completeness")(spark, dir).head()
+      assert(q250.getAs[Long]("n_true") == 1L)
+    } finally {
+      spark.catalog.clearCache()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("lshCandidates caps degenerate buckets") {

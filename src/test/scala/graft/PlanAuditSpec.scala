@@ -35,9 +35,8 @@ class PlanAuditSpec extends AnyFunSuite {
   /** Broadcast nested-loop is acceptable only when the broadcast side is
     * constant w.r.t. corpus size (a 1-row grand total, a model-sized
     * codebook, a fixed probe set) — the loop is then k*n, not n^2 — or
-    * in the two deliberately quadratic, bench-excluded baselines. */
+    * in q44, the deliberately quadratic, bench-excluded cosine baseline. */
   private val bnljOk: Map[String, String] = Map(
-    "q33_jaccard_pairs" -> "all-pairs Jaccard verification baseline oracling banded q34/q35 (bench-excluded)",
     "q44_embed_neardup" -> "all-pairs cosine verification baseline oracling LSH q50/q52 (bench-excluded)",
     "q37_knn_brute" -> "fixed probe set broadcast against corpus: the documented brute-force ANN baseline (k*n)",
     "q61_knn_sq8" -> "fixed probe set x SQ8 corpus scan: broadcast side is the query batch (constant)",
@@ -131,7 +130,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "q243_wasserstein_drift" -> "registry-sized per-source totals + 1-row corpus total fanned over the bounded distinct-value grid (q143 class)",
     "q245_kmv_sketch" -> "1-row merged-sketch stats x 1-row exact-distinct frames (scalar aggs, q159 class)",
     "q246_changepoint" -> "1-row max-day + 1-row flat-fit broadcasts; candidate x daily-grid BNLJ where BOTH sides are the value-domain-bounded day grid (q110 argument)",
-    "q250_pair_completeness" -> "all-pairs Jaccard TRUTH side of the blocking-recall audit (q33 class, bench-excluded) + 1-row count frames",
     "q254_time_decay" -> "1-row horizon (max day) broadcast onto the event stream (q241 class)",
     "q255_dau_wau" -> "rolling-window range join against the value-domain-bounded day grid (<= 7x fan-out per distinct (day, user) row, q110 argument)",
     "q257_mannwhitney" -> "1-row corpus-count broadcast onto the per-(source, length) frame (q143 class)",
@@ -340,6 +338,7 @@ class PlanAuditSpec extends AnyFunSuite {
     * above: an entry that stops matching fails the audit, so removing
     * a persist cannot silently regress. */
   private val cacheBackedSelfJoins: Map[String, String] = Map(
+    "q33_jaccard_pairs" -> "jaccardPairs: per-doc sorted-set frame, 3 consumers (prefix postings, both verify sides)",
     "q35_simhash_pairs" -> "simhashPairsBanded: banded frame feeds both candidate-join sides",
     "q36_minhash_lsh" -> "distinct shingle stream: 4 consumers (signatures, sizes, both intersection sides)",
     "q39_knn_lsh" -> "lshTopK: band table feeds query + index sides",
@@ -351,9 +350,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // label joins — the shared banded op itself is covered via
     // q35/q209/q217, and CC's persist discipline via CorpusOpsSpec.
     "q69_neardup_ensemble" -> "sigs + banded (text arm) and band table (embedding arm)",
-    "q154_setsim_join" -> "doc-array frame: 3 consumers (prefix postings, both verify sides)",
+    "q154_setsim_join" -> "jaccardPairs: per-doc sorted-set frame, 3 consumers (prefix postings, both verify sides)",
     "q209_cluster_cohesion" -> "sigs (3 consumers) + banded frame",
     "q217_threshold_sweep" -> "4x8-bit banded sweep frame feeds both candidate-join sides",
+    "q250_pair_completeness" -> "jaccardPairs truth side: per-doc sorted-set frame, 3 consumers (q33 class)",
   )
 
   /** Round-14 verdict #6: the SuffixOps finding showed the existing
