@@ -1818,7 +1818,6 @@ object CorpusQueries extends QueryModule {
         .select(explode(TextOps.tokens($"text")).as("tok"))
         .groupBy($"tok").agg(count(lit(1)).as("f"))
         .select($"tok", $"f", expr(hv).as("h"))
-        .persist()
       val sizes = Seq(256L, 1024L, 4096L).toDF("b")
       vocab.crossJoin(broadcast(sizes))
         .select($"b", expr("h % b").as("bucket"), $"f")

@@ -80,7 +80,7 @@ object DedupOps {
     * and the 100 TB shape. Docs with zero tokens produce no output row. */
   def simhash32FromTokenRows(tokenRows: DataFrame, idCol: String,
                              tokCol: String, out: String): DataFrame =
-    simhashFromTokenRows(tokenRows, idCol, tokCol, out, 32, hv32Sql(tokCol))
+    simhashFromTokenRows(tokenRows, idCol, out, 32, hv32Sql(tokCol))
 
   /** 60-bit SimHash — the band-saturation fix for the wide-hamming pair
     * family. Pigeonhole banding gives a hamming≤3 join maxHamming+1 = 4
@@ -96,10 +96,10 @@ object DedupOps {
     * bands via two BIGINT lanes) rather than changing shape. */
   def simhash60FromTokenRows(tokenRows: DataFrame, idCol: String,
                              tokCol: String, out: String): DataFrame =
-    simhashFromTokenRows(tokenRows, idCol, tokCol, out, 60, hv60Sql(tokCol))
+    simhashFromTokenRows(tokenRows, idCol, out, 60, hv60Sql(tokCol))
 
   private def simhashFromTokenRows(tokenRows: DataFrame, idCol: String,
-      tokCol: String, out: String, bits: Int, hvSql: String): DataFrame = {
+      out: String, bits: Int, hvSql: String): DataFrame = {
     val withHv = tokenRows.withColumn("__hv", expr(hvSql))
     val bitSums = (0 until bits).map(i =>
       sum(expr(s"if((shiftright(__hv, $i) & 1L) = 1L, 1L, -1L)")).as(s"__b$i"))
@@ -202,24 +202,12 @@ object DedupOps {
   private[operators] def minhashB(i: Int): Long =
     (i * 40503L + 17L) % minhashP
 
-  /** MinHash signature (k universal hash functions) over a distinct
-    * shingle-set column. Row-local; recomputable in external SQL.
-    * Prefer [[minhashSignatures]] (explode form) for large inputs —
-    * HOFs interpret per element. */
-  def minhashSignature(shingleSet: Column, k: Int): Column = {
-    val hvs = transform(shingleSet, s => hv32Col(s) % minhashP)
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(hvs,
-        h => (h * ((i.cast("long") * 2654435761L) % (minhashP - 1) + 1) +
-          (i.cast("long") * 40503L + 17L) % minhashP) % minhashP)))
-  }
-
   /** MinHash signatures from a distinct shingle-row stream: one base
     * hash per row materialized in a projection (aggregate expressions
     * get no subexpression elimination — never put the md5 there), then
     * k integer min-aggregates (map-side partial min) and one shuffle on
-    * the id — the scale path. Identical hash family to
-    * [[minhashSignature]], recomputable in DuckDB SQL.
+    * the id — the scale path. The hash family above, recomputable in
+    * DuckDB SQL.
     * Output: (id, sig array<long>). */
   def minhashSignatures(shingleRows: DataFrame, idCol: String,
                         shingleCol: String, k: Int): DataFrame = {

@@ -2340,23 +2340,19 @@ object DedupQueries extends QueryModule {
       SuffixOps.dupSpanProfile(pos, width = 8)
     }, Some(suffixDupOracleSql(8))),
 
-    // Streaming near-dup gate FALSE-POSITIVE cost, as an oracled batch
-    // twin (round-13 verdict #6): the gate
-    // ([[graft.streaming.EventsStreaming.nearDedupDocs]]) holds a doc
-    // when ANY of its 4 MinHash band keys was already claimed inside
-    // the watermark — conservative by design, and the
-    // held-but-not-near-duplicate rate was unmeasured. Twin semantics:
-    // arrival order = doc_id order (what the stream replays), a band
-    // key's CLAIMANT is the min doc_id carrying it, a doc is HELD iff
-    // some band's claimant precedes it, and a held doc is a FALSE
-    // POSITIVE iff its exact shingle Jaccard vs EVERY claimant that
-    // blocked it is < 0.5 (q36's threshold) — blame is assigned to the
-    // docs the gate actually deduped against, so the per-held fan-out
-    // is <= bands at ANY corpus size (never the full bucket). Output:
-    // one row — docs, held, fp-held, and both rates in floor-ppm.
-    // Identical hash family to q36 (signatures recomputed end-to-end
-    // in the oracle); StreamingSpec pins twin-vs-gate agreement on a
-    // deterministic one-doc-per-microbatch stream. Scale shape: one
+    // False-positive cost of a first-claimant MinHash band gate: a doc
+    // is held when ANY of its 4 band keys was already claimed by an
+    // earlier doc — conservative by design, so the
+    // held-but-not-near-duplicate rate is the number to watch.
+    // Semantics: arrival order = doc_id order, a band key's CLAIMANT is
+    // the min doc_id carrying it, a doc is HELD iff some band's claimant
+    // precedes it, and a held doc is a FALSE POSITIVE iff its exact
+    // shingle Jaccard vs EVERY claimant that blocked it is < 0.5 (q36's
+    // threshold) — blame is assigned to the docs the gate actually
+    // deduped against, so the per-held fan-out is <= bands at ANY corpus
+    // size (never the full bucket). Output: one row — docs, held,
+    // fp-held, and both rates in floor-ppm. Identical hash family to q36
+    // (signatures recomputed end-to-end in the oracle). Scale shape: one
     // distinct-shingle pass (persisted, 4 consumers), the claimant agg
     // is the gate's state table (linear), claims join fans out <=
     // bands rows/doc, the intersection join is candidate-restricted —

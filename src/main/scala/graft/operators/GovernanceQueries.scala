@@ -753,7 +753,8 @@ object GovernanceQueries extends QueryModule {
       FROM li""")),
 
     // File-pruning layout comparison (WHY sorted/range layout matters,
-    // quantified — the min/max-zonemap argument behind ZOrderLayout):
+    // quantified — the min/max-zonemap argument behind any clustered
+    // layout):
     // the same corpus assigned to files two ways (natural insertion
     // order vs value-range partitioning on the sort column), per-file
     // min/max zonemaps built, and a mid-range 10% predicate evaluated

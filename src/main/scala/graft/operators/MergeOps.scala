@@ -27,15 +27,4 @@ object MergeOps {
       .filter(col("__rn") === 1)
       .drop(pri, "__rn")
   }
-
-  /** Strict last-wins with an explicit ordering column (e.g. batch id or
-    * event time) instead of union-side priority. */
-  def dedupLastWins(df: DataFrame, keys: Seq[String],
-                    orderCols: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(orderCols.map(_.desc): _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
 }

@@ -68,7 +68,6 @@ object SimilarityOps {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      embCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     GraftFunctions.register(corpus.sparkSession)
     GraftPlanner.install(corpus.sparkSession)
     val q = broadcast(queries.select(
@@ -111,41 +110,9 @@ object SimilarityOps {
       .collect()
       .map(_.getSeq[Double](0).toSeq).toSeq
 
-  /** Lloyd's k-means refinement of [[seedCentroids]]: each iteration
-    * assigns every vector to its nearest centroid ROW-LOCALLY
-    * ([[graft.functions.NearestCells]] against the broadcast matrix)
-    * and recomputes per-cell elementwise means with ONE
-    * posexplode + groupBy (map-side partial avg; nlist×dim result rows
-    * collected — centroids are a small model by definition). Init is
-    * deterministic, but double partial-aggregation order is not, so
-    * refined centroids can differ in low-order bits across runs —
-    * callers needing bit-reproducibility (the q45 oracle) use the raw
-    * seeds; callers wanting recall use a few iterations. Empty cells
-    * keep their previous centroid. */
-  def kmeansCentroids(corpus: DataFrame, idCol: String, embCol: String,
-                      nlist: Int, iters: Int): Seq[Seq[Double]] = {
-    GraftFunctions.register(corpus.sparkSession)
-    var cents = seedCentroids(corpus, idCol, embCol, nlist)
-    val vecs = corpus.select(col(embCol).cast("array<double>").as("v"))
-    for (_ <- 1 to iters) {
-      val means = vecs
-        .withColumn("cell", call_function("nearest_cells",
-          col("v"), typedLit(cents), lit(1))(0))
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cell", "pos").agg(avg("x").as("m"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (cell, rows) =>
-          cell -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-        }
-      cents = cents.indices.map(c => means.getOrElse(c, cents(c)))
-    }
-    cents
-  }
-
   /** IVF-style ANN search against an explicit centroid matrix
-    * ([[seedCentroids]] or [[kmeansCentroids]] — collected once on the
-    * driver, the size of any broadcast ANN model). Every vector scores
+    * ([[seedCentroids]] or an externally trained model — collected once
+    * on the driver, the size of any broadcast ANN model). Every vector scores
     * all centroids ROW-LOCALLY via the matrix-form
     * [[graft.functions.NearestCells]] expression (one primitive loop per
     * row against the broadcast matrix) yielding its `nprobe` nearest
@@ -164,7 +131,6 @@ object SimilarityOps {
     */
   def ivfTopK(corpus: DataFrame, idCol: String, embCol: String,
               centMatrix: Seq[Seq[Double]], nprobe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     GraftFunctions.register(corpus.sparkSession)
     GraftPlanner.install(corpus.sparkSession)
     val vecs = corpus.select(col(idCol),
@@ -239,12 +205,10 @@ object SimilarityOps {
       seedCentroids(corpus, idCol, embCol, nlist1), nlist2, nprobe1,
       nprobe2, k)
 
-  /** [[ivfHierTopK]] with an EXPLICIT coarse matrix — the opt-in hook
-    * for [[kmeansCentroids]]-refined coarse cells (the coarse model is
-    * √-sized, so Lloyd's refinement of it costs the same as flat IVF's
-    * far smaller models; sub-seeds stay deterministic first-by-id within
-    * each coarse cell). Bit-reproducible callers (the q45 oracle) use
-    * raw seeds via the other overload. */
+  /** [[ivfHierTopK]] with an EXPLICIT coarse matrix — the hook for an
+    * externally trained coarse model (sub-seeds stay deterministic
+    * first-by-id within each coarse cell). Bit-reproducible callers (the
+    * q45 oracle) use raw seeds via the other overload. */
   def ivfHierTopK(corpus: DataFrame, idCol: String, embCol: String,
                   coarse: Seq[Seq[Double]], nlist2: Int, nprobe1: Int,
                   nprobe2: Int, k: Int): DataFrame = {
@@ -366,16 +330,10 @@ object SimilarityOps {
         typedLit(planeMatrix), lit(planesPerTable)))
         .as(Seq("table_id", "bucket")))
 
-  /** Probe rows — base signature plus `probes-1` lowest-margin bit flips
-    * per table ([[graft.functions.HyperplaneProbes]]); `pos div probes`
-    * recovers the table id. */
-  private def probeRows(corpus: DataFrame, idCol: String, embCol: String,
-                        planeMatrix: Seq[Seq[Double]], planesPerTable: Int,
-                        probes: Int): DataFrame =
-    probeRowsWithPos(corpus, idCol, embCol, planeMatrix, planesPerTable,
-      probes).drop("pos")
-
-  /** Like [[probeRows]] but keeps `pos`: hp_probes emits the BASE
+  /** Probe rows (id, vector, pos, bucket) — base signature plus
+    * `probes-1` lowest-margin bit flips per table
+    * ([[graft.functions.HyperplaneProbes]]); `pos div probes` recovers
+    * the table id. hp_probes emits the BASE
     * signature at `pos % probes == 0` of each table (HyperplaneProbes
     * ordering contract), so one persisted frame of these rows serves
     * both the probe side (all rows) and the base/index side (the
@@ -458,7 +416,6 @@ object SimilarityOps {
   def lshTopK(corpus: DataFrame, idCol: String, embCol: String,
               tables: Seq[Array[Array[Double]]], k: Int,
               probes: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     GraftFunctions.register(corpus.sparkSession)
     GraftPlanner.install(corpus.sparkSession)
     // all tables' signatures in ONE matrix expression (single primitive
@@ -518,8 +475,8 @@ object SimilarityOps {
   /** The int8 code vector itself (array<int>), same arithmetic as
     * [[int8QuantStats]] — the stored form a quantizing writer persists. */
   def int8Codes(emb: Column, ranges: Array[(Double, Double)]): Column = {
-    val mnA = array(ranges.map(r => lit(r._1)): _*)
-    val mxA = array(ranges.map(r => lit(r._2)): _*)
+    val mnA = array(ranges.map(r => lit(r._1)).toIndexedSeq: _*)
+    val mxA = array(ranges.map(r => lit(r._2)).toIndexedSeq: _*)
     transform(sequence(lit(1), lit(ranges.length)), i => {
       val v = element_at(emb, i).cast("double")
       val mn = element_at(mnA, i)
@@ -531,8 +488,8 @@ object SimilarityOps {
 
   def int8QuantStats(emb: Column, ranges: Array[(Double, Double)]): (Column, Column, Column) = {
     val dim = ranges.length
-    val mnA = array(ranges.map(r => lit(r._1)): _*)
-    val mxA = array(ranges.map(r => lit(r._2)): _*)
+    val mnA = array(ranges.map(r => lit(r._1)).toIndexedSeq: _*)
+    val mxA = array(ranges.map(r => lit(r._2)).toIndexedSeq: _*)
     def code(i: Column): Column = {
       val v = element_at(emb, i).cast("double")
       val mn = element_at(mnA, i)
@@ -669,51 +626,6 @@ object SimilarityOps {
       element_at(cbLits(mi), col(s"__c$mi") + 1)): _*)))
   }
 
-  /** Lloyd refinement of a PQ codebook ([[pqAnchorCodebook]] output):
-    * each iteration assigns every SUBVECTOR to its nearest centroid with
-    * the same augmented max-dot expression the encoder uses, then
-    * recomputes per-(subspace, code) elementwise means in ONE
-    * inline + posexplode + groupBy pass over all subspaces (map-side
-    * partial avg; m×k×sub result rows — model-sized by definition).
-    * Empty cells keep their previous centroid. Same determinism caveat
-    * as [[kmeansCentroids]]: double partial-aggregation order makes
-    * low-order bits run-dependent, so the oracled q64 path keeps raw
-    * anchors while recall/distortion-hungry callers refine. */
-  def pqRefine(corpus: DataFrame, embCol: String,
-               codebook: Array[Array[(Array[Double], Double)]],
-               iters: Int): Array[Array[(Array[Double], Double)]] = {
-    GraftFunctions.register(corpus.sparkSession)
-    val m = codebook.length
-    val sub = codebook(0)(0)._1.length
-    var cb = codebook
-    for (_ <- 1 to iters) {
-      val e = col(embCol).cast("array<double>")
-      val subStructs = array((0 until m).map(mi => struct(
-        lit(mi).as("mi"),
-        pqCode(e, cb(mi), mi, sub).as("code"),
-        slice(e, mi * sub + 1, sub).as("sv"))): _*)
-      val means = corpus.select(inline(subStructs))
-        .select(col("mi"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("mi", "code", "pos").agg(avg("x").as("mn"))
-        .collect()
-        .groupBy(r => (r.getInt(0), r.getInt(1)))
-      cb = Array.tabulate(m) { mi =>
-        Array.tabulate(cb(mi).length) { c =>
-          means.get((mi, c)) match {
-            case Some(rows) =>
-              val v = rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toArray
-              var n = 0.0
-              var i = 0
-              while (i < v.length) { n += v(i) * v(i); i += 1 }
-              (v, n)
-            case None => cb(mi)(c)
-          }
-        }
-      }
-    }
-    cb
-  }
-
   /** IVF-PQ: the composition a lake-scale ANN service actually runs —
     * coarse cells bound the candidate set (≈ nprobe/nlist of the corpus
     * considered per query), PQ-ADC scores those candidates from codes +
@@ -731,9 +643,8 @@ object SimilarityOps {
       seedCentroids(corpus, idCol, embCol, nlist), nprobe, codebook,
       candidates, k)
 
-  /** Explicit-coarse-model overload: production callers pass a
-    * [[kmeansCentroids]]-refined (or externally trained) cell model;
-    * the q68 oracle path uses raw first-nlist seeds, which this
+  /** Explicit-coarse-model overload for an externally trained cell
+    * model; the q68 oracle path uses raw first-nlist seeds, which this
     * delegates from, so the replayable arithmetic is identical. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 embCol: String, centroids: Seq[Seq[Double]], nprobe: Int,

@@ -473,7 +473,6 @@ object SimilarityQueries extends QueryModule {
     // id). Oracle re-derives the first-8-seed cells and takes the
     // transitive closure with a recursive CTE (q53's pattern).
     Q("q74_semantic_dedup", (s, d) => {
-      import s.implicits._
       val emb = t(s, d, "embeddings")
       val n = Stats.parquetRowCount(s, s"$d/embeddings.parquet")
       val nlist = math.max(4, math.ceil(math.sqrt(n / 8.0)).toInt)
@@ -1537,7 +1536,7 @@ object SimilarityQueries extends QueryModule {
       def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
         call_function("dot_product", a, b)
       val projCols = planes.zipWithIndex.map { case (pl, k) =>
-        dot($"e", array(pl.map(lit(_)): _*)).as(s"p$k")
+        dot($"e", array(pl.map(lit(_)).toIndexedSeq: _*)).as(s"p$k")
       }
       val v = t(s, d, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("e"))

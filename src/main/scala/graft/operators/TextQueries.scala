@@ -44,8 +44,7 @@ object TextQueries extends QueryModule {
 
   def qs: Seq[Q] = Seq(
 
-    // tumbling event-time window aggregation (batch analog of the
-    // streaming pipeline in graft.streaming).
+    // tumbling event-time window aggregation.
     Q("q25_hourly_window", (s, d) => {
       import s.implicits._
       t(s, d, "events")

@@ -90,11 +90,11 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
     * count and, on the single path, the (uid, json) rows it collected
     * (None on the sharded path). The single
     * pretty-printed file (reference contract) is a driver materialization
-    * bounded by maxDriverManifest; past it, or once sharded state exists,
-    * entries merge as sharded keyed JSON, and the sharded `manifest`
-    * follows the MERGED entry state, so uids absorbed from an earlier
-    * small-mode file are never lost. Prior entries named by `removeKeys`
-    * are dropped on either path. */
+    * bounded by maxDriverManifest, and its `manifest` lists the MERGED
+    * entry keys; past it, or once sharded state exists, entries merge as
+    * sharded keyed JSON, which needs no manifest (the state's uid column
+    * is one), so a stale single-file `manifest` is deleted. Prior entries
+    * named by `removeKeys` are dropped on either path. */
   private def writeKeyed(module: String, entries: DataFrame, single: String,
                          shardedDir: String, manifest: Option[String], logger: JsonLogger,
                          fields: ListMap[String, Any] = ListMap.empty,
@@ -106,12 +106,7 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
         (KeyedJsonSink.writeSingle(rows, single, manifest, removeKeys), Some(rows), 0)
       } else {
         val merged = KeyedJsonSink.mergeSharded(m, shardedDir, removeKeys, Some(single))
-        manifest.foreach { file =>
-          KeyedJsonSink.mergeSharded(KeyedJsonSink.readSharded(spark, shardedDir)
-            .select(col("uid"), lit("en-us").as("locale")),
-            "uid", file.stripSuffix(".json") + "-sharded")
-          Files.deleteIfExists(Paths.get(file))
-        }
+        manifest.foreach(file => Files.deleteIfExists(Paths.get(file)))
         (merged.rows, None, merged.shards)
       }
     } finally m.release()

@@ -83,7 +83,7 @@ object WindowTopKRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(RankLimit(rank, limit), w: Window) =>
       asTopK(w, rank, limit).getOrElse(f)
-    case f @ Filter(RankLimit(rank, limit), p @ Project(plist, w: Window)) =>
+    case f @ Filter(RankLimit(rank, limit), Project(plist, w: Window)) =>
       asTopK(w, rank, limit).map(t => Project(plist, t)).getOrElse(f)
   }
 }

@@ -245,9 +245,10 @@ object KeyedJsonSink {
     * Driver-side by design — see class doc. Entries absent from the delta
     * keep their raw JSON text. `removeKeys` is looked up only among the
     * prior file's keys, in one bounded collect; no job runs when the prior
-    * file is empty. The same `rows` write the master
-    * manifest (S8) {"en-us": {uid: ""}} (reference: authors.js:34,52) in
-    * Spark's string order (UTF-8 bytes), not Java's. */
+    * file is empty. The merged keys write the master manifest (S8)
+    * {"en-us": {uid: ""}} (reference: authors.js:34,52) in Spark's string
+    * order (UTF-8 bytes), not Java's, so an ID-restricted re-export keeps
+    * every prior entry in it. */
   def writeSingle(rows: Array[Row], path: String, manifest: Option[String],
                   removeKeys: Option[DataFrame]): Long = {
     val fresh = rows.map(r => r.getString(0) -> r.getString(1))
@@ -270,7 +271,7 @@ object KeyedJsonSink {
       fresh).sortBy(_._1)
     atomicWrite(p, pretty(merged.map { case (k, v) => escapeKey(k) + ": " + v }
       .mkString("{", ", ", "}")).getBytes(StandardCharsets.UTF_8))
-    manifest.foreach(m => atomicWrite(Paths.get(m), pretty(rows.map(_.getString(0))
+    manifest.foreach(m => atomicWrite(Paths.get(m), pretty(merged.map(_._1)
       .sortBy(UTF8String.fromString).map(escapeKey(_) + ": \"\"")
       .mkString("{\"en-us\": {", ", ", "}}")).getBytes(StandardCharsets.UTF_8)))
     merged.length.toLong

@@ -7,10 +7,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Target schemas COMPILED from contenttypes JSON config instead of
-  * hand-transcribed case classes (reference: contenttypes/{authors,
+/** Contenttype field definitions LOADED from contenttypes JSON config
+  * instead of hand-transcribed case classes (reference: contenttypes/{authors,
   * categories,posts}.json field definitions; __priority.json import
   * order): the config-driven source of truth the orchestrator uses for
   * module ordering and output-column conformance.
@@ -19,22 +18,6 @@ final case class FieldDef(uid: String, dataType: String, multiple: Boolean,
                           mandatory: Boolean, unique: Boolean)
 
 final case class ContentType(uid: String, title: String, fields: Seq[FieldDef]) {
-  /** Spark type per contenttype data_type (reference field defs:
-    * text / isodate / file -> string-shaped; reference -> uid list;
-    * group fields have nested schemas and are skipped by [[sparkSchema]]
-    * — none of the pipelines materialize them). */
-  def sparkSchema: StructType = StructType(
-    fields.filterNot(_.dataType == "group").map { f =>
-      val base: DataType = f.dataType match {
-        case "reference" => ArrayType(StringType)
-        case "number" => DoubleType
-        case "boolean" => BooleanType
-        case _ => StringType // text, isodate, file
-      }
-      val t = if (f.multiple && f.dataType != "reference") ArrayType(base) else base
-      StructField(f.uid, t, nullable = !f.mandatory)
-    })
-
   def fieldOrder: Seq[String] = fields.map(_.uid)
 }
 

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** A named relational source catalog: where the WordPress tables live.
   * The reference opens one MySQL connection per module and paginates with
@@ -61,18 +60,4 @@ object IdListSource {
       .select(explode(split(trim(col("line")), ",")).as("id_str"))
       .filter(col("id_str") =!= "")
       .select(col("id_str").cast("long").as("id"))
-}
-
-/** S6 — JSON state source: re-reads previously written keyed-entry files
-  * before merging (reference: helper.js:15-22). Keyed-object JSON
-  * {uid: {...}} is exploded back to rows. */
-object JsonStateSource {
-  def read(spark: SparkSession, path: String, valueSchema: StructType): DataFrame = {
-    import org.apache.spark.sql.types.MapType
-    import org.apache.spark.sql.types.StringType
-    spark.read.option("wholetext", true).text(path)
-      .select(explode(from_json(col("value"), MapType(StringType, valueSchema)))
-        .as(Seq("uid", "entry")))
-      .select(col("uid"), col("entry.*"))
-  }
 }

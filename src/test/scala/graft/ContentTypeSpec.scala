@@ -3,12 +3,11 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ContentTypeCatalog
 
-/** Contenttypes-config compilation (reference: contenttypes JSON field
+/** Contenttypes-config loading (reference: contenttypes JSON field
   * definitions, __priority.json ordering). Fixtures follow the
   * reference's structure with intentionally re-ordered fields so
   * conformance is observable.
@@ -80,16 +79,17 @@ object ContentTypeFixture {
 class ContentTypeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  test("load compiles field definitions into Spark schemas") {
+  test("load parses field definitions from contenttype files") {
     val cts = ContentTypeCatalog.load(spark, ContentTypeFixture.dir)
     assert(cts.keySet == Set("authors", "categories", "posts")) // __ skipped
-    val posts = cts("posts").sparkSchema
-    assert(posts("author").dataType == ArrayType(StringType))   // reference
-    assert(posts("category").dataType == ArrayType(StringType))
-    assert(posts("date").dataType == StringType)                // isodate
-    assert(posts("featured_image").dataType == StringType)      // file
-    assert(!posts("title").nullable)                            // mandatory
-    assert(posts("url").nullable)
+    assert(cts("posts").fieldOrder == Seq("title", "url", "author", "date",
+      "featured_image", "full_description", "category", "guid"))
+    val posts = cts("posts").fields.map(f => f.uid -> f).toMap
+    assert(posts("author").dataType == "reference")
+    assert(posts("date").dataType == "isodate")
+    assert(posts("featured_image").dataType == "file")
+    assert(posts("title").mandatory)
+    assert(!posts("url").mandatory)
     val authors = cts("authors")
     assert(authors.title == "Authors")
     assert(authors.fields.find(_.uid == "url").exists(_.unique))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{OrderedConcat, Permalink}
+import graft.functions.Permalink
 import graft.operators.EavOps
 
 /** Property tests from SURVEY.md §5.2: EAV pivot ≡ the reference's
@@ -75,21 +75,6 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
-  test("zvalue interleave matches the bit-twiddling reference on random pairs") {
-    import graft.sources.ZOrderLayout
-    val gen = Gen.listOfN(40, Gen.zip(
-      Gen.choose(0L, 65535L), Gen.choose(0L, 65535L)))
-    checkProp(Prop.forAll(gen) { pairs =>
-      def ref(x: Long, y: Long): Long =
-        (0 until 16).map(i => (((x >> i) & 1L) << (2 * i)) |
-          (((y >> i) & 1L) << (2 * i + 1))).sum
-      val got = pairs.toDF("x", "y")
-        .select(ZOrderLayout.zvalue(col("x"), col("y")).as("z"))
-        .collect().map(_.getLong(0)).toList
-      got == pairs.map { case (x, y) => ref(x, y) }
-    })
-  }
-
   test("minify(pretty(x)) round-trips any generated JSON object") {
     import graft.sinks.KeyedJsonSink
     // strings exercising quotes, escapes, braces-in-strings, unicode
@@ -122,21 +107,6 @@ class PropertySpec extends AnyFunSuite {
       a.sortBy(_._1).toSeq == b.sortBy(_._1).toSeq &&
         a.forall(r => Seq(r._2, r._3, r._4).forall(x => x >= 0 && x < 64))
     })
-  }
-
-  test("OrderedConcat aggregator equals sorted collect_list built-ins") {
-    val data = Seq(("a", "x"), ("a", "m"), ("a", "x"), ("b", "z"), ("b", "a"))
-      .toDF("k", "v")
-    val typed = data.as[(String, String)]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(OrderedConcat(",", distinct = false).toColumn.name("cs"))
-      .collect().toMap
-    assert(typed == Map("a" -> "m,x,x", "b" -> "a,z"))
-    val distinctTyped = data.as[(String, String)]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(OrderedConcat("|", distinct = true).toColumn.name("cs"))
-      .collect().toMap
-    assert(distinctTyped == Map("a" -> "m|x", "b" -> "a|z"))
   }
 
   test("char-entropy kernel: permutation-invariant, bounded, uniform-exact") {

@@ -60,27 +60,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.2, s"IVF recall@1 $recall too low ($hits/${brute.size})")
   }
 
-  test("k-means-refined IVF centroids keep or improve recall@1 over seeds") {
-    val emb = graft.catalog.Tables.t(spark, sf, "embeddings")
-    val seed = SimilarityOps.seedCentroids(emb, "vec_id", "embedding", 16)
-    val km = SimilarityOps.kmeansCentroids(emb, "vec_id", "embedding", 16, iters = 3)
-    assert(km.length == 16 && km.forall(_.length == seed.head.length))
-    assert(km != seed) // the refinement actually moved the centroids
-    val brute = SimilarityOps.bruteForceTopK(emb, emb, "vec_id", "embedding", k = 1)
-      .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toMap
-    def recall(cents: Seq[Seq[Double]]): Double = {
-      val ivf = SimilarityOps
-        .ivfTopK(emb, "vec_id", "embedding", cents, nprobe = 4, k = 1)
-        .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toMap
-      ivf.count { case (q, n) => brute.get(q).contains(n) }.toDouble / brute.size
-    }
-    val rSeed = recall(seed)
-    val rKm = recall(km)
-    assert(rKm >= 0.2, s"k-means recall $rKm below floor")
-    assert(rKm >= rSeed - 0.05,
-      s"k-means recall $rKm materially worse than seed recall $rSeed")
-  }
-
   test("LSH near-dup pairs are a subset of the exact pair set with sane recall") {
     val emb = graft.catalog.Tables.t(spark, sf, "embeddings")
     val tables = SimilarityOps.lshTables(planes = 4, tables = 8, dim = 64)
@@ -94,60 +73,6 @@ class SimilaritySpec extends AnyFunSuite {
     if (exact.nonEmpty)
       assert(lsh.size.toDouble / exact.size >= 0.5,
         s"recall ${lsh.size}/${exact.size} too low")
-  }
-
-  test("recall sweep: Lloyd-refined IVF and PQ models vs raw seeds at two corpus sizes") {
-    // the oracled q45/q64/q68 paths use raw seeds/anchors (bit-replayable
-    // in SQL); production callers refine with kmeansCentroids/pqRefine.
-    // This pins the value of that refinement: at BOTH corpus sizes the
-    // refined model's recall is at least the seed model's (Lloyd's moves
-    // centroids toward the data, it must not cost recall), with the
-    // actual numbers surfaced for the record.
-    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.1")) {
-      val emb = graft.catalog.Tables.t(spark, dir, "embeddings")
-      val n = emb.count()
-
-      // IVF arm: recall@1 over the full corpus, tight nprobe so the
-      // cell model quality is what decides recall
-      val nlist = if (n <= 1000) 16 else 32
-      val brute1 = SimilarityOps.bruteForceTopK(emb, emb, "vec_id", "embedding", k = 1)
-        .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toMap
-      def ivfRecall(cents: Seq[Seq[Double]]): Double = {
-        val got = SimilarityOps
-          .ivfTopK(emb, "vec_id", "embedding", cents, nprobe = 2, k = 1)
-          .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toMap
-        got.count { case (q, nb) => brute1.get(q).contains(nb) }.toDouble / brute1.size
-      }
-      val seed = SimilarityOps.seedCentroids(emb, "vec_id", "embedding", nlist)
-      val refined = SimilarityOps.kmeansCentroids(emb, "vec_id", "embedding", nlist, iters = 2)
-      val (rSeed, rRef) = (ivfRecall(seed), ivfRecall(refined))
-      info(f"$dir n=$n IVF recall@1: seed=$rSeed%.3f refined=$rRef%.3f")
-      assert(refined != seed, "refinement must move the centroids")
-      assert(rRef >= rSeed,
-        f"refined IVF recall $rRef%.3f fell below seed recall $rSeed%.3f at $dir")
-
-      // PQ arm: recall@5 for the 10-query probe batch through the full
-      // ADC-shortlist-rerank path, raw anchors vs 2 Lloyd iterations
-      val queries = emb.filter($"vec_id" < 10)
-      val brute5 = SimilarityOps.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5)
-        .select($"query_id", $"neighbor_id").as[(Long, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      def pqRecall(cb: Array[Array[(Array[Double], Double)]]): Double = {
-        val got = SimilarityOps.pqTopK(emb, queries, "vec_id", "embedding",
-            cb, candidates = 20, k = 5)
-          .select($"query_id", $"neighbor_id").as[(Long, Long)].collect()
-          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-        val hits = brute5.map { case (q, t) =>
-          got.getOrElse(q, Set.empty).count(t.contains) }.sum
-        hits.toDouble / brute5.values.map(_.size).sum
-      }
-      val rawCb = SimilarityOps.pqAnchorCodebook(emb, "vec_id", "embedding", n, m = 4, k = 16)
-      val refCb = SimilarityOps.pqRefine(emb, "embedding", rawCb, iters = 2)
-      val (pRaw, pRef) = (pqRecall(rawCb), pqRecall(refCb))
-      info(f"$dir n=$n PQ recall@5: anchors=$pRaw%.3f refined=$pRef%.3f")
-      assert(pRef >= pRaw,
-        f"refined PQ recall $pRef%.3f fell below anchor recall $pRaw%.3f at $dir")
-    }
   }
 
   test("hyperplanes are deterministic by seed") {
@@ -250,13 +175,6 @@ class SimilaritySpec extends AnyFunSuite {
     val again = recall(SimilarityOps.ivfHierTopK(emb, "vec_id", "embedding",
       nlist1 = 3, nlist2 = 3, nprobe1 = 2, nprobe2 = 2, k = 1))
     assert(again == hier)
-    // opt-in k-means-refined coarse level keeps recall in the same band
-    val km = SimilarityOps.kmeansCentroids(emb, "vec_id", "embedding",
-      nlist = 3, iters = 2)
-    val hierKm = recall(SimilarityOps.ivfHierTopK(emb, "vec_id", "embedding",
-      km, nlist2 = 3, nprobe1 = 2, nprobe2 = 2, k = 1))
-    assert(hierKm >= hier - 0.15,
-      s"k-means coarse recall $hierKm materially below seed coarse $hier")
   }
 
   test("multi-probe recall >= single-probe recall on identical tables") {
@@ -331,14 +249,6 @@ class SimilaritySpec extends AnyFunSuite {
     val b = SimilarityOps.ivfPqTopK(emb.repartition(7), emb.filter($"vec_id" < 5),
       "vec_id", "embedding", 8, 2, cb, 20, 3).collect().toSet
     assert(a == b, "IVF-PQ results must be partitioning-invariant")
-    // explicit-coarse-model overload: kmeans-refined cells keep recall
-    val refined = SimilarityOps.kmeansCentroids(emb, "vec_id", "embedding",
-      nlist = 8, iters = 2)
-    val gotR = SimilarityOps.ivfPqTopK(emb, emb, "vec_id", "embedding",
-      refined, 2, cb, 64, 1)
-      .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toMap
-    val rR = gotR.count { case (q, n) => brute.get(q).contains(n) }.toDouble / brute.size
-    assert(rR >= r2 - 0.1, s"refined coarse model lost recall: $rR vs seed $r2")
   }
 
   test("hierarchical IVF-PQ: sane recall@1, more probes never lose recall, partitioning-invariant") {
@@ -385,28 +295,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(labels(7L)._1 == 7L && !labels(7L)._2) // canonical keeps itself
     // 500 corpus rows + 3 plants, one label row each
     assert(labels.size == 503)
-  }
-
-  test("pqRefine: Lloyd iterations never increase quantization distortion") {
-    import graft.functions.VectorFns.dot
-    val emb = graft.catalog.Tables.t(spark, sf, "embeddings")
-    val cb0 = SimilarityOps.pqAnchorCodebook(
-      emb, "vec_id", "embedding", n = 500L, m = 4, k = 16)
-    def distortion(cb: Array[Array[(Array[Double], Double)]]): Double = {
-      val e = $"embedding".cast("array<double>")
-      SimilarityOps.pqEncode(emb, "embedding", cb)
-        .select((dot(e, e) - lit(2.0) * dot(e, $"recon")
-          + dot($"recon", $"recon")).as("d2"))
-        .agg(avg($"d2")).head().getDouble(0)
-    }
-    val d0 = distortion(cb0)
-    val cb1 = SimilarityOps.pqRefine(emb, "embedding", cb0, iters = 1)
-    val d1 = distortion(cb1)
-    val cb2 = SimilarityOps.pqRefine(emb, "embedding", cb1, iters = 1)
-    val d2 = distortion(cb2)
-    assert(d0 > 0.0)
-    assert(d1 <= d0 + 1e-9, s"one Lloyd step must not raise distortion: $d1 > $d0")
-    assert(d2 <= d1 + 1e-9, s"second Lloyd step must not raise distortion: $d2 > $d1")
   }
 
   test("PQ ADC recall@1 vs brute force is sane and improves with candidates") {

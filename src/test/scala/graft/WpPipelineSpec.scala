@@ -442,7 +442,7 @@ class WpPipelineSpec extends AnyFunSuite {
     assert(m2.isEmpty, s"expected healed id removed, got $m2")
   }
 
-  test("lake-scale entries sink: sharded entries + manifest, merged counts stable") {
+  test("lake-scale entries sink: sharded entries, no manifest copy, counts stable") {
     val outDir = Files.createTempDirectory("wplakeent").toString
     val orch = new Orchestrator(spark, cat, outDir, _ => Right(Array[Byte](1)),
       maxDriverManifest = 0)
@@ -456,10 +456,10 @@ class WpPipelineSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(entries.keySet == Set("16", "18", "20"))
     assert(entries("16").contains("hello-world"))
-    val manifest = graft.sinks.KeyedJsonSink
-      .readSharded(spark, s"$outDir/master/entries/posts-sharded")
-      .collect().map(_.getString(0)).toSet
-    assert(manifest == Set("16", "18", "20"))
+    // the sharded state's uid column is the manifest: no second copy,
+    // and no single-file manifest beside it
+    assert(!Files.exists(Paths.get(s"$outDir/master/entries/posts-sharded")))
+    assert(!Files.exists(Paths.get(s"$outDir/master/entries/posts.json")))
     val exported = Files.readAllLines(Paths.get(s"$outDir/logs/posts.log"))
       .toArray.map(_.toString).filter(_.contains("Exported posts"))
     assert(exported.length == 2 && exported.forall(l =>
@@ -521,6 +521,23 @@ class WpPipelineSpec extends AnyFunSuite {
     val orch = new Orchestrator(spark, cat, outDir, _ => Right(Array[Byte](1)))
     assert(orch.runModule("posts", Some(idFile)) == 2)
     intercept[IllegalArgumentException] { orch.runModule("nope") }
+  }
+
+  test("an ID-restricted re-export keeps every merged entry in the master manifest") {
+    val outDir = Files.createTempDirectory("wpidsman").toString
+    val orch = new Orchestrator(spark, cat, outDir, _ => Right(Array[Byte](1)))
+    assert(orch.runModule("posts") == 3)
+    val idFile = s"$outDir/ids.txt"
+    Files.write(Paths.get(idFile), "18".getBytes("UTF-8"))
+    assert(orch.runModule("posts", Some(idFile)) == 3)
+    def keys(json: String) = graft.sinks.KeyedJsonSink.topLevelEntries(json)
+    val entries = keys(new String(Files.readAllBytes(
+      Paths.get(s"$outDir/entries/posts/en-us.json")), "UTF-8"))
+    assert(entries.map(_._1) == Seq("16", "18", "20"))
+    val manifest = keys(new String(Files.readAllBytes(
+      Paths.get(s"$outDir/master/entries/posts.json")), "UTF-8"))
+    assert(manifest.map(_._1) == Seq("en-us"))
+    assert(keys(manifest.head._2).map(_._1) == Seq("16", "18", "20"))
   }
 
   test("ExportMain CLI arg contract matches app.js:9-39") {
