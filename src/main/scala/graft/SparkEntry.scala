@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.Q
 import graft.operators._
+import graft.plans.GraftPlanner
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -28,9 +29,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q100_pipeline_v2")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each run first
+    * installs graft ([[GraftPlanner.install]]) and sets the session's
+    * parquet conf for [[graft.catalog.Tables.t]], so a query plans the
+    * same whichever queries ran before it in the session. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(q => q.name -> q.run).toMap
+    modules.map(q => q.name -> { (s: SparkSession, d: String) =>
+      GraftPlanner.install(s)
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      q.run(s, d)
+    }).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -44,9 +44,11 @@ object Tables {
     * raw nanos (`spark.sql.legacy.parquet.nanosAsLong`) and truncate to a
     * proper microsecond timestamp with integral `div` (a double division
     * would lose precision above 2^53 ns). DuckDB applies the same ns→us
-    * truncation when it reads the file, so oracle comparisons line up. */
+    * truncation when it reads the file, so oracle comparisons line up.
+    * The conf is set on the session once per query by
+    * [[graft.SparkEntry.queries]] (and once by the test session), not on
+    * every table read. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) {
       case (acc, StructField(c, LongType, _, _)) if c == "ts" && name == "events" =>

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -55,38 +54,4 @@ case class EncodeUri(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): EncodeUri =
     copy(child = newChild)
-}
-
-/** Registration of graft's SQL-callable custom expressions. */
-object GraftFunctions {
-  /** Idempotent per-session registration; after this,
-    * `call_function("encode_uri", col)` / SQL `encode_uri(x)` and
-    * `dot_product(a, b)` work. Skips names already present so repeated
-    * calls (every operator entry point registers defensively) don't spam
-    * "replaced a previously registered function" warnings. */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    def add(name: String, b: Seq[Expression] => Expression): Unit =
-      if (reg.lookupFunctionBuilder(FunctionIdentifier(name)).isEmpty)
-        reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    add("encode_uri", exprs => EncodeUri(exprs.head))
-    add("dot_product", exprs => DotProduct(exprs.head, exprs(1)))
-    add("hp_signatures", exprs => HyperplaneSignatures(exprs.head, exprs(1), exprs(2)))
-    add("hp_probes", exprs =>
-      HyperplaneProbes(exprs.head, exprs(1), exprs(2), exprs(3)))
-    add("nearest_cells", exprs => NearestCells(exprs.head, exprs(1), exprs(2)))
-    add("nearest_cells_col", exprs =>
-      NearestCellsCol(exprs.head, exprs(1), exprs(2)))
-    add("nfc_normalize", exprs => NfcNormalize(exprs.head))
-    add("char_entropy_nano_sum", exprs => CharEntropyNanoSum(exprs.head))
-    add("char_ngram_distinct", exprs => CharNgramDistinct(exprs.head,
-      exprs(1).eval().asInstanceOf[Int]))
-    add("char_ngram_max_count", exprs => CharNgramMaxCount(exprs.head,
-      exprs(1).eval().asInstanceOf[Int]))
-    add("winnow_distinct", exprs => WinnowDistinct(exprs.head,
-      exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]))
-    add("jaro_winkler_milli", exprs => JaroWinklerMilli(exprs.head, exprs(1)))
-    add("damerau_levenshtein", exprs => DamerauLevenshtein(exprs.head, exprs(1)))
-  }
 }

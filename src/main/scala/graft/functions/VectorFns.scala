@@ -69,10 +69,9 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 /** Column-level entry points for the vector expressions. Resolution goes
-  * through the session function registry (`call_function`), so callers
-  * must have run [[GraftFunctions.register]] (or built the session with
-  * [[GraftExtensions]]) — the operator entry points in
-  * `graft.operators.SimilarityOps` do this for you. */
+  * through the session function registry (`call_function`), so the
+  * session must have had [[graft.plans.GraftPlanner.install]] run on it —
+  * every catalog query and the `Orchestrator` do. */
 object VectorFns {
   /** Codegen'd dot product; casts both sides to `array<double>` so it
     * accepts the raw `array<float>` embedding column directly. */

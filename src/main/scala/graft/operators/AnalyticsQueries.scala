@@ -2237,7 +2237,6 @@ object AnalyticsQueries extends QueryModule {
     Q("q199_persistent_parts", (s, d) => {
       import s.implicits._
       import graft.operators.{CorpusOps => C}
-      graft.plans.GraftPlanner.install(s)
       val wk = t(s, d, "lineitem")
         .join(t(s, d, "orders"), $"l_orderkey" === $"o_orderkey")
         .select(
@@ -2335,7 +2334,6 @@ object AnalyticsQueries extends QueryModule {
     Q("q208_item_cooccurrence", (s, d) => {
       import s.implicits._
       import graft.operators.{CorpusOps => C}
-      graft.plans.GraftPlanner.install(s)
       // round-16 opt: ONE order-keyed exchange builds the distinct
       // basket arrays directly (collect_set dedups DURING the partial
       // agg — the q173 convention; the first cut used

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.{Q, QueryModule}
 import graft.catalog.Tables.t
-import graft.functions.GraftFunctions
 
 /** Text-cleaning / normalization operators (SURVEY.md §2.12 X96-X100) —
   * the pre-filter passes a large-scale training-data pipeline runs before
@@ -81,7 +80,6 @@ object CleaningQueries extends QueryModule {
     // (compose), precomposed e-acute (already NFC), plain ASCII (no-op).
     // Row-local, zero shuffles beyond the final tiny agg-free project.
     Q("q127_nfc_normalize", (s, d) => {
-      GraftFunctions.register(s)
       import s.implicits._
       // cases 0/1 are DECOMPOSED (base letter + combining grave/acute -
       // NFC composes them); case 2 is precomposed e-acute (already NFC)
@@ -169,7 +167,6 @@ object CleaningQueries extends QueryModule {
     // BEFORE summation (the q73 scheme), so the oracle's unnest-and-group
     // formulation lands on the identical integer.
     Q("q129_char_entropy", (s, d) => {
-      GraftFunctions.register(s)
       import s.implicits._
       t(s, d, "documents")
         .filter(length($"text") > 0)
@@ -423,7 +420,6 @@ object CleaningQueries extends QueryModule {
     // co-keyed on the id; bottom-5 per source rides the rank pushdown
     // (WindowGroupLimit), so no source-wide sort materializes.
     Q("q135_embedding_outliers", (s, d) => {
-      GraftFunctions.register(s)
       import s.implicits._
       val src = t(s, d, "documents").select($"doc_id", $"source")
       val emb = t(s, d, "embeddings")
@@ -649,7 +645,6 @@ object CleaningQueries extends QueryModule {
     // engines (no gram exists; Spark's sequence() would otherwise
     // descend). Exactness: ppm integer div on non-negative counts.
     Q("q256_char_ngram_redund", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       // ROW-LOCAL distinct via the codegen'd char_ngram_distinct
       // kernel (TextNorm.scala) — the gram stream never leaves the
@@ -789,7 +784,6 @@ object CleaningQueries extends QueryModule {
     // registry-sized rollup after. Docs under 4 codepoints excluded
     // in BOTH engines. Exactness: ppm integer division on counts.
     Q("q291_dominant_gram", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val perDoc = t(s, d, "documents")
         .filter(length($"text") >= 4)
@@ -835,7 +829,6 @@ object CleaningQueries extends QueryModule {
     // kernel call (winnow_distinct — gram stream, window minima, and
     // the distinct set never leave the scan); ONE registry rollup.
     Q("q327_winnowing", (s, d) => {
-      GraftFunctions.register(s)
       import s.implicits._
       t(s, d, "documents")
         .filter(length($"text") >= 11)

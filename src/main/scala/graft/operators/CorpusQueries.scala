@@ -177,7 +177,6 @@ object CorpusQueries extends QueryModule {
     // Executes through TopKPerKeyExec (k-row buffer per stratum).
     Q("q62_reservoir_sample", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       CorpusOps.reservoirSample(t(s, d, "documents"), $"doc_id", $"lang", k = 25)
         .select($"doc_id", $"lang", $"rk")
     }, Some("""
@@ -220,7 +219,6 @@ object CorpusQueries extends QueryModule {
     // broadcasts; the per-doc top-k executes through TopKPerKeyExec.
     Q("q58_distinctive_terms", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val n = Stats.parquetRowCount(s, s"$d/documents.parquet")
       val toks = t(s, d, "documents")
         .select($"doc_id", explode(TextOps.tokens($"text")).as("term"))
@@ -362,7 +360,6 @@ object CorpusQueries extends QueryModule {
     // the daily ingest slice.
     Q("q67_ingest_dedup", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val docs = t(s, d, "documents")
         .select($"doc_id", TextOps.fingerprint($"text").as("fp"))
       val batch = docs.filter($"doc_id" % 10 === 7)
@@ -539,7 +536,6 @@ object CorpusQueries extends QueryModule {
     // round(double, N) is not — BASELINE.md).
     Q("q75_budget_select", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val docs = t(s, d, "documents")
         .select($"doc_id", TextOps.tokenCount($"text").as("tok"),
           floor(TextOps.qualityRaw($"text") * 1000).as("qb"))
@@ -967,7 +963,6 @@ object CorpusQueries extends QueryModule {
     // materializes the corpus on the driver.
     Q("q100_pipeline_v2", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val docs = t(s, d, "documents")
       // round-16 opt (q77's form): a doc's duplicated-window count is
       // nw − nu (uniqueWindowCounts, windowCount), so the corpus rows
@@ -1059,7 +1054,6 @@ object CorpusQueries extends QueryModule {
     // per-source sort, no spill proportional to the hottest domain.
     Q("q105_source_cap", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val w = Window.partitionBy($"source").orderBy($"qb".desc, $"doc_id".asc)
       t(s, d, "documents")
         .select($"doc_id", $"source",
@@ -1223,7 +1217,6 @@ object CorpusQueries extends QueryModule {
     // shuffle on lang, no per-language sort however hot the language.
     Q("q122_weighted_sample", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val mix = CorpusOps.hashMix($"doc_id", 1000003L)
       // weight floor of 1: an empty doc (n_chars = 0) must not divide
       // ln(u) by zero — -Infinity fails the long cast in both engines

@@ -1060,7 +1060,6 @@ object DedupQueries extends QueryModule {
     // sig equi-join per side; the rollup is <= size-band rows.
     Q("q209_cluster_cohesion", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val docs = t(s, d, "documents")
       val tokRows = docs
         .select($"doc_id", explode(TextOps.tokens($"text")).as("tok"))
@@ -1516,7 +1515,6 @@ object DedupQueries extends QueryModule {
     // runs inside whole-stage codegen; top-20 rides the bucketed
     // prefilter (q79 class).
     Q("q270_jaro_winkler_er", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val docs = t(s, d, "documents")
         .select($"doc_id",
@@ -1575,7 +1573,6 @@ object DedupQueries extends QueryModule {
     // whole-stage codegen on the same row; the histogram rollup is
     // map-side-combined over the ≤16-row distance domain.
     Q("q280_damerau_typo_profile", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val docs = t(s, d, "documents")
         .select($"doc_id",

@@ -149,7 +149,6 @@ object ExtensionQueries extends QueryModule {
         .filter(!($"meta_key" === "acct_band" && $"s_suppkey" % 3 === 0))
         .write.mode("overwrite").parquet(eavDir)
       val eav = s.read.parquet(eavDir)
-      graft.plans.GraftPlanner.install(s)
       s.conf.set("spark.graft.eav.pivotJoinChains", "true")
       s.conf.set("spark.graft.eav.entityColumn", "s_suppkey")
       try {
@@ -555,7 +554,6 @@ object ExtensionQueries extends QueryModule {
     // the bucketed-prefilter top-K; sketch+total is a 1-row broadcast.
     Q("q124_mg_heavy_hitters", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val k = 16
       val mg = udaf(graft.functions.MisraGries(k))
       val vocab = t(s, d, "documents")
@@ -599,7 +597,6 @@ object ExtensionQueries extends QueryModule {
     // the bucketed prefilter — nothing vocabulary-sized on one task.
     Q("q125_term_drift", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val grpA = regexp_extract($"source", "([0-9]+)", 1).cast("long") % 2 === 0
       val counts = t(s, d, "documents")
         .select(grpA.as("ga"), explode(TextOps.tokens($"text")).as("tok"))

@@ -228,7 +228,6 @@ object GovernanceQueries extends QueryModule {
     // everything after is model-sized (labels x 2 x dims); no
     // broadcast, no windows.
     Q("q157_centroid_drift", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val cent = t(s, d, "embeddings")
         .select($"label".cast("long").as("label"),

@@ -118,7 +118,6 @@ object MultimodalQueries extends QueryModule {
     Q("q232_frame_dedup", (s, d) => {
       import s.implicits._
       import org.apache.spark.sql.functions._
-      graft.plans.GraftPlanner.install(s)
       val docs = Tables.t(s, d, "documents")
       // round-16 opt: the per-doc DISTINCT digest stream assembles
       // row-locally (array_distinct over the per-row digest transform —
@@ -201,7 +200,6 @@ object MultimodalQueries extends QueryModule {
     // == text bytes per the q40/q76 ASCII convention — no explode, no
     // shuffle); ONE map-side-combined 4-row registry agg.
     Q("q303_payload_entropy", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       import org.apache.spark.sql.functions._
       val fmt = when($"doc_id" % 4 === 0, lit("jpeg"))

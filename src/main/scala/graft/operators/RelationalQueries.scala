@@ -252,7 +252,6 @@ object RelationalQueries extends QueryModule {
     // the oracle hash-checks the custom plan against DuckDB QUALIFY.
     Q("q13_dedup_lastwins", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val w = Window.partitionBy($"user_id")
         .orderBy($"ts".desc, $"event_id".desc)
       t(s, d, "events")

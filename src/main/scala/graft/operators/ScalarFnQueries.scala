@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.{Q, QueryModule}
 import graft.catalog.Tables.t
-import graft.functions.{GraftFunctions, Permalink, StringFns}
+import graft.functions.{Permalink, StringFns}
 
 /** Scalar function surface (SURVEY.md §2.8 F1-F12), exercised row-level so
   * the oracle hashes every output value. URLs/guids are synthesized from
@@ -111,7 +111,6 @@ object ScalarFnQueries extends QueryModule {
     // are pinned in EncodeUriSpec.
     Q("q24_encode_uri", (s, d) => {
       import s.implicits._
-      GraftFunctions.register(s)
       t(s, d, "part").select(
         $"p_partkey",
         call_function("encode_uri",

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 import scala.util.Random
 
-import graft.functions.{GraftFunctions, VectorFns}
-import graft.plans.GraftPlanner
+import graft.functions.VectorFns
 
 /** Approximate-nearest-neighbor similarity search over an embedding column
   * (`Array[Float]`).
@@ -68,8 +67,6 @@ object SimilarityOps {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      embCol: String, k: Int): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    GraftPlanner.install(corpus.sparkSession)
     val q = broadcast(queries.select(
       col(idCol).as("query_id"), col(embCol).cast("array<double>").as("qe")))
     val c = corpus.select(
@@ -88,8 +85,6 @@ object SimilarityOps {
     * filter. */
   def cosinePairs(corpus: DataFrame, idCol: String, embCol: String,
                   threshold: Double): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    GraftPlanner.install(corpus.sparkSession)
     val a = corpus.select(col(idCol).as("id_a"),
       col(embCol).cast("array<double>").as("ea"))
     val b = corpus.select(col(idCol).as("id_b"),
@@ -131,8 +126,6 @@ object SimilarityOps {
     */
   def ivfTopK(corpus: DataFrame, idCol: String, embCol: String,
               centMatrix: Seq[Seq[Double]], nprobe: Int, k: Int): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    GraftPlanner.install(corpus.sparkSession)
     val vecs = corpus.select(col(idCol),
       col(embCol).cast("array<double>").as("v"))
     val base = vecs.withColumn("cells",
@@ -213,8 +206,6 @@ object SimilarityOps {
                   coarse: Seq[Seq[Double]], nlist2: Int, nprobe1: Int,
                   nprobe2: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(corpus.sparkSession)
-    GraftPlanner.install(corpus.sparkSession)
     val vecs = corpus.select(col(idCol).as("vid"),
       col(embCol).cast("array<double>").as("v"))
     val withCells = vecs.withColumn("cells",
@@ -354,7 +345,6 @@ object SimilarityOps {
   def lshNearDupPairs(corpus: DataFrame, idCol: String, embCol: String,
                       tables: Seq[Array[Array[Double]]],
                       threshold: Double, probes: Int = 1): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val planesPerTable = tables.head.length
     val planeMatrix: Seq[Seq[Double]] = tables.flatten.map(_.toSeq)
     val q = math.max(1, math.min(planesPerTable + 1, probes))
@@ -416,8 +406,6 @@ object SimilarityOps {
   def lshTopK(corpus: DataFrame, idCol: String, embCol: String,
               tables: Seq[Array[Array[Double]]], k: Int,
               probes: Int = 1): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    GraftPlanner.install(corpus.sparkSession)
     // all tables' signatures in ONE matrix expression (single primitive
     // loop per row), posexplode'd into (table_id, bucket) band rows.
     // Multi-probe: the query side additionally probes its lowest-margin
@@ -527,7 +515,6 @@ object SimilarityOps {
              embCol: String, ranges: Array[(Double, Double)],
              candidates: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(corpus.sparkSession)
     val codes = int8Codes(col(embCol), ranges)
     val c = corpus.select(col(idCol).as("neighbor_id"), codes.as("ccodes"))
     val q = queries.select(col(idCol).as("query_id"), codes.as("qcodes"))
@@ -614,7 +601,6 @@ object SimilarityOps {
     * persists is just the code columns — m bytes per vector at k ≤ 256. */
   def pqEncode(corpus: DataFrame, embCol: String,
                codebook: Array[Array[(Array[Double], Double)]]): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val m = codebook.length
     val sub = codebook(0)(0)._1.length
     val e = col(embCol).cast("array<double>")
@@ -651,7 +637,6 @@ object SimilarityOps {
                 codebook: Array[Array[(Array[Double], Double)]],
                 candidates: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(corpus.sparkSession)
     val seeds = centroids
     val e = col(embCol).cast("array<double>")
     val coded = pqEncode(corpus.select(col(idCol), col(embCol)), embCol, codebook)
@@ -707,8 +692,6 @@ object SimilarityOps {
                     codebook: Array[Array[(Array[Double], Double)]],
                     candidates: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(corpus.sparkSession)
-    GraftPlanner.install(corpus.sparkSession)
     val e = col(embCol).cast("array<double>")
     val coarseLit = typedlit(seedCentroids(corpus, idCol, embCol, nlist1))
     val coded = pqEncode(corpus.select(col(idCol), col(embCol)), embCol, codebook)
@@ -781,7 +764,6 @@ object SimilarityOps {
     * star algorithm; nothing collects more than the model. */
   def semanticDedupLabels(corpus: DataFrame, idCol: String, embCol: String,
                           nlist: Int, threshold: Double): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val seeds = seedCentroids(corpus, idCol, embCol, nlist)
     val assigned = corpus
       .select(col(idCol), col(embCol).cast("array<double>").as("e"))
@@ -813,7 +795,6 @@ object SimilarityOps {
              embCol: String, codebook: Array[Array[(Array[Double], Double)]],
              candidates: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(corpus.sparkSession)
     val e = col(embCol).cast("array<double>")
     val coded = pqEncode(corpus.select(col(idCol), col(embCol)), embCol, codebook)
       .select(col(idCol).as("neighbor_id"), col("recon"))

@@ -917,7 +917,6 @@ object SimilarityQueries extends QueryModule {
     // both corpus-growing, the same banded shape as q115. Exact cosine
     // runs only on in-bucket candidates.
     Q("q138_semantic_leakage", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val planes = SimilarityOps.hyperplanes(8, 64, seed = 1337L)
       val h = CorpusOps.hashMix($"vec_id", 1000L)
@@ -982,7 +981,6 @@ object SimilarityQueries extends QueryModule {
     // TOTAL order, so bucketing cannot change the survivors and the
     // engine-local hash never reaches the oracle.
     Q("q141_hard_negatives", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val qids = Seq(0L, 3L, 7L, 11L, 19L, 23L, 31L, 42L)
       val src = t(s, d, "documents").select($"doc_id", $"source")
@@ -1041,7 +1039,6 @@ object SimilarityQueries extends QueryModule {
     // query (two top-50 lists), AQE-adjudicated, and the final top-10
     // re-rank windows over <= 100 survivors per query.
     Q("q191_rrf_fusion", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val qids = Seq(0L, 5L)
       // dense ranking: cosine to the query embedding (unit-norm -> dot)
@@ -1530,7 +1527,6 @@ object SimilarityQueries extends QueryModule {
     // pair sample is an id-keyed equi-join (never all-pairs); the
     // rollup rides the bounded ratio-bucket domain.
     Q("q286_jl_distortion", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val planes = SimilarityOps.hyperplanes(16, 64, seed = 7L)
       def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
@@ -1767,7 +1763,6 @@ object SimilarityQueries extends QueryModule {
     // round count fixed, so total cost is 4 linear passes at any
     // corpus size.
     Q("q300_kcenter_seeds", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val emb = t(s, d, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("e"))
@@ -1859,7 +1854,6 @@ object SimilarityQueries extends QueryModule {
     // window (q141 pattern); the pair join is within-probe over 20
     // rows (≤190 pairs/probe, constant).
     Q("q306_truncation_tau", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val emb = t(s, d, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("e"))
@@ -2043,7 +2037,6 @@ object SimilarityQueries extends QueryModule {
     // (q141 pattern); the pair join is within-probe over 10 rows
     // (45 pairs, constant).
     Q("q310_result_diversity", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val emb = t(s, d, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("e"))

@@ -169,7 +169,6 @@ object TextQueries extends QueryModule {
     // no per-partition sort.
     Q("q51_curation", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val w = Window.partitionBy($"fp").orderBy($"doc_id".asc)
       t(s, d, "documents")
         .select($"doc_id",
@@ -367,7 +366,6 @@ object TextQueries extends QueryModule {
     // sort materialization.
     Q("q108_tfidf_keywords", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val docs = t(s, d, "documents")
       val tf = docs
         .select($"doc_id", explode(TextOps.tokens($"text")).as("tok"))
@@ -488,7 +486,6 @@ object TextQueries extends QueryModule {
     // the final one sees <= 20 x 64 survivors).
     Q("q113_bpe_pair_stats", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val tc = t(s, d, "documents")
         .select(explode(TextOps.tokens($"text")).as("tok"))
         .groupBy($"tok").agg(count(lit(1)).as("c"))
@@ -577,7 +574,6 @@ object TextQueries extends QueryModule {
     // prefilter + bounded final (both lower to TopKPerKeyExec).
     Q("q121_collocations", (s, d) => {
       import s.implicits._
-      graft.plans.GraftPlanner.install(s)
       val docs = t(s, d, "documents")
       val bg = TextOps.shingleRows(docs, "doc_id", "text", n = 2)
         .groupBy($"shingle".as("bigram")).agg(count(lit(1)).as("cab"))

@@ -7,6 +7,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.GraftPlanner
 import graft.sinks.{HttpFetchSink, JsonLogger, KeyedJsonSink}
 import graft.sources.{ContentTypeCatalog, IdListSource, WpCatalog}
 
@@ -43,6 +44,9 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
                          fetcher: HttpFetchSink.Fetcher,
                          contentTypesDir: Option[String] = None,
                          maxDriverManifest: Long = 10000L) {
+
+  // assets' encode_uri resolves through the session's function registry
+  GraftPlanner.install(spark)
 
   private val contentTypes = contentTypesDir
     .map(d => ContentTypeCatalog.load(spark, d)).getOrElse(Map.empty)

@@ -169,9 +169,10 @@ object Pipelines {
 
   /** Assets (reference: assets.js:26-148): attachment scan (S2/P6),
     * filename from guid (F8/F10), encodeURI (F9) — returns the fetch plan
-    * rows; the side-effecting download happens in HttpFetchSink. */
+    * rows; the side-effecting download happens in HttpFetchSink. The
+    * session must have graft installed for `encode_uri`; the
+    * [[Orchestrator]] installs it. */
   def assets(spark: SparkSession, cat: WpCatalog): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     cat.table(spark, "posts")
       .filter(disc(spark, col("post_type")) === "attachment")
       .select(

@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
@@ -397,19 +396,4 @@ object TopKPerKeyExec {
   private[graft] val fallbackCount = new java.util.concurrent.atomic.LongAdder
   /** Bytes spilled to disk by fallback sorters (same caveat as above). */
   private[graft] val spillBytes = new java.util.concurrent.atomic.LongAdder
-}
-
-/** Installs the rule + strategy into a session's experimental hooks —
-  * the runtime path for sessions not built with `withExtensions`
-  * (e.g. the driver's). Idempotent. */
-object GraftPlanner {
-  def install(spark: SparkSession): Unit = synchronized {
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(WindowTopKRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ WindowTopKRule
-    if (!exp.extraOptimizations.contains(EavPivotRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ EavPivotRule
-    if (!exp.extraStrategies.contains(TopKStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
-  }
 }

@@ -163,7 +163,6 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("reservoirSample executes through TopKPerKeyExec, not a full window sort") {
-    graft.plans.GraftPlanner.install(spark)
     val df = (0L until 500L).map(i => (i, if (i % 2 == 0) "en" else "de"))
       .toDF("id", "lang")
     val q = CorpusOps.reservoirSample(df, $"id", $"lang", k = 10)

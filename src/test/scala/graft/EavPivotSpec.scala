@@ -5,8 +5,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LeafNode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.GraftPlanner
-
 /** The EAV self-join-chain -> pivot optimizer rule: plan shape (one scan,
   * one aggregate, no join) and result equivalence against the unrewritten
   * join, including the inner-join drop semantics.
@@ -48,7 +46,6 @@ class EavPivotSpec extends AnyFunSuite {
   }
 
   private def withRule[T](on: Boolean, entity: String = "user_id")(f: => T): T = {
-    GraftPlanner.install(spark)
     spark.conf.set(conf, on.toString)
     spark.conf.set(entConf, entity)
     try f finally {
@@ -116,7 +113,6 @@ class EavPivotSpec extends AnyFunSuite {
   }
 
   test("rule is off by default and leaves the join intact") {
-    GraftPlanner.install(spark)
     assert(spark.conf.getOption(conf).forall(_ == "false"))
     assert(joinCount(chain(eav)) == 1)
   }
@@ -135,7 +131,6 @@ class EavPivotSpec extends AnyFunSuite {
   }
 
   test("does not fire when entityColumn conf is unset") {
-    GraftPlanner.install(spark)
     spark.conf.set(conf, "true")
     try {
       spark.conf.unset(entConf)

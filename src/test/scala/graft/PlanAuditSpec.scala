@@ -372,7 +372,7 @@ class PlanAuditSpec extends AnyFunSuite {
     * the boundedness argument for the hot class itself, and are
     * stale-guarded like every other map in this suite. */
   private val hotWindowOk: Map[String, String] = Map(
-    "q93_sql_text" -> "row_number <= 3 per priority in plain shared ANSI text: rank-limited, so built-in InferWindowGroupLimit bounds the exchange to k rows per key per MAP task (k x maps per key at the reduce, never the corpus), and on graft sessions WindowTopKRule plans it as the one-pass TopKPerKeyExec; the 5-value priority registry output is the engine-portable SQL surface itself",
+    "q93_sql_text" -> "row_number <= 3 per priority in plain shared ANSI text: rank-limited, so built-in InferWindowGroupLimit bounds the exchange to k rows per key per MAP task (k x maps per key at the reduce, never the corpus), and on every catalog run WindowTopKRule plans it as the one-pass TopKPerKeyExec; the 5-value priority registry output is the engine-portable SQL surface itself",
     "q244_theilsen_trend" -> "median rank window over the PAIRWISE-SLOPE frame of the (type, day) count grid: <= C(days, 2) rows per type at ANY corpus size — value-domain bounded by the observation window (q110 argument), never event-cardinality",
   )
   /** Max tolerated share of the window input held by ONE partition key

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.functions.{GraftFunctions, Permalink, StringFns, UriCodec}
+import graft.functions.{Permalink, StringFns, UriCodec}
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -17,6 +17,10 @@ object SparkTestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // what SparkEntry.queries does per catalog query, once for the specs
+    // that call operators and Tables.t directly
+    graft.plans.GraftPlanner.install(s)
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s
   }
 }
@@ -95,7 +99,6 @@ class ScalarFnSpec extends AnyFunSuite {
   }
 
   test("F9 EncodeUri expression under codegen equals UriCodec") {
-    GraftFunctions.register(spark)
     val df = Seq("a b/ü?x=1 2", "plain", "%%").toDF("a")
     val got = df.select(call_function("encode_uri", $"a")).as[String].collect()
     val want = Seq("a b/ü?x=1 2", "plain", "%%").map(UriCodec.encode)
@@ -103,7 +106,6 @@ class ScalarFnSpec extends AnyFunSuite {
   }
 
   test("char_ngram_distinct codegen equals the HOF composition") {
-    GraftFunctions.register(spark)
     val data = Seq("abcdefg", "aaaaaa", "abcabcabc", "abc", "",
       "über straße über", "xyxyxyxyxy")
     val df = data.toDF("a")
@@ -123,7 +125,6 @@ class ScalarFnSpec extends AnyFunSuite {
   }
 
   test("char_ngram_max_count codegen equals the explode composition") {
-    GraftFunctions.register(spark)
     val data = Seq("abcdefg", "aaaaaa", "abcabcabc", "abc", "",
       "über straße über", "xyxyxyxyxy")
     val df = data.toDF("a")
@@ -155,7 +156,6 @@ class ScalarFnSpec extends AnyFunSuite {
   }
 
   test("winnow_distinct codegen equals the HOF composition and honors the guarantee") {
-    GraftFunctions.register(spark)
     val data = Seq("the quick brown fox jumps over the lazy dog",
       "aaaaaaaaaaaaaaaa", "abcdefghijklmnop", "short", "",
       "über straße über straße über straße")
@@ -197,7 +197,6 @@ class ScalarFnSpec extends AnyFunSuite {
     // unboosted below the 0.7 gate despite a shared prefix
     assert(jaroWinklerMilli("abcdefgh", "abzzzzzz") == 500)
     // codegen equivalence through the registered function
-    GraftFunctions.register(spark)
     val got = Seq(("MARTHA", "MARHTA"), ("DIXON", "DICKSONX"))
       .toDF("a", "b")
       .select(call_function("jaro_winkler_milli", $"a", $"b"))
@@ -226,7 +225,6 @@ class ScalarFnSpec extends AnyFunSuite {
     // metric sanity: symmetry and never exceeding plain Levenshtein
     assert(dl("abcdef", "abcfad") == dl("abcfad", "abcdef"))
     // codegen equivalence through the registered function
-    GraftFunctions.register(spark)
     val got = Seq(("CA", "ABC"), ("teh", "the"), ("kitten", "sitting"))
       .toDF("a", "b")
       .select(call_function("damerau_levenshtein", $"a", $"b"))

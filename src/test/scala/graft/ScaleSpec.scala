@@ -4,9 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.Tables
-import graft.functions.GraftExtensions
 
-/** Scale-mechanics evidence: session-extension function injection and
+/** Scale-mechanics evidence: graft's one install per entry point and
   * bucketed co-located joins (pre-partitioned storage removes the join
   * shuffle — the 100 TB technique for repeated joins on the same key). */
 class ScaleSpec extends AnyFunSuite {
@@ -26,21 +25,62 @@ class ScaleSpec extends AnyFunSuite {
     assert(SparkEntry.select(Seq()) == SparkEntry.modules.map(_.name))
   }
 
-  test("GraftExtensions injects encode_uri at session build time") {
-    val base = spark // ensure the shared context exists first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val got = s2.sql("SELECT encode_uri('a b/ü') AS x").head().getString(0)
-      assert(got == "a%20b/%C3%BC")
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
+  test("a catalog query plans the same whatever ran before it; every entry point installs graft") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def ops(df: DataFrame): Seq[String] = {
+      def walk(p: SparkPlan): Seq[String] = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case _ => p.nodeName +: p.children.flatMap(walk)
+      }
+      walk(df.queryExecution.executedPlan)
     }
+    val q93 = SparkEntry.queries("q93_sql_text")
+    val fresh = ops(q93(spark.newSession(), sf))
+    val after = spark.newSession()
+    SparkEntry.queries("q13_dedup_lastwins")(after, sf).count()
+    assert(fresh == ops(q93(after, sf)), s"alone: $fresh")
+    assert(fresh.contains("TopKPerKey"), s"alone: $fresh")
+
+    val names = Seq("encode_uri", "dot_product", "hp_signatures", "hp_probes",
+      "nearest_cells", "nearest_cells_col", "nfc_normalize",
+      "char_entropy_nano_sum", "char_ngram_distinct", "char_ngram_max_count",
+      "winnow_distinct", "jaro_winkler_milli", "damerau_levenshtein")
+    def missing(s: SparkSession) = names.filterNot(n =>
+      s.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+    val viaCatalog = spark.newSession()
+    SparkEntry.queries("q01_pricing_summary")(viaCatalog, sf)
+    assert(missing(viaCatalog).isEmpty)
+    assert(viaCatalog.sql("SELECT encode_uri('a b/ü') AS x").head().getString(0) ==
+      "a%20b/%C3%BC")
+    val viaExport = spark.newSession()
+    new graft.pipelines.Orchestrator(viaExport,
+      new graft.sources.ParquetCatalog(sf), "/tmp/graft-unused-out", _ => Left("unused"))
+    assert(missing(viaExport).isEmpty)
+  }
+
+  test("graft is installed only by its entry points, never inside a query") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val code = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        Files.readAllLines(f).asScala.map(_.trim)
+          .filterNot(l => l.startsWith("*") || l.startsWith("/"))
+          .map(root.relativize(f).toString -> _)
+      }
+    def filesWith(re: String) = code.filter(c => re.r.findFirstIn(c._2).isDefined)
+    // session function-registry writes and rule/strategy assignments
+    val writes = filesWith("""createOrReplaceTempFunction|registerFunction|""" +
+      """udf\.register|injectFunction|extra(Optimizations|Strategies)\s*=""")
+    assert(writes.map(_._1).toSet == Set("graft/plans/GraftPlanner.scala"),
+      writes.mkString("\n"))
+    val installs = filesWith("""\binstall\(""")
+    assert(installs.map(_._1).sorted == Seq("graft/SparkEntry.scala",
+      "graft/pipelines/Orchestrator.scala", "graft/plans/GraftPlanner.scala"),
+      installs.mkString("\n"))
   }
 
   test("bucketed co-located join plans without a shuffle exchange") {

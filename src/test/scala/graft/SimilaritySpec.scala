@@ -113,7 +113,6 @@ class SimilaritySpec extends AnyFunSuite {
       val cfg = SimilarityOps.lshSizing(n)
       val tables = SimilarityOps.lshTables(cfg.planes, tables = 2, dim = 16)
       val planeMatrix: Seq[Seq[Double]] = tables.flatten.map(_.toSeq)
-      graft.functions.GraftFunctions.register(spark)
       val vecs = spark.range(n).select(
         array((0 until 16).map(i => rand(seed = 100 + i) - 0.5): _*)
           .cast("array<double>").as("v"))

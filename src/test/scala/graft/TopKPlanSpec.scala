@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -7,9 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.GraftPlanner
 
 /** Plan-level and result-level coverage of the custom grouped-top-k
-  * ladder (logical node + rule + strategy + physical operator). The
-  * rule installs into an isolated `newSession()` so assertions about
-  * when it fires don't leak into other suites.
+  * ladder (logical node + rule + strategy + physical operator). Each test
+  * runs on its own `newSession()`, so conf changes don't leak into other
+  * suites. Results are compared with a [[reference]] session, where graft
+  * is installed but the rule is excluded, so the same query runs through
+  * plain WindowExec.
   */
 class TopKPlanSpec extends AnyFunSuite {
   lazy val base = SparkTestSession.spark
@@ -18,6 +21,19 @@ class TopKPlanSpec extends AnyFunSuite {
     val s = base.newSession()
     GraftPlanner.install(s)
     s
+  }
+
+  private def reference = {
+    val s = installed
+    s.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.WindowTopKRule")
+    s
+  }
+
+  /** A reference that ran TopKPerKeyExec would compare the operator with
+    * itself. */
+  private def assertWindowExec(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("TopKPerKey") && plan.contains("Window"), plan)
   }
 
   test("window row_number + rank filter plans as TopKPerKeyExec with exact results") {
@@ -173,14 +189,14 @@ class TopKPlanSpec extends AnyFunSuite {
       assert(q.queryExecution.executedPlan.toString.contains("TopKPerKey"))
       val fallbacksBefore = graft.plans.TopKPerKeyExec.fallbackCount.sum()
       val got = q.as[(Long, Long)].collect().toMap
-      // reference: same query through plain WindowExec on the base session
-      val refDf = base.range(10000).select(
+      val refDf = reference.range(10000).select(
         (col("id") % 5000).as("k"), col("id").as("id"),
         (col("id") * 7 % 101).as("v"))
       val refW = Window.partitionBy(col("k")).orderBy(col("v").desc, col("id").asc)
-      val expected = refDf.withColumn("rank", row_number().over(refW))
+      val ref = refDf.withColumn("rank", row_number().over(refW))
         .filter(col("rank") === 1).select(col("k"), col("id"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assertWindowExec(ref)
+      val expected = ref.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected && got.size == 5000)
       // the sort fallback actually fired (JVM-local counter: the
       // SQLMetric instance a test can collect is detached by AQE's
@@ -207,12 +223,14 @@ class TopKPlanSpec extends AnyFunSuite {
       assert(graft.plans.TopKPerKeyExec.spillBytes.sum() > spillBefore,
         "expected the fallback sorter to spill to disk")
       val refW = Window.partitionBy(col("k")).orderBy(col("v").desc, col("id").asc)
-      val expected = base.range(40000).select(
+      val ref = reference.range(40000).select(
           (col("id") % 8000).as("k"), col("id").as("id"),
           (col("id") * 13 % 997).as("v"))
         .withColumn("rank", row_number().over(refW)).filter(col("rank") <= 2)
         .select(col("k"), col("id"), col("rank"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assertWindowExec(ref)
+      val expected = ref.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(got == expected && got.size == 16000)
     } finally {
       s.conf.unset("spark.graft.topk.maxKeysInMemory")
@@ -230,7 +248,9 @@ class TopKPlanSpec extends AnyFunSuite {
     val withRule = knn(s)
     assert(withRule.queryExecution.executedPlan.toString.contains("TopKPerKey"))
     val got = withRule.collect().map(_.toSeq).toSet
-    val expected = knn(base).collect().map(_.toSeq).toSet
+    val ref = knn(reference)
+    assertWindowExec(ref)
+    val expected = ref.collect().map(_.toSeq).toSet
     assert(got == expected && got.size == 40)
   }
 

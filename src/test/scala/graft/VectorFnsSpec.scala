@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftFunctions, VectorFns}
+import graft.functions.VectorFns
 import graft.operators.SimilarityOps
 
 /** The matrix-form vector expressions must be drop-in equivalent to the
@@ -18,7 +18,6 @@ class VectorFnsSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("dot_product equals the interpreted higher-order fold bit-for-bit") {
-    GraftFunctions.register(spark)
     val df = graft.catalog.Tables.t(spark, sf, "embeddings")
       .select(col("embedding").cast("array<double>").as("a"),
         reverse(col("embedding")).cast("array<double>").as("b"))
@@ -32,7 +31,6 @@ class VectorFnsSpec extends AnyFunSuite {
   }
 
   test("hp_signatures equals the per-plane hyperplaneSignature column") {
-    GraftFunctions.register(spark)
     val tables = SimilarityOps.lshTables(planes = 5, tables = 4, dim = 64)
     val flat: Seq[Seq[Double]] = tables.flatten.map(_.toSeq)
     val df = graft.catalog.Tables.t(spark, sf, "embeddings")
@@ -46,7 +44,6 @@ class VectorFnsSpec extends AnyFunSuite {
   }
 
   test("nearest_cells ranks by dot desc with ties to the smaller index") {
-    GraftFunctions.register(spark)
     // centroids: index 1 and 2 tie exactly for the query (1,0); index 0 wins.
     val cents: Seq[Seq[Double]] =
       Seq(Seq(2.0, 0.0), Seq(1.0, 0.0), Seq(1.0, 0.0), Seq(0.0, 1.0))
@@ -57,7 +54,6 @@ class VectorFnsSpec extends AnyFunSuite {
   }
 
   test("nearest_cells handles nprobe larger than the centroid count") {
-    GraftFunctions.register(spark)
     val cents: Seq[Seq[Double]] = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
     val got = Seq(Tuple1(Array(0.0, 2.0))).toDF("v")
       .select(call_function("nearest_cells", $"v", typedLit(cents), lit(5)).as("c"))
